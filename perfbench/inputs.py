@@ -8,8 +8,7 @@ holds:
 - the stream copy: the transcripts cut into ``increments`` time-ordered
   files with increasing mtimes (the file source admits them in that order),
   the far-future sentinel riding in the last file so the final watermark
-  closes every real session; plus a warm-up source holding the first
-  increment alone;
+  closes every real session;
 - ``expected.json``: what the pandas oracle says the outputs must be;
 - ``pinned_<workload>.json``: the first checked outputs of each workload,
   which every later run on this seed must reproduce.
@@ -52,7 +51,6 @@ class Inputs:
     dir: str
     n_turns: int
     stream_dir: str
-    warmup_dir: str
     expected: dict
 
     def table(self, name: str) -> str:
@@ -101,7 +99,6 @@ def _write_stream(tr_utc: pd.DataFrame, schema: pa.Schema, out: str, increments:
     later slice of event time (an out-of-order increment would be dropped
     behind the watermark), each in one file, mtimes strictly increasing."""
     os.makedirs(os.path.join(out, "transcripts"))
-    os.makedirs(os.path.join(out, "warmup"))
     secs = tr_utc["ts"].astype("int64").to_numpy()
     cuts = np.quantile(secs, [i / increments for i in range(1, increments)])
     slot = np.searchsorted(cuts, secs, side="right")
@@ -117,8 +114,6 @@ def _write_stream(tr_utc: pd.DataFrame, schema: pa.Schema, out: str, increments:
         path = os.path.join(out, "transcripts", f"increment-{i:03d}.parquet")
         pq.write_table(pa.Table.from_pandas(part, schema=schema, preserve_index=False), path)
         os.utime(path, (base + i, base + i))
-        if i == 0:
-            shutil.copy2(path, os.path.join(out, "warmup", os.path.basename(path)))
 
 
 def _build(entry: str, base_convs: int, replicas: int, seed: int, increments: int) -> None:
@@ -154,7 +149,6 @@ def prepare(
         dir=entry,
         n_turns=expected["n_turns"],
         stream_dir=os.path.join(entry, "stream", "transcripts"),
-        warmup_dir=os.path.join(entry, "stream", "warmup"),
         expected=expected,
     )
 

@@ -120,6 +120,16 @@ def increment_p50(progress: list[dict]) -> float:
     return statistics.median(data_trigger_seconds(progress))
 
 
+def increment_cpu_p50(progress: list[dict], trigger_cpu: dict[int, float]) -> float:
+    """Median CPU seconds over the triggers that admitted input rows (a
+    trigger the poll missed is left out; its CPU time counts in the next)."""
+    return statistics.median(
+        trigger_cpu[p["batchId"]]
+        for p in progress
+        if p.get("numInputRows", 0) > 0 and p["batchId"] in trigger_cpu
+    )
+
+
 def progress_layers(progress: list[dict]) -> dict[str, float]:
     """Trigger, dedup-state and session-state layers, summed over triggers
     (state sizes are the largest any trigger reported)."""

@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload batch_full --seed 7 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload batch_full --seed 7 --seconds 30 --trace 0
 
-Run from the repository root. With ``--trace 0`` the run sets up (Spark
-session, seeded inputs, one untimed warm run), then repeats the workload
-untraced while another run still fits in ``--seconds`` (at least once) and
-reports the end-to-end metrics.
-With ``--trace 1`` the session also writes the Spark event log and, after
-the warm run, runs the workload plain, traced (every layer labelled) and
-plain again, and reports the per-layer metrics. Every run checks its outputs.
+Run from the repository root. The run sets up (Spark session, seeded
+inputs), then times one run of the workload: the first in its session, as
+each invocation of a daily job is. With ``--trace 0`` it reports the end-to-end
+metrics. With ``--trace 1`` the session also writes the Spark event log,
+the run labels every layer, and the benchmark reports the per-layer
+metrics. Every run checks its outputs; ``--seconds`` only caps how long a
+stream may take to drain beyond its usual time.
 Stdout ends with one JSON line: correct, attempted, failed, metrics.
 Everything the run writes stays under ``.perfbench_work/``.
 """
@@ -20,7 +20,6 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import subprocess
 import sys
 import threading
@@ -31,16 +30,19 @@ from concurrent.futures import ThreadPoolExecutor
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench_work")
 
-BASE_CONVS = 120
+BASE_CONVS = 60
 REPLICAS = 1
 INCREMENTS = 2  # stream_incremental: time-ordered files, one per trigger
 BATCH_SHUFFLE_PARTITIONS = 4
-RUN_LIMIT_S = 150.0  # no run starts that could end later than this
+STREAM_TIMEOUT_S = 120.0  # a stream that has not drained by then fails
 DRIVER_MEM = "2g"
 
+# CPU seconds, not wall seconds: the 4 vCPUs are shared with other guests
+# and lose 10-25% of their time to them in busy phases, which stretched the
+# wall time of the same run by up to 85% and its CPU time by up to 25%
 END_TO_END = {
-    "turns_per_s": "1/s",
-    "increment_p50_s": "s",
+    "turns_per_cpu_s": "1/s",
+    "increment_cpu_p50_s": "s",
     "setup_s": "s",
     "peak_rss_mb": "MB",
 }
@@ -83,7 +85,7 @@ def parse_args(argv=None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=10.0)
+    ap.add_argument("--seconds", type=float, default=30.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     return ap.parse_args(argv)
 
@@ -91,10 +93,7 @@ def parse_args(argv=None) -> argparse.Namespace:
 # ------------------------------------------------------------ process tree
 
 
-def _tree_pss_bytes(root: int) -> int:
-    """Proportional set size of ``root`` and all its descendants: pages
-    shared between processes (forked Python workers share most of theirs
-    with the daemon) count once in total instead of once per process."""
+def _children() -> dict[int, list[int]]:
     children: dict[int, list[int]] = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
@@ -105,10 +104,38 @@ def _tree_pss_bytes(root: int) -> int:
         except (OSError, IndexError, ValueError):
             continue
         children.setdefault(ppid, []).append(int(name))
-    total, todo = 0, [root]
+    return children
+
+
+def _tree(root: int) -> list[int]:
+    children, todo, pids = _children(), [root], []
     while todo:
         pid = todo.pop()
+        pids.append(pid)
         todo.extend(children.get(pid, ()))
+    return pids
+
+
+def tree_cpu_s(root: int) -> float:
+    """CPU seconds (user + system) used so far by ``root`` and its
+    descendants, including exited children their parents have reaped."""
+    ticks = 0
+    for pid in _tree(root):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+            ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+        except (OSError, IndexError, ValueError):
+            continue  # the process exited between listing and reading
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _tree_pss_bytes(root: int) -> int:
+    """Proportional set size of ``root`` and all its descendants: pages
+    shared between processes (forked Python workers share most of theirs
+    with the daemon) count once in total instead of once per process."""
+    total = 0
+    for pid in _tree(root):
         try:
             with open(f"/proc/{pid}/smaps_rollup") as f:
                 for line in f:
@@ -122,17 +149,20 @@ def _tree_pss_bytes(root: int) -> int:
 
 class PeakRss:
     """Samples the resident memory (PSS) of this process and all its
-    descendants -- the driver JVM and its Python workers -- while active."""
+    descendants -- the driver JVM and its Python workers -- while active.
+    ``cpu_s`` is the CPU time the sampling itself took."""
 
     def __init__(self, period_s: float = 0.5):
         self.period_s = period_s
         self.peak = 0
+        self.cpu_s = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
         while True:
             self.peak = max(self.peak, _tree_pss_bytes(os.getpid()))
+            self.cpu_s = time.thread_time()
             if self._stop.wait(self.period_s):
                 return
 
@@ -153,13 +183,21 @@ def start_spark(run_dir: str, cores: int, shuffle_partitions: int, event_dir: st
 
     # the JVM prefers this variable over spark.local.dir
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "spark_local")
+    heap = os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEM)
     conf = {
         # the bench input is one parquet file per table: 16m splits keep the
         # scan parallel (bench.py's setting)
         "spark.sql.files.maxPartitionBytes": "16m",
         "spark.local.dir": os.path.join(run_dir, "spark_local"),
         "spark.sql.warehouse.dir": os.path.join(run_dir, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.environ['TMPDIR']}",
+        # C1 JIT only: a run is one short-lived JVM, in which C2 compiles
+        # burn ~40 CPU-seconds on 4 cores and never pay off (with C2 the
+        # timed batch run took as long, at ~105 CPU-s instead of ~63 and with
+        # twice the spread). The heap starts at its full size, so how far it
+        # grows is not a per-run decision of the collector.
+        "spark.driver.extraJavaOptions": (
+            f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:TieredStopAtLevel=1 -Xms{heap}"
+        ),
         "spark.ui.showConsoleProgress": "false",
     }
     if event_dir:
@@ -202,7 +240,7 @@ def stop_spark(spark) -> None:
 # ---------------------------------------------------------------- metrics
 
 
-def batch_layers(plain_wall, traced, prefix_walls, stages, inp) -> dict[str, float]:
+def batch_layers(traced, prefix_walls, stages, inp) -> dict[str, float]:
     from perfbench import layers
 
     out: dict[str, float] = {"staged_write.wall_s": traced.layers["staged_write.wall_s"]}
@@ -227,12 +265,15 @@ def batch_layers(plain_wall, traced, prefix_walls, stages, inp) -> dict[str, flo
         traced.outputs["turn_stats"][0] / staged_rows if staged_rows else 0.0
     )
     span_sum = traced.layers["staged_write.wall_s"] + traced.layers["fanout.wall_s"]
-    out["trace.layer_sum_ratio"] = span_sum / plain_wall
-    out["trace.overhead_ratio"] = traced.wall_s / plain_wall
+    out["trace.layer_sum_ratio"] = span_sum / traced.wall_s
+    # the labelled projection prefix against the mean of its two unlabelled
+    # neighbours
+    plain = prefix_walls["plain"]
+    out["trace.overhead_ratio"] = prefix_walls["projection"] / (sum(plain) / len(plain))
     return out
 
 
-def stream_layers(plain_wall, traced, stages) -> dict[str, float]:
+def stream_layers(traced, stages) -> dict[str, float]:
     from perfbench import layers
 
     progress = traced.layers["progress"]
@@ -242,28 +283,31 @@ def stream_layers(plain_wall, traced, stages) -> dict[str, float]:
     trigger_sum = sum(
         float((p.get("durationMs") or {}).get("triggerExecution", 0)) for p in progress
     ) / 1000.0
-    out["trace.layer_sum_ratio"] = trigger_sum / plain_wall
-    out["trace.overhead_ratio"] = traced.wall_s / plain_wall
+    out["trace.layer_sum_ratio"] = trigger_sum / traced.wall_s
     return out
 
 
-def end_to_end(workload: str, its, inp, setup_s: float, peak_rss: int) -> dict[str, float]:
+def end_to_end(workload: str, it, inp, setup_s: float, peak_rss: int) -> dict[str, float]:
     from perfbench import layers
 
-    walls = [it.wall_s for it in its]
     if workload == "batch_full":
-        increment = statistics.median(walls)
+        increment = it.cpu_s  # a full reprocess is one increment
     else:
-        increment = statistics.median(layers.increment_p50(it.layers["progress"]) for it in its)
+        increment = layers.increment_cpu_p50(it.layers["progress"], it.layers["trigger_cpu_s"])
     return {
-        "turns_per_s": statistics.median(inp.n_turns / w for w in walls),
-        "increment_p50_s": increment,
+        "turns_per_cpu_s": inp.n_turns / it.cpu_s,
+        "increment_cpu_p50_s": increment,
         "setup_s": setup_s,
         "peak_rss_mb": peak_rss / (1024.0 * 1024.0),
     }
 
 
 # ------------------------------------------------------------------- main
+
+
+def _timed(fn, *args):
+    t = time.perf_counter()
+    return fn(*args), time.perf_counter() - t
 
 
 def run(args, run_dir: str) -> int:
@@ -274,37 +318,33 @@ def run(args, run_dir: str) -> int:
     batch = args.workload == "batch_full"
     check = workloads.check_batch if batch else workloads.check_stream
     t_run = time.perf_counter()
-    spark = inp = None
+    spark = inp = it = None
+    attempted = failed = 0
+    phases: dict[str, float] = {}
 
-    def once(label: bool = False, warmup: bool = False):
-        if batch:
-            return workloads.batch_iteration(spark, inp, run_dir, label)
-        # the stream warms up on its first increment alone: every code path
-        # (admission, dedup and session state, eviction, the sinks) runs in
-        # two triggers instead of INCREMENTS + 1
-        source = inp.warmup_dir if warmup else inp.stream_dir
-        left = RUN_LIMIT_S + 20 - (time.perf_counter() - t_run)
-        return workloads.stream_iteration(spark, source, inp, run_dir, max(left, 10.0))
-
-    its, attempted, failed, pinned = [], 0, 0, None
-
-    def checked(it):
-        nonlocal pinned
-        check(it, inp, pinned)
-        if pinned is None:
-            pinned = inputs.save_pin(inp, args.workload, it.outputs)
-        return it
+    def cpu() -> float:
+        return tree_cpu_s(os.getpid())
 
     def attempt(label: bool = False):
         nonlocal attempted, failed
         attempted += 1
         try:
-            it = checked(once(label))
-        except Exception:  # a failed run is counted and the benchmark goes on
+            cpu0 = cpu()
+            if batch:
+                it = workloads.batch_iteration(spark, inp, run_dir, label)
+            else:
+                it = workloads.stream_iteration(
+                    spark, inp.stream_dir, inp, run_dir, STREAM_TIMEOUT_S + args.seconds, cpu
+                )
+            it.cpu_s = cpu() - cpu0
+            pinned = inputs.load_pin(inp, args.workload)
+            check(it, inp, pinned)
+            if pinned is None:
+                inputs.save_pin(inp, args.workload, it.outputs)
+        except Exception:  # a failed run is counted and reported
             failed += 1
             traceback.print_exc()
             return None
-        its.append(it)
         return it
 
     event_dir = os.path.join(run_dir, "events") if args.trace else None
@@ -313,67 +353,55 @@ def run(args, run_dir: str) -> int:
         with ThreadPoolExecutor(1) as pool:
             # the inputs build in Python while the JVM starts
             pending = pool.submit(
-                inputs.prepare, os.path.join(WORK, "inputs"), BASE_CONVS, REPLICAS,
-                args.seed, INCREMENTS,
+                _timed, inputs.prepare, os.path.join(WORK, "inputs"), BASE_CONVS,
+                REPLICAS, args.seed, INCREMENTS,
             )
-            spark = start_spark(run_dir, cores, parts, event_dir)
-            inp = pending.result()
-        pinned = inputs.load_pin(inp, args.workload)
-        warm = once(warmup=True)
-        if batch:  # the stream warm-up reads part of the input only
-            checked(warm)
-        setup_s = time.perf_counter() - t_run
+            spark, phases["session_s"] = _timed(start_spark, run_dir, cores, parts, event_dir)
+            inp, phases["inputs_s"] = pending.result()
+        # CPU seconds of the whole process tree so far: interpreter start,
+        # imports, the JVM start and the input build
+        setup_s = cpu()
+        phases["setup_wall_s"] = time.perf_counter() - t_run
         if args.trace:
-            # plain, traced, plain: the JVM is still speeding up run over
-            # run, so the traced run is compared with the mean of its two
-            # plain neighbours
-            runs = [attempt(), attempt(label=True), attempt()]
-            plain_walls = [runs[0].wall_s, runs[2].wall_s] if all(runs) else []
-            traced = runs[1]
-            prefix_walls = workloads.batch_prefix_spans(spark, inp) if batch and traced else {}
+            it = attempt(label=True)
+            prefix_walls = workloads.batch_prefix_spans(spark, inp) if batch and it else {}
         else:
-            # repeat while one more run, as long as the last, still fits in
-            # --seconds (and in the run limit): the count stays the same
-            # from run to run instead of flipping where a run's wall
-            # crosses the budget
-            t_loop = time.perf_counter()
             with PeakRss() as rss:
-                while True:
-                    t_it = time.perf_counter()
-                    attempt()
-                    now = time.perf_counter()
-                    last = now - t_it
-                    if now - t_loop + last > args.seconds or now - t_run + last > RUN_LIMIT_S:
-                        break
+                it = attempt()
+            if it is not None:
+                it.cpu_s -= rss.cpu_s
     finally:
         if spark is not None:
-            stop_spark(spark)
+            _, phases["stop_s"] = _timed(stop_spark, spark)
 
+    if it is None:
+        print("perfbench: the timed run failed", file=sys.stderr)
+        return 1
     if args.trace:
-        if not plain_walls:
-            print("perfbench: a traced or plain run failed", file=sys.stderr)
-            return 1
-        plain_wall = statistics.mean(plain_walls)
-        print(f"# plain_wall_s={plain_walls[0]:.3f},{plain_walls[1]:.3f} "
-              f"traced_wall_s={traced.wall_s:.3f}")
         # read after the session stopped: the event log is complete and closed
         stages = layers.stage_metrics(layers.read_events(event_dir))
         metrics = dict.fromkeys(PER_LAYER, 0.0)
         if batch:
-            metrics.update(batch_layers(plain_wall, traced, prefix_walls, stages, inp))
+            metrics.update(batch_layers(it, prefix_walls, stages, inp))
         else:
-            metrics.update(stream_layers(plain_wall, traced, stages))
+            metrics.update(stream_layers(it, stages))
         units = PER_LAYER
     else:
-        if not its:
-            print("perfbench: every timed run failed", file=sys.stderr)
-            return 1
-        metrics = end_to_end(args.workload, its, inp, setup_s, rss.peak)
+        metrics = end_to_end(args.workload, it, inp, setup_s, rss.peak)
         units = END_TO_END
 
+    # wall-clock figures, for reading alongside the CPU-based metrics
+    wall = {"run_s": it.wall_s, "turns_per_s": inp.n_turns / it.wall_s, "cpu_s": it.cpu_s}
+    if not batch:
+        wall["increment_p50_s"] = layers.increment_p50(it.layers["progress"])
+    triggers = "" if batch else " data_triggers_s=" + ",".join(
+        f"{t:.2f}" for t in layers.data_trigger_seconds(it.layers["progress"])
+    )
     print(f"# workload={args.workload} seed={args.seed} trace={args.trace} "
           f"turns={inp.n_turns} nproc={cores} load1_start={load_start:.2f} "
-          f"load1_end={os.getloadavg()[0]:.2f}")
+          f"load1_end={os.getloadavg()[0]:.2f} "
+          + " ".join(f"{k}={v:.2f}" for k, v in {**phases, **wall}.items())
+          + triggers)
     print(f"# attempted={attempted} failed={failed} fail_ratio={failed / attempted:.4f}")
     for name in sorted(metrics):
         print(f"{name:<32} {metrics[name]:>16.6f} {units[name]}")
@@ -394,7 +422,6 @@ def main(argv=None) -> int:
     # before pyspark starts: the package zip, py4j's connection file, the
     # JVM and its Python workers all take their scratch space from here
     os.environ["TMPDIR"] = tmp
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEM)
     sys.path.insert(0, ROOT)
     try:
         try:

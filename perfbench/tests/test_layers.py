@@ -49,8 +49,8 @@ def test_event_log_spans_by_group_and_window(tmp_path):
     assert layers.span_totals(stages, layers.in_group("nothing"))["tasks"] == 0.0
 
 
-def _trigger(rows, ms, ops=()):
-    return {"numInputRows": rows,
+def _trigger(rows, ms, ops=(), batch_id=0):
+    return {"batchId": batch_id, "numInputRows": rows,
             "durationMs": {"triggerExecution": ms, "addBatch": ms - 100,
                            "queryPlanning": 20, "walCommit": 10, "commitOffsets": 5},
             "stateOperators": list(ops)}
@@ -65,11 +65,11 @@ def _op(name, total, updated, mem):
 def test_progress_layers_sum_triggers_and_peak_state():
     progress = [
         _trigger(100, 4000, [_op("dedupeWithinWatermark", 90, 90, 1024 * 1024),
-                             _op("sessionWindowStateStoreSaveExec", 10, 10, 0)]),
+                             _op("sessionWindowStateStoreSaveExec", 10, 10, 0)], 0),
         _trigger(60, 2000, [_op("dedupeWithinWatermark", 140, 50, 3 * 1024 * 1024),
-                            _op("sessionWindowStateStoreSaveExec", 4, 6, 0)]),
+                            _op("sessionWindowStateStoreSaveExec", 4, 6, 0)], 1),
         _trigger(0, 1000, [_op("dedupeWithinWatermark", 20, 0, 0),
-                           _op("sessionWindowStateStoreSaveExec", 0, 0, 0)]),
+                           _op("sessionWindowStateStoreSaveExec", 0, 0, 0)], 2),
     ]
     got = layers.progress_layers(progress)
     assert got["trigger.count"] == 3
@@ -86,6 +86,9 @@ def test_progress_layers_sum_triggers_and_peak_state():
     # only triggers that admitted rows count as increments
     assert layers.data_trigger_seconds(progress) == [4.0, 2.0]
     assert layers.increment_p50(progress) == 3.0
+    # CPU per increment: data triggers only; one the poll missed is left out
+    assert layers.increment_cpu_p50(progress, {0: 9.0, 1: 5.0, 2: 1.0}) == 7.0
+    assert layers.increment_cpu_p50(progress, {1: 5.0, 2: 1.0}) == 5.0
 
 
 def test_benchmark_json_names_every_metric_with_its_unit():
@@ -130,7 +133,7 @@ def test_tiny_batch_spans_from_event_log(tiny):
     workloads.check_batch(it, inp, None)
     workloads.check_batch(workloads.batch_iteration(spark, inp, work), inp, it.outputs)
     prefix = workloads.batch_prefix_spans(spark, inp)
-    assert set(prefix) == {"diaries", "lifecycle", "projection"}
+    assert set(prefix) == {"diaries", "lifecycle", "projection", "plain"}
     stages = layers.stage_metrics(layers.read_events(events))
     for group in ("staged_write", "out.accepted", "out.rejected", "out.issues",
                   "out.turn_stats", "diaries", "lifecycle", "projection"):
@@ -144,9 +147,12 @@ def test_tiny_stream_progress_and_checks(tiny):
     from perfbench import workloads
 
     spark, inp, work, _ = tiny
-    it = workloads.stream_iteration(spark, inp.stream_dir, inp, work, timeout_s=300)
+    it = workloads.stream_iteration(
+        spark, inp.stream_dir, inp, work, timeout_s=300, cpu=lambda: run.tree_cpu_s(os.getpid())
+    )
     workloads.check_stream(it, inp, None)
     progress = it.layers["progress"]
+    assert layers.increment_cpu_p50(progress, it.layers["trigger_cpu_s"]) > 0
     got = layers.progress_layers(progress)
     assert got["trigger.count"] >= 3  # two increments, then the closing trigger
     assert len(layers.data_trigger_seconds(progress)) == 2

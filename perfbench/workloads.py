@@ -1,8 +1,9 @@
 """The benchmark's workloads, driven only through the engine's public calls.
 
-``batch_full``: one ``pipeline.run_batch_staged`` call (its only action is
-the staged turn-stats write), then its four outputs materialize concurrently
-on a pool of four threads. Each output is materialized by an
+``batch_full``: the three input tables are read, one
+``pipeline.run_batch_staged`` call runs (its only action is the staged
+turn-stats write), then its four outputs materialize concurrently on a pool
+of four threads. Each output is materialized by an
 order-independent digest over all of its columns -- the same full-column
 computation a noop write forces, with a one-row result that the output
 check compares.
@@ -23,6 +24,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -44,6 +46,7 @@ from .inputs import Inputs
 CFG = PipelineConfig()
 OUTPUTS = ("accepted", "rejected", "issues", "turn_stats")
 SINKS = ("audio_qc", "accepted", "rejected")
+POLL_S = 0.1
 
 
 class CheckFailed(Exception):
@@ -54,6 +57,7 @@ class CheckFailed(Exception):
 class Iteration:
     wall_s: float
     outputs: dict  # output name -> comparable summary
+    cpu_s: float = 0.0  # CPU seconds of the process tree during the run
     layers: dict = field(default_factory=dict)  # stream progress, traced span walls
 
 
@@ -94,18 +98,26 @@ def digest(df: DataFrame) -> tuple[int, str]:
     return int(row["n"]), str(row["h"])
 
 
+def _clear_group(sc) -> None:
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
 def batch_iteration(
     spark: SparkSession, inp: Inputs, work: str, label: bool = False
 ) -> Iteration:
     sc = spark.sparkContext
     spark.catalog.clearCache()
     staging = fresh_dir(work, "staging")
-    transcripts, tool_calls, conv_meta = load_inputs(spark, inp.dir)
     try:
         t0 = time.perf_counter()
+        transcripts, tool_calls, conv_meta = load_inputs(spark, inp.dir)
+        t_read = time.perf_counter()
         if label:
             sc.setJobGroup("staged_write", "staged_write")
         out = run_batch_staged(spark, transcripts, tool_calls, conv_meta, staging, CFG)
+        if label:
+            _clear_group(sc)
         t1 = time.perf_counter()
         frames = {name: getattr(out, name) for name in OUTPUTS}
 
@@ -121,13 +133,15 @@ def batch_iteration(
         it = Iteration(wall_s=t2 - t0, outputs={k: v[0] for k, v in done.items()})
         if label:
             it.layers = {
-                "staged_write.wall_s": t1 - t0,
+                "staged_write.wall_s": t1 - t_read,
                 "fanout.wall_s": t2 - t1,
                 "staged_rows": parquet_rows(staging),
                 **{f"out.{k}.done_s": v[1] for k, v in done.items()},
             }
         return it
     finally:
+        if label:
+            _clear_group(sc)
         spark.catalog.clearCache()
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -141,7 +155,9 @@ def _noop(df: DataFrame) -> float:
 def batch_prefix_spans(spark: SparkSession, inp: Inputs) -> dict[str, float]:
     """Walls of three cumulative operator prefixes, each materialized to a
     noop sink under its own job group; a layer is the difference between
-    its prefix and the one before it."""
+    its prefix and the one before it. The whole prefix also runs unlabelled:
+    once untimed (it compiles the prefix's generated code), then once before
+    and once after the labelled runs (``plain``): what the labels cost."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     transcripts, tool_calls, conv_meta = load_inputs(spark, inp.dir)
@@ -155,10 +171,15 @@ def batch_prefix_spans(spark: SparkSession, inp: Inputs) -> dict[str, float]:
             transcript_ops.gap_stats(transcript_ops.attach_diaries(sessioned, returned))
         )
     )
-    walls = {}
-    for name, df in (("diaries", qc), ("lifecycle", returned), ("projection", projected)):
-        sc.setJobGroup(name, name)
-        walls[name] = _noop(df)
+    _noop(projected)
+    walls = {"plain": [_noop(projected)]}
+    try:
+        for name, df in (("diaries", qc), ("lifecycle", returned), ("projection", projected)):
+            sc.setJobGroup(name, name)
+            walls[name] = _noop(df)
+    finally:
+        _clear_group(sc)
+    walls["plain"].append(_noop(projected))
     return walls
 
 
@@ -183,19 +204,43 @@ def _progress(q) -> list[dict]:
     return [json.loads(p.json) if hasattr(p, "json") else dict(p) for p in q.recentProgress]
 
 
+def _batch_id(p) -> int:
+    return p.batchId if hasattr(p, "batchId") else p["batchId"]
+
+
 def stream_iteration(
-    spark: SparkSession, source_dir: str, inp: Inputs, work: str, timeout_s: float
+    spark: SparkSession,
+    source_dir: str,
+    inp: Inputs,
+    work: str,
+    timeout_s: float,
+    cpu: Callable[[], float] | None = None,
 ) -> Iteration:
+    """One drain from a fresh checkpoint. With ``cpu`` (a clock of CPU
+    seconds), ``layers["trigger_cpu_s"]`` maps each trigger's batch id to
+    the CPU time read between its completion and the previous one's (the
+    query start for the first), polled every ``POLL_S``."""
     out_root = fresh_dir(work, "stream_out")
-    conv_meta = spark.read.parquet(inp.table("conv_meta"))
     try:
         start_ms = time.time() * 1000.0
         t0 = time.perf_counter()
+        last_cpu = cpu() if cpu else 0.0
+        trigger_cpu: dict[int, float] = {}
+        conv_meta = spark.read.parquet(inp.table("conv_meta"))
         q, _ = start_session_qc_query(
             spark, source_dir, out_root, conv_meta, CFG, max_files_per_trigger=1
         )
         try:
-            finished = q.awaitTermination(timeout_s)
+            seen = None
+            while True:
+                finished = q.awaitTermination(POLL_S)
+                p = q.lastProgress
+                if cpu and p is not None and _batch_id(p) != seen:
+                    seen = _batch_id(p)
+                    now = cpu()
+                    trigger_cpu[seen], last_cpu = now - last_cpu, now
+                if finished or time.perf_counter() - t0 > timeout_s:
+                    break
         finally:
             if q.isActive:
                 q.stop()
@@ -204,7 +249,11 @@ def stream_iteration(
             raise TimeoutError(f"stream did not drain within {timeout_s:.0f}s")
         progress = _progress(q)
         it = Iteration(wall_s=wall, outputs=stream_outputs(out_root))
-        it.layers = {"progress": progress, "window_ms": (start_ms, time.time() * 1000.0)}
+        it.layers = {
+            "progress": progress,
+            "window_ms": (start_ms, time.time() * 1000.0),
+            "trigger_cpu_s": trigger_cpu,
+        }
         return it
     finally:
         shutil.rmtree(out_root, ignore_errors=True)
