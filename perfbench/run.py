@@ -391,18 +391,20 @@ def run(args, run_dir: str) -> int:
         units = END_TO_END
 
     # wall-clock figures, for reading alongside the CPU-based metrics
-    wall = {"run_s": it.wall_s, "turns_per_s": inp.n_turns / it.wall_s, "cpu_s": it.cpu_s}
+    wall = {"run_s": (it.wall_s, "s"), "turns_per_s": (inp.n_turns / it.wall_s, "1/s")}
     if not batch:
-        wall["increment_p50_s"] = layers.increment_p50(it.layers["progress"])
+        wall["increment_p50_s"] = (layers.increment_p50(it.layers["progress"]), "s")
     triggers = "" if batch else " data_triggers_s=" + ",".join(
         f"{t:.2f}" for t in layers.data_trigger_seconds(it.layers["progress"])
     )
     print(f"# workload={args.workload} seed={args.seed} trace={args.trace} "
           f"turns={inp.n_turns} nproc={cores} load1_start={load_start:.2f} "
           f"load1_end={os.getloadavg()[0]:.2f} "
-          + " ".join(f"{k}={v:.2f}" for k, v in {**phases, **wall}.items())
+          + " ".join(f"{k}={v:.2f}" for k, v in phases.items())
           + triggers)
     print(f"# attempted={attempted} failed={failed} fail_ratio={failed / attempted:.4f}")
+    for name, (v, unit) in wall.items():
+        print(f"# {name:<30} {v:>16.6f} {unit} (wall clock)")
     for name in sorted(metrics):
         print(f"{name:<32} {metrics[name]:>16.6f} {units[name]}")
     print(json.dumps({
