@@ -13,14 +13,3 @@ TranscribeMe exchange -> tool_calls stream, study day -> tumbling 24h window).
 """
 
 __version__ = "0.1.0"
-
-# transformWithStateInPandas workers need google.protobuf for the state
-# protocol; fall back to the vendored pure-Python runtime when the container
-# ships none (no-op when a real protobuf is installed). Import-time so the
-# shim is active wherever the package lands — driver or shipped-zip worker.
-from .protobuf_shim import ensure_protobuf as _ensure_protobuf
-
-try:
-    PROTOBUF_RUNTIME = _ensure_protobuf()
-except Exception:  # pragma: no cover - never block non-TWS use of the package
-    PROTOBUF_RUNTIME = "unavailable"

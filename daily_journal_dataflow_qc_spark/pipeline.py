@@ -75,7 +75,10 @@ def run_batch(
     # heavy staged/cached write's critical path and was A/B-measured to
     # cost more than the sub-second per-consumer re-aggregations it saves
     # (which overlap inside the concurrent output jobs) — the same verdict
-    # as the rejected requests/returns persist.
+    # as the rejected requests/returns persist. The verdict holds only while
+    # the output jobs overlap: the rollup is recomputed (full tool_calls
+    # scan + shuffle) once per consuming output job, so a caller that
+    # materializes the outputs one after another should persist it.
     lifecycle = transcript_ops.tool_call_lifecycle(tool_calls)
     returned = transcript_ops.returned_accepted_diaries(
         qc, None, None, lifecycle=lifecycle
@@ -277,9 +280,6 @@ def run_batch_from_dir(
     spark: SparkSession,
     data_dir: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    persist_intermediates: bool = False,
 ) -> PipelineOutputs:
     transcripts, tool_calls, conv_meta = load_inputs(spark, data_dir)
-    return run_batch(
-        transcripts, tool_calls, conv_meta, cfg, persist_intermediates=persist_intermediates
-    )
+    return run_batch(transcripts, tool_calls, conv_meta, cfg)

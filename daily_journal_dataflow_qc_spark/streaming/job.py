@@ -17,9 +17,8 @@ Topology (single continuous job, checkpointed, exactly-once sinks):
            source slice covering just-closed sessions
 
     transcripts stream -> applyInPandasWithState(conv_id)                  [keyed validator]
-         monotone turn_idx high-watermark + exact missing-gap set (same
-         state shape as the TWS backend's dedup); emits duplicate /
-         out-of-order flag rows (O(gaps) state per conv)
+         monotone turn_idx high-watermark + exact missing-gap set; emits
+         duplicate / out-of-order flag rows (O(gaps) state per conv)
 
     tool_calls stream (requests) x (returns): watermarked left-outer
          stream-stream join with a 14-day event-time range; requests that
@@ -303,14 +302,9 @@ def start_session_qc_query(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     max_files_per_trigger: int | None = None,
     tool_calls_dir: str | None = None,
-    backend: str = "session_window",
     trigger_seconds: float | None = None,
 ):
     """Launch the diary-QC streaming query (availableNow trigger).
-
-    ``backend``: 'session_window' (declarative aggregate, default) or 'tws'
-    (transformWithStateInPandas processor with explicit ValueState/ListState
-    — see streaming/tws.py). Both feed the same compile_batch stage.
 
     When ``tool_calls_dir`` is given, transcript-side outputs (transcript QC
     + per-turn stats) are gated on the diary's tool-call round trip having
@@ -334,12 +328,7 @@ def start_session_qc_query(
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         turns = reader.parquet(input_dir)
 
-    if backend == "tws":
-        from .tws import session_qc_aggregate_tws
-
-        diary_stream = session_qc_aggregate_tws(turn_projection(turns), cfg)
-    else:
-        diary_stream = session_qc_aggregate(turn_projection(turns), cfg)
+    diary_stream = session_qc_aggregate(turn_projection(turns), cfg)
 
     sinks = {
         "audio_qc": IdempotentBatchSink(output_root, "audio_qc"),
@@ -398,12 +387,9 @@ def start_session_qc_query(
             # persisted qc frame: run their write actions CONCURRENTLY.
             # Per-trigger wall at small batch sizes is dominated by a fixed
             # per-JOB term (planning + scheduling + sink commit), so
-            # overlapping the jobs shaves the serial floor the streaming
-            # strong-scaling decomposition identified; the sinks are
+            # overlapping the jobs shaves that serial floor; the sinks are
             # separate IdempotentBatchSink instances (independent manifest
             # files), so concurrent commits stay exactly-once.
-            # DJDQ_PARALLEL_SINKS=0 serializes (bench A/B control).
-            parallel = os.environ.get("DJDQ_PARALLEL_SINKS", "1") != "0"
             accepted = qc.filter(F.col("audio_approved_bool") == 1)
             rejected = qc.filter(F.col("audio_approved_bool") != 1).select(
                 "conv_id",
@@ -419,14 +405,10 @@ def start_session_qc_query(
                 (sinks["accepted"].write, accepted.drop("_ts_wc")),
                 (sinks["rejected"].write, rejected),
             ]
-            if parallel:
-                with ThreadPoolExecutor(3) as pool:
-                    futures = [pool.submit(fn, df, batch_id) for fn, df in jobs]
-                    for f in futures:
-                        f.result()
-            else:
-                for fn, df in jobs:
-                    fn(df, batch_id)
+            with ThreadPoolExecutor(3) as pool:
+                futures = [pool.submit(fn, df, batch_id) for fn, df in jobs]
+                for f in futures:
+                    f.result()
             if tool_calls_dir:
                 # returned gating: round trip complete as of this batch.
                 # INCREMENTAL: only tool-call files not yet ingested are
@@ -502,16 +484,10 @@ def start_session_qc_query(
                     (sinks["transcript_qc"].write, clean.select(*tqc_cols)),
                     (sinks["disfluencies"].write, disf),
                 ]
-                if parallel:
-                    with ThreadPoolExecutor(3) as pool:
-                        futures = [
-                            pool.submit(fn, df, batch_id) for fn, df in tjobs
-                        ]
-                        for f in futures:
-                            f.result()
-                else:
-                    for fn, df in tjobs:
-                        fn(df, batch_id)
+                with ThreadPoolExecutor(3) as pool:
+                    futures = [pool.submit(fn, df, batch_id) for fn, df in tjobs]
+                    for f in futures:
+                        f.result()
                 # per-turn stats: REBUILT from a filtered re-read of the
                 # source slice covering exactly the clean closed diaries —
                 # per-turn payloads (especially text) never transit streaming

@@ -10,12 +10,9 @@ turn-idx sets at 10^12-turn scale):
   rare and the set stays tiny; a corrupt index jump is refused via
   MAX_GAP_RUN rather than materialized).
 
-This is the same exact-dedup state shape as the transformWithState backend
-(tws.py ``_dedup_batch``): round 3 replaced the TWS count-min sketch with
-it because the sketch saturates on long conversations, and the same
-critique applied to this validator's DUPLICATE/OUT_OF_ORDER labels — a
-saturated sketch would mislabel legitimate late arrivals as duplicates on
-10^9-turn conversations. Labels are now exact at any length.
+The set is exact rather than a count-min sketch: a sketch saturates on long
+conversations and would mislabel legitimate late arrivals as duplicates on
+10^9-turn conversations. Labels are exact at any length.
 
 Per arriving turn (processed in (ts, turn_idx) order within the batch):
 
@@ -42,8 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# largest tolerated single-advance of the turn-idx watermark (shared
-# contract with tws.MAX_GAP_RUN): beyond this a gap run is corrupt data
+# largest tolerated single-advance of the turn-idx watermark: beyond this
+# a gap run is corrupt data
 MAX_GAP_RUN = 1_000_000
 
 FLAG_SCHEMA = T.StructType(

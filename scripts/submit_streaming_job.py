@@ -12,7 +12,7 @@ Cluster deployment (the north-rule run mode):
         --output <output-root> \\
         --conv-meta <conv_meta parquet> \\
         [--tool-calls <tool-call dir>] \\
-        [--trigger 60] [--backend session_window|tws] \\
+        [--trigger 60] \\
         [--with-validator] [--with-pending]
 
 Under spark-submit the session comes from the submit-provided context
@@ -64,8 +64,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--conv-meta", help="conv_meta parquet path")
     ap.add_argument("--tool-calls", default=None,
                     help="tool-call stream dir (enables returned-gating + transcript sinks)")
-    ap.add_argument("--backend", choices=["session_window", "tws"],
-                    default="session_window")
     ap.add_argument("--trigger", type=float, default=None,
                     help="processing-time trigger seconds; omit for availableNow")
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
@@ -119,7 +117,6 @@ def main(argv: list[str] | None = None) -> int:
         conv_meta,
         max_files_per_trigger=args.max_files_per_trigger,
         tool_calls_dir=args.tool_calls,
-        backend=args.backend,
         trigger_seconds=args.trigger,
     )
     queries.append(q)

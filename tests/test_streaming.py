@@ -206,6 +206,24 @@ def test_stateful_validator_flags(spark):
     assert len(flags[flags.conv_id == "c2"]) == 0
 
 
+class _FakeGroupState:
+    """In-memory stand-in for the GroupState handle validate_conv reads."""
+
+    def __init__(self):
+        self._v = None
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+
 def test_validator_labels_exact_property():
     """Property (hypothesis): across arbitrary batched delivery orders, the
     validator's duplicate / out_of_order / silent-advance labels equal the
@@ -217,21 +235,6 @@ def test_validator_labels_exact_property():
 
     from daily_journal_dataflow_qc_spark.streaming.state import validate_conv
 
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
     @settings(max_examples=200, deadline=None)
     @given(
         st.lists(
@@ -241,7 +244,7 @@ def test_validator_labels_exact_property():
         )
     )
     def run(batches):
-        state = FakeGroupState()
+        state = _FakeGroupState()
         seen: set[int] = set()
         hwm = -1
         for b in batches:
@@ -276,6 +279,26 @@ def test_validator_labels_exact_property():
             assert got == want, (b, got, want)
 
     run()
+
+
+def test_validator_rejects_corrupt_index_jump():
+    """The O(gaps) state contract is guarded: a turn_idx jump beyond
+    MAX_GAP_RUN is corrupt data and fails loudly instead of materializing
+    an index-jump-sized gap set."""
+    from daily_journal_dataflow_qc_spark.streaming.state import (
+        MAX_GAP_RUN,
+        validate_conv,
+    )
+
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["c", "c"],
+            "turn_idx": pd.array([1, MAX_GAP_RUN + 10], dtype="int64"),
+            "ts": pd.to_datetime(["2023-03-01 10:00:00", "2023-03-01 10:00:01"]),
+        }
+    )
+    with pytest.raises(ValueError, match="MAX_GAP_RUN"):
+        list(validate_conv(("c",), iter([pdf]), _FakeGroupState()))
 
 
 def test_streaming_transcript_side_matches_batch(spark, stream_input, synth_dir, cfg):
@@ -347,375 +370,6 @@ def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
             assert names <= {"ts", "word_count"}, (
                 f"collected array {field.name!r} carries per-turn payload: {names}"
             )
-
-
-def _protobuf_available() -> bool:
-    """transformWithStateInPandas spawns python runners that require
-    google.protobuf. The package's vendored pure-Python runtime
-    (daily_journal_dataflow_qc_spark/_vendor) satisfies this when the
-    container ships no protobuf, so this gate normally passes now; it
-    remains as a guard for environments where even the shim cannot load."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = tuple(v)
-
-    def clear(self):
-        self.v = None
-
-
-class FakeListState(FakeValueState):
-    def __init__(self):
-        self.items = []
-
-    def exists(self):
-        return bool(self.items)
-
-    def get(self):
-        return iter(list(self.items))
-
-    def appendValue(self, v):
-        self.items.append(tuple(v))
-
-    def appendList(self, vs):
-        self.items.extend(tuple(v) for v in vs)
-
-    def put(self, vs):
-        self.items = [tuple(v) for v in vs]
-
-    def clear(self):
-        self.items = []
-
-
-class FakeMapState:
-    def __init__(self):
-        self.m = {}
-
-    def exists(self):
-        return bool(self.m)
-
-    def containsKey(self, k):
-        return tuple(k) in self.m
-
-    def getValue(self, k):
-        return self.m.get(tuple(k))
-
-    def updateValue(self, k, v):
-        self.m[tuple(k)] = tuple(v)
-
-    def removeKey(self, k):
-        self.m.pop(tuple(k), None)
-
-    def keys(self):
-        return iter(list(self.m.keys()))
-
-    def clear(self):
-        self.m = {}
-
-
-class FakeHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, FakeValueState())
-
-    def getListState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, FakeListState())
-
-    def getMapState(self, name, keySchema, valueSchema, ttlDurationMs=None):
-        return self.states.setdefault(name, FakeMapState())
-
-    def registerTimer(self, ts_ms):
-        self.timers.append(ts_ms)
-
-    def deleteTimer(self, ts_ms):
-        self.timers.remove(ts_ms)
-
-    def listTimers(self):
-        return iter(list(self.timers))
-
-
-class FakeExpiredTimerInfo:
-    def __init__(self, expiry_ms):
-        self._e = expiry_ms
-
-    def getExpiryTimeInMs(self):
-        return self._e
-
-
-_FAR_FUTURE_MS = int(pd.Timestamp("2090-01-01").value // 1_000_000)
-
-
-def _tws_row(us_base, turn_idx, offset_s, wc=3, role="S1", violated=False):
-    return {
-        "ts_us": us_base + int(offset_s * 1e6),
-        "turn_idx": turn_idx,
-        "role": role,
-        "is_s1": 1 if role == "S1" else 0,
-        "has_tool": False,
-        "violated": violated,
-        "word_count": wc,
-        "inaudible_count": 1,
-        "questionable_count": 0,
-        "other_bracketed_words": 0,
-        "redactions": 0,
-        "nonverbal_edits": 1.0,
-        "verbal_edits": 0.0,
-        "repeats": 0.0,
-        "restarts": 0.0,
-        "is_ascii": True,
-    }
-
-
-def test_tws_processor_logic_matches_sessions(spark, cfg):
-    """Drive SessionQcProcessor directly with an in-memory state handle:
-    dedup, gap-splitting, QC sums, gap stats, and tail-timer flush must
-    reproduce the session semantics of the declarative aggregate."""
-    import numpy as np
-
-    from daily_journal_dataflow_qc_spark.streaming.tws import SessionQcProcessor
-
-    proc = SessionQcProcessor(gap_minutes=cfg.session_gap_minutes)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    t0 = pd.Timestamp("2023-03-01 10:00:00")
-    us = int(t0.value // 1000)
-
-    def row(turn_idx, offset_s, wc=3, role="S1", violated=False):
-        return {
-            "ts_us": us + int(offset_s * 1e6),
-            "turn_idx": turn_idx,
-            "role": role,
-            "is_s1": 1 if role == "S1" else 0,
-            "has_tool": False,
-            "violated": violated,
-            "word_count": wc,
-            "inaudible_count": 1,
-            "questionable_count": 0,
-            "other_bracketed_words": 0,
-            "redactions": 0,
-            "nonverbal_edits": 1.0,
-            "verbal_edits": 0.0,
-            "repeats": 0.0,
-            "restarts": 0.0,
-            "is_ascii": True,
-        }
-
-    # session 1: turns 1-3 (with a verbatim re-delivery of 2); session 2
-    # starts 2h later (gap > 30min) -> session 1 CLOSES and is buffered; it
-    # EMITS only when its event-time timer fires (watermark-gated emission)
-    batch1 = pd.DataFrame(
-        [row(1, 0), row(2, 10, wc=5), row(2, 10, wc=5), row(3, 25, role="S2")]
-    )
-    out1 = list(proc.handleInputRows(("convX",), iter([batch1]), None))
-    assert out1 == []  # session still open
-    batch2 = pd.DataFrame([row(4, 7200), row(5, 7210)])
-    assert list(proc.handleInputRows(("convX",), iter([batch2]), None)) == []
-    # drain exactly session 1's due instant: the open session must NOT flush
-    due1 = (us + int(25 * 1e6)) // 1000 + cfg.session_gap_minutes * 60 * 1000
-    assert due1 in handle.timers
-    out2 = pd.concat(
-        list(proc.handleExpiredTimer(("convX",), None, FakeExpiredTimerInfo(due1)))
-    )
-    assert len(out2) == 1
-    s1 = out2.iloc[0]
-    assert s1["n_turns"] == 3  # duplicate removed
-    assert s1["word_count"] == 3 + 5 + 3
-    assert s1["speakerID_count"] == 2
-    assert s1["S1_sentence_count"] == 2
-    assert s1["inaudible_count"] == 3
-    assert s1["min_timestamp_space_seconds"] == 10.0
-    assert s1["max_timestamp_space_seconds"] == 15.0
-    assert s1["final_timestamp_minutes"] == round(25 / 60.0, 3)
-    assert not s1["any_violated"]
-
-    # tail session flushes once the watermark passes ITS due instant
-    out3 = pd.concat(
-        list(
-            proc.handleExpiredTimer(
-                ("convX",), None, FakeExpiredTimerInfo(_FAR_FUTURE_MS)
-            )
-        )
-    )
-    assert len(out3) == 1
-    s2 = out3.iloc[0]
-    assert s2["n_turns"] == 2 and s2["word_count"] == 6
-    assert np.isclose(s2["min_timestamp_space_seconds"], 10.0)
-
-
-def test_tws_exact_dedup_keeps_late_turn_on_long_conversation(cfg):
-    """Regression for the lossy count-min dedup: after hundreds of distinct
-    turns the old sketch saturated and silently DELETED a legitimate
-    out-of-order gap-fill. The exact HWM+missing-gap state must keep it."""
-    from daily_journal_dataflow_qc_spark.streaming.tws import SessionQcProcessor
-
-    proc = SessionQcProcessor(gap_minutes=cfg.session_gap_minutes)
-    handle = FakeHandle()
-    proc.init(handle)
-    us = int(pd.Timestamp("2023-03-01 10:00:00").value // 1000)
-
-    # batch 1: 600 turns, idx 300 missing (a gap), 2s apart — one session
-    rows1 = [_tws_row(us, i, 2 * i) for i in range(1, 601) if i != 300]
-    assert list(proc.handleInputRows(("convL",), iter([pd.DataFrame(rows1)]), None)) == []
-    missing = handle.states["missing"]
-    assert set(missing.m) == {(300,)}
-
-    # batch 2: the gap-fill arrives out of order (ts inside the session) plus
-    # a re-delivery of idx 17 — the fill must be KEPT, the re-delivery dropped
-    rows2 = [_tws_row(us, 300, 600), _tws_row(us, 17, 34)]
-    assert list(proc.handleInputRows(("convL",), iter([pd.DataFrame(rows2)]), None)) == []
-    assert not missing.m  # gap filled exactly once
-    out = pd.concat(
-        list(
-            proc.handleExpiredTimer(
-                ("convL",), None, FakeExpiredTimerInfo(_FAR_FUTURE_MS)
-            )
-        )
-    )
-    assert out.iloc[0]["n_turns"] == 600  # 599 + the late fill, dup excluded
-
-
-def test_tws_exact_dedup_property(cfg):
-    """Property (hypothesis): across arbitrary batched delivery orders with
-    duplicates / out-of-order / gaps, the HWM+missing-gap dedup keeps a turn
-    iff it was NEVER delivered before — exactly a seen-set, in O(gaps)
-    state."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from daily_journal_dataflow_qc_spark.streaming.tws import SessionQcProcessor
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(
-            st.lists(st.integers(min_value=1, max_value=40), max_size=30),
-            min_size=1,
-            max_size=6,
-        )
-    )
-    def run(batches):
-        proc = SessionQcProcessor(gap_minutes=cfg.session_gap_minutes)
-        proc.init(FakeHandle())
-        seen: set[int] = set()
-        for b in batches:
-            idx = np.array(b, dtype=np.int64)
-            if len(idx) == 0:
-                continue
-            keep = proc._dedup_batch(idx)
-            expect = []
-            for i in b:
-                expect.append(i not in seen)
-                seen.add(i)
-            assert list(keep) == expect, (b, list(keep), expect)
-
-    run()
-
-
-def test_tws_dedup_rejects_corrupt_index_jump(cfg):
-    """The O(gaps) state contract is guarded: a turn_idx jump beyond
-    MAX_GAP_RUN is corrupt data and fails loudly instead of materializing
-    an index-jump-sized gap set."""
-    import numpy as np
-    import pytest as _pytest
-
-    from daily_journal_dataflow_qc_spark.streaming.tws import (
-        MAX_GAP_RUN,
-        SessionQcProcessor,
-    )
-
-    proc = SessionQcProcessor(gap_minutes=cfg.session_gap_minutes)
-    proc.init(FakeHandle())
-    with _pytest.raises(ValueError, match="MAX_GAP_RUN"):
-        proc._dedup_batch(np.array([1, MAX_GAP_RUN + 10], dtype=np.int64))
-
-
-def test_tws_multi_session_batch_flushes_interior_segments(cfg):
-    """One micro-batch spanning three sessions: the two complete sessions
-    close and are BUFFERED (the interior one without its per-turn payload
-    touching state), the last stays open; all three emit in due order once
-    the watermark passes their timers."""
-    from daily_journal_dataflow_qc_spark.streaming.tws import SessionQcProcessor
-
-    proc = SessionQcProcessor(gap_minutes=cfg.session_gap_minutes)
-    handle = FakeHandle()
-    proc.init(handle)
-    us = int(pd.Timestamp("2023-03-01 08:00:00").value // 1000)
-
-    batch = pd.DataFrame(
-        [_tws_row(us, 1, 0), _tws_row(us, 2, 20, wc=7),
-         _tws_row(us, 3, 7200), _tws_row(us, 4, 7230),
-         _tws_row(us, 5, 14400)]
-    )
-    assert list(proc.handleInputRows(("convM",), iter([batch]), None)) == []
-    # two closed sessions buffered; last segment is the open session
-    assert len(handle.states["pending"].items) == 2
-    assert handle.states["agg"].exists() and handle.states["agg"].get()[2] == 1
-    out = pd.concat(
-        list(
-            proc.handleExpiredTimer(
-                ("convM",), None, FakeExpiredTimerInfo(_FAR_FUTURE_MS)
-            )
-        )
-    )
-    assert len(out) == 3
-    assert list(out["n_turns"]) == [2, 2, 1]
-    assert out.iloc[0]["word_count"] == 10 and out.iloc[0]["min_timestamp_space_seconds"] == 20.0
-    assert out.iloc[1]["min_timestamp_space_seconds"] == 30.0
-    # idempotent drain: a later stale timer finds nothing buffered
-    assert list(
-        proc.handleExpiredTimer(("convM",), None, FakeExpiredTimerInfo(_FAR_FUTURE_MS))
-    ) == []
-
-
-def test_tws_backend_matches_batch(spark, stream_input, synth_dir, cfg):
-    """The transformWithStateInPandas session backend (explicit ValueState +
-    ListState + event-time timers, streaming/tws.py) must produce the same
-    audio-QC row set as the batch engine."""
-    if not _protobuf_available():
-        pytest.skip(
-            "google.protobuf broken in this container; TWS python runner "
-            "cannot start (logic covered by test_tws_processor_logic...)"
-        )
-    out_root = "/tmp/djdq_stream_tws"
-    shutil.rmtree(out_root, ignore_errors=True)
-    conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
-    q, sinks = start_session_qc_query(
-        spark, f"{stream_input}/transcripts", out_root, conv_meta, cfg,
-        backend="tws",
-    )
-    q.awaitTermination(600)
-    got = sinks["audio_qc"].read(spark).select(*QC_COMPARE_COLS).toPandas()
-    want = (
-        run_batch_from_dir(spark, synth_dir, cfg)
-        .audio_qc.select(*QC_COMPARE_COLS)
-        .toPandas()
-    )
-    compare_frames(
-        got,
-        want,
-        ["conv_id", "day", "daily_submission_number"],
-        rounded_atol_cols={"length_minutes": 2e-3},
-    )
 
 
 def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
@@ -878,12 +532,10 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
     )
 
 
-@pytest.mark.parametrize("backend", ["session_window", "tws"])
+@pytest.mark.parametrize("backend", ["session_window"])
 def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
     """A sub-watermark row arriving AFTER its session's state was evicted
-    is silently dropped — by the declarative session aggregate AND by the
-    transformWithState backend (its event-time mode pre-filters the late
-    row before the processor; measured, pinned here for both) — and the
+    is silently dropped by the declarative session aggregate — and the
     turn-stats rebuild never resurrects it: the live tier stays internally
     exact (turn counts == diary counts), the batch tier counts the row,
     and a fresh REPLAY converges to the batch tier (the reference's cron
@@ -972,7 +624,6 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
     q, sinks = start_session_qc_query(
         spark, f"{root}/transcripts", out_live, conv_meta, cfg,
         max_files_per_trigger=1, tool_calls_dir=f"{root}/tool_calls",
-        backend=backend,
     )
     q.awaitTermination(600)
     ts_live = sinks["turn_stats"].read(spark).toPandas()
@@ -995,7 +646,7 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
     shutil.rmtree(out_replay, ignore_errors=True)
     q2, sinks2 = start_session_qc_query(
         spark, f"{root}/transcripts", out_replay, conv_meta, cfg,
-        tool_calls_dir=f"{root}/tool_calls", backend=backend,
+        tool_calls_dir=f"{root}/tool_calls",
     )
     q2.awaitTermination(600)
     ts_replay = sinks2["turn_stats"].read(spark).toPandas()
@@ -1236,58 +887,6 @@ def test_streamed_files_incremental_parse(tmp_path, monkeypatch):
     )
     got = job._streamed_files(str(cp), 0)
     assert got == ["/data/other.parquet"]
-
-
-def test_tws_null_word_count_matches_jvm_null_semantics():
-    """A redaction-violated turn has null text -> every text-derived metric
-    arrives as float64+NaN. The TWS aggregate must mirror the JVM
-    backend's skip-null semantics (F.sum/min/max skip nulls; gap/null and
-    gap/0 are SQL NULL, excluded from per-word min/max) — round 4's
-    to_numpy(int64) silently cast NaN to INT64_MIN here."""
-    import numpy as np
-
-    from daily_journal_dataflow_qc_spark.streaming.tws import SessionQcProcessor
-
-    seg = pd.DataFrame(
-        {
-            "ts_us": [0, 10_000_000, 20_000_000],
-            "word_count": [4.0, np.nan, 2.0],
-            "role": ["S1", "S1", "S2"],
-            "has_tool": [False, False, False],
-            "violated": [False, True, False],
-            "is_s1": [1, 1, 0],
-            "inaudible_count": [0.0, np.nan, 1.0],
-            "questionable_count": [0.0, np.nan, 0.0],
-            "other_bracketed_words": [0.0, np.nan, 0.0],
-            "redactions": [0.0, np.nan, 0.0],
-            "nonverbal_edits": [1.0, np.nan, 0.0],
-            "verbal_edits": [0.0, np.nan, 0.0],
-            "repeats": [0.0, np.nan, 0.0],
-            "restarts": [0.0, np.nan, 0.0],
-            "is_ascii": [True, None, True],
-            "turn_idx": [1, 2, 3],
-        }
-    )
-    p = SessionQcProcessor(20)
-    pairs = p._seg_pairs(seg)
-    assert pairs == [(0, 4), (10_000_000, 0), (20_000_000, 2)]
-    agg = p._seg_agg(seg)
-    assert (agg[6], agg[7], agg[8]) == (6, 2, 4)  # word sum/min/max skip null
-    assert agg[4] is True and agg[9] == 1  # violated any; inaudible skip-null
-    assert agg[17] is True  # is_ascii: min over NON-null values
-    row = p._diary_row("c", agg, pairs)
-    # gaps are 10s each; the null turn's wc->0 divisor is EXCLUDED like SQL
-    # NULL, so both per-word stats come from the wc=4 turn alone
-    assert row["min_timestamp_space_per_word"] == 2.5
-    assert row["max_timestamp_space_per_word"] == 2.5
-    assert row["word_count"] == 6
-
-    # ALL-null segment: min/max words coerce to 0 (non-nullable agg state),
-    # encoding falls to UTF-8 (JVM: min over zero non-null values is null)
-    seg2 = seg.iloc[[1]]
-    agg2 = p._seg_agg(seg2)
-    assert (agg2[6], agg2[7], agg2[8]) == (0, 0, 0)
-    assert agg2[17] is False
 
 
 def test_pending_flag_single_row_for_late_retry(spark, cfg):
