@@ -215,8 +215,11 @@ def issues_set(
     instead of per-family ``dedup_tool_calls`` window derivations (which
     Catalyst cannot exchange-reuse across the families: per-consumer
     pruning breaks canonical equality, so the un-restructured plan carried
-    56 tool-call scans and 45 exchanges). ``requests``/``returns`` are
-    ignored in that mode and may be None."""
+    56 tool-call scans and 45 exchanges). ``requests``/``returns`` must be
+    None in that mode; a mixed or empty call raises ``ValueError``."""
+    from .transcript import check_tool_call_mode
+
+    check_tool_call_mode(requests, returns, lifecycle, tool_calls)
     today = F.lit(cfg.compute_date_str)
     # tool-side reconciliation happens under the language-marked exchange
     # name (S10): requests/returns carry it from the SFTP side, so the

@@ -218,6 +218,27 @@ def mindlamp_json_bug_adjust(
     return mp3_keep, json_keep, issues_keep
 
 
+def check_tool_call_mode(
+    requests: DataFrame | None,
+    returns: DataFrame | None,
+    *rollups: DataFrame | None,
+) -> None:
+    """Fail loudly unless exactly one tool-call input mode is given: the
+    deduped ``requests``/``returns`` pair, or a rollup source (``lifecycle``
+    or raw ``tool_calls``). Mixed frames would otherwise be silently
+    ignored, and a missing side would fail later on ``None.select``."""
+    legacy = requests is not None or returns is not None
+    rollup = any(r is not None for r in rollups)
+    if legacy and rollup:
+        raise ValueError(
+            "pass requests/returns OR lifecycle/tool_calls, not both"
+        )
+    if not rollup and (requests is None or returns is None):
+        raise ValueError(
+            "pass lifecycle/tool_calls, or both requests and returns"
+        )
+
+
 def returned_accepted_diaries(
     audio_qc_df: DataFrame,
     requests: DataFrame | None,
@@ -237,7 +258,11 @@ def returned_accepted_diaries(
     ``has_request AND returned`` flags — one aggregation instead of two
     window dedups joined, identical membership (both ``dedup_tool_calls``
     frames are one row per key, so their inner join IS the conjunction of
-    the kind-existence flags)."""
+    the kind-existence flags).
+
+    Exactly one input mode: ``lifecycle``, or ``requests`` AND ``returns``;
+    a mixed or empty call raises ``ValueError``."""
+    check_tool_call_mode(requests, returns, lifecycle)
     accepted = audio_qc_df.filter(F.col("audio_approved_bool") == 1).withColumn(
         "_tool_key", with_language_marker(F.col("filename"), F.col("language"))
     )
@@ -258,12 +283,13 @@ def redact_projection(turns: DataFrame) -> DataFrame:
     """Stateless per-turn redaction projection: ``text`` becomes the
     redacted text, ``violated`` the per-line violation bit.
 
-    Applied BEFORE the conv_id exchange (same topology as the streaming
-    job's turn_projection): ArrowEvalPython does not preserve partitioning
-    or ordering, so a UDF placed between the identity windows and the
-    per-turn stats windows forces Catalyst to re-exchange and re-sort the
-    wide rows — placing it on the scan side keeps the whole window chain on
-    ONE exchange and its two sorts."""
+    ArrowEvalPython does not preserve partitioning or ordering, so no
+    window may sit above it: a UDF placed between the identity windows and
+    the per-turn stats windows forces Catalyst to re-exchange and re-sort
+    the wide rows. The batch heavy pass applies it after ``gap_stats`` (the
+    whole window chain stays on ONE exchange and its two sorts); the
+    streaming job's turn_projection applies it, then ``text_stats``, on the
+    scan side of the stateful exchange."""
     red = redact_udf(normalize_text(F.col("text")))
     return turns.withColumns(
         {"text": red.getField("redacted"), "violated": red.getField("violated")}
@@ -289,47 +315,6 @@ def attach_diaries(sessioned_turns: DataFrame, diaries: DataFrame) -> DataFrame:
         "weekday",
     )
     return sessioned_turns.join(F.broadcast(diary_cols), DIARY_KEY, "inner")
-
-
-def redacted_turns(sessioned_turns: DataFrame, diaries: DataFrame) -> DataFrame:
-    """Per-turn redaction over the turns of the given diaries (join + UDF;
-    kept for callers whose input was not pre-redacted). Callers must exclude
-    every turn of any diary with a violated line (reference deletes the
-    whole output file, phone_transcript_redaction.py:69-72)."""
-    return redact_projection(attach_diaries(sessioned_turns, diaries))
-
-
-def diary_violation_flags(red_turns: DataFrame) -> DataFrame:
-    """Per-diary `_any_violated` flag via a cheap aggregation.
-
-    ``violated`` here may be the redaction UDF's output OR the pure-JVM
-    structural predicate (functions.redaction.violated_line — fuzz-tested
-    equivalent): the JVM form lets the flag aggregation run without a second
-    pass through the Python boundary. The groupBy reuses the conv_id hash
-    partitioning (ClusteredDistribution satisfied), so this is a map-side
-    aggregate — NO exchange and NO wide-row window sort."""
-    return red_turns.groupBy(*DIARY_KEY).agg(
-        F.max("violated").alias("_any_violated"), F.first("filename").alias("filename")
-    )
-
-
-def split_violations(red_turns: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean_turns, violated_diaries): poison whole diaries on any violation.
-
-    The per-diary flag is a diary-level aggregate broadcast-joined back onto
-    the turns — replaces the previous full-width window max, whose sort over
-    the wide (text-bearing) rows was the worst-scaling stage of the heavy
-    pass (wide-row sorts saturate the memory bus well before 4x cores).
-    """
-    flags = diary_violation_flags(red_turns).drop("filename")
-    flagged = red_turns.join(F.broadcast(flags), DIARY_KEY, "left")
-    clean = flagged.filter(~F.col("_any_violated")).drop("_any_violated")
-    violated = (
-        diary_violation_flags(red_turns)
-        .filter(F.col("_any_violated"))
-        .select(*DIARY_KEY, "filename")
-    )
-    return clean, violated
 
 
 def gap_stats(turns_with_diary: DataFrame) -> DataFrame:
@@ -376,14 +361,6 @@ def text_stats(redacted: DataFrame) -> DataFrame:
             "is_ascii": F.col("text").rlike("^[\\x00-\\x7F]*$"),
         }
     )
-
-
-def turn_stats(clean_turns: DataFrame) -> DataFrame:
-    """Per-turn sentence stats (phone_transcript_sentence_stats.py:147-217):
-    timestamp-side gap stats + text-side sentence metrics. Callers on the
-    perf path compose ``gap_stats`` -> redact_projection -> ``text_stats``
-    explicitly so the UDF runs on the joined subset with no window above it."""
-    return text_stats(gap_stats(clean_turns))
 
 
 ROLLUP_KEYS = [
@@ -504,13 +481,3 @@ def disf_from_rollup(rollup: DataFrame) -> DataFrame:
             "disfluencies_per_minute": total / F.col("length_minutes"),
         }
     )
-
-
-def transcript_qc(stats: DataFrame) -> DataFrame:
-    """Per-diary transcript QC row (transcript_diary_qc.py:174-242, A2-A4, W2-W4)."""
-    return tqc_from_rollup(diary_rollup(stats))
-
-
-def disfluencies(stats: DataFrame) -> DataFrame:
-    """Per-diary disfluency summary (phone_transcript_sentence_stats.py:97-118)."""
-    return disf_from_rollup(diary_rollup(stats))

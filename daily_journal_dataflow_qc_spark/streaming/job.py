@@ -41,8 +41,7 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from .. import schemas
 from ..functions.datetime_rules import proposed_processed_name, with_day_assignment
 from ..functions.naming import with_language_marker
-from ..functions.redaction import redact_udf
-from ..functions.text_metrics import normalize_text, with_sentence_metrics
+from ..operators.transcript import redact_projection, text_stats
 from ..sources.table_format import is_catalog_table, read_table
 from .keystore import IncrementalKeyStore
 from .sink import IdempotentBatchSink
@@ -146,22 +145,9 @@ def _streamed_files(checkpoint_loc: str, batch_id: int) -> list[str] | None:
 
 
 def turn_projection(turns: DataFrame) -> DataFrame:
-    """Stateless per-turn stage: redact + lower + sentence metrics."""
-    red = redact_udf(normalize_text(F.col("text")))
-    df = turns.withColumns(
-        {"text": red.getField("redacted"), "violated": red.getField("violated")}
-    )
-    df = df.withColumn("text_lc", F.lower(F.col("text")))
-    df = with_sentence_metrics(df, "text_lc")
-    return df.withColumns(
-        {
-            "inaudibles_and_questionables": (
-                F.col("inaudible_count") + F.col("questionable_count")
-            ).cast("int"),
-            "repeats": (F.col("stutter_repeats") + F.col("word_repeats")).cast("int"),
-            "is_ascii": F.col("text").rlike("^[\\x00-\\x7F]*$"),
-        }
-    )
+    """Stateless per-turn stage: redact + lower + sentence metrics — the
+    batch heavy pass's per-turn projection, without its windows."""
+    return text_stats(redact_projection(turns))
 
 
 def session_qc_aggregate(projected: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -597,25 +583,7 @@ def start_session_qc_query(
                             F.col("_next_ts").cast("double") - cur,
                         ).otherwise(F.col("overall_db") * 60.0 - sec_from_start),
                     )
-                    turn_rows = t.select(
-                        "conv_id",
-                        "turn_idx",
-                        "day",
-                        "daily_submission_number",
-                        "role",
-                        "text",
-                        "word_count",
-                        "inaudibles_and_questionables",
-                        "other_bracketed_words",
-                        "redactions",
-                        "estimated_sentence_seconds",
-                        "nonverbal_edits",
-                        "verbal_edits",
-                        "stutter_repeats",
-                        "word_repeats",
-                        "repeats",
-                        "restarts",
-                    )
+                    turn_rows = t.select(*schemas.TURN_STATS.fieldNames())
                 else:
                     turn_rows = spark.createDataFrame([], schemas.TURN_STATS)
                 sinks["turn_stats"].write(turn_rows, batch_id)

@@ -1,5 +1,7 @@
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
@@ -14,8 +16,18 @@ CACHE_DIR = "/tmp/djdq_testdata_n50_s42"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="djdq-tests", master="local[4]", shuffle_partitions=8)
+    # saveAsTable tests write managed tables under the warehouse dir; keep
+    # them in a per-session temp dir so no run leaves tables in the checkout
+    # (a leftover table dir fails the next CREATE with LOCATION_ALREADY_EXISTS)
+    warehouse = tempfile.mkdtemp(prefix="djdq_warehouse_")
+    s = get_spark(
+        app_name="djdq-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
+    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")
@@ -42,7 +54,6 @@ def stream_input(spark, synth_dir):
     Includes an end-of-stream sentinel (separate later-mtime file) so the
     final watermark closes every real session, plus a time-ordered variant
     for kill/resume runs."""
-    import shutil
     import time
 
     from pyspark.sql import functions as F

@@ -7,30 +7,30 @@ violated)."""
 import pytest
 
 from daily_journal_dataflow_qc_spark.operators import diaries as diary_ops
-from daily_journal_dataflow_qc_spark.operators import transcript as transcript_ops
-from daily_journal_dataflow_qc_spark.pipeline import load_inputs
+from daily_journal_dataflow_qc_spark.pipeline import _build, load_inputs
 
 
 def _staged_heavy_pass(spark, synth_dir, cfg):
-    transcripts, tool_calls, conv_meta = load_inputs(spark, synth_dir)
-    turns = diary_ops.dedup_turns(transcripts)
-    sessioned = diary_ops.sessionize(turns, cfg)
-    diaries = diary_ops.diary_identity(sessioned, conv_meta, cfg)
-    qc = diary_ops.audio_qc(diaries, cfg)
-    requests = transcript_ops.dedup_tool_calls(tool_calls, "request")
-    returns = transcript_ops.dedup_tool_calls(tool_calls, "return")
-    returned = transcript_ops.returned_accepted_diaries(qc, requests, returns)
-    joined = transcript_ops.attach_diaries(sessioned, returned)
-    red = transcript_ops.redact_projection(transcript_ops.gap_stats(joined))
-    return transcript_ops.text_stats(red).drop("text_lc")
+    """The wide per-turn frame the flagship builder hands its stage step:
+    the heavy pass run_batch_staged writes (and run_batch keeps in memory)."""
+    captured = []
+
+    def stage(turn_stats):
+        captured.append(turn_stats)
+        return turn_stats
+
+    _build(*load_inputs(spark, synth_dir), cfg, stage)
+    return captured[0]
 
 
 def test_staged_heavy_pass_plan_shape(spark, synth_dir, cfg):
     # cached frames left behind by pipeline tests (qc/rollup/flags persist)
     # substitute InMemoryRelations into matching subtrees and change the
-    # exchange count — pin the UNCACHED plan regardless of test order
+    # exchange count — pin the plan with only the builder's own persists
+    # (qc, as benched) regardless of test order
     spark.catalog.clearCache()
     plan = _staged_heavy_pass(spark, synth_dir, cfg)._jdf.queryExecution().executedPlan().toString()
+    spark.catalog.clearCache()  # the builder's persists: keep them out of later plans
     lines = plan.splitlines()
 
     shuffles = [
@@ -41,15 +41,16 @@ def test_staged_heavy_pass_plan_shape(spark, synth_dir, cfg):
     #                        gap windows + rollups all reuse it)
     #   2. conv_id        — the diary/audio-QC branch re-derives sessionize
     #                        for the broadcast side (tiny: diary-level rows;
-    #                        the bench plan persists qc so this runs once)
-    #   3-4. (conv_id, request_key) — the two tool-call dedup windows over
-    #                        the (small) tool_calls table
+    #                        the builder persists qc so this runs once)
+    #   3. (conv_id, request_key) — the tool_call_lifecycle rollup over the
+    #                        (small) tool_calls table
     # Anything beyond these means a window/join stopped reusing the conv_id
     # partitioning — e.g. a UDF placed below a window (ArrowEvalPython drops
     # partitioning) or a lost broadcast hint.
-    assert len(shuffles) <= 4, "unexpected extra shuffle(s):\n" + "\n".join(shuffles)
+    assert len(shuffles) <= 3, "unexpected extra shuffle(s):\n" + "\n".join(shuffles)
     conv_only = [s for s in shuffles if "request_key" not in s]
     assert len(conv_only) <= 2, "turn-table exchanged more than twice:\n" + "\n".join(conv_only)
+    assert len(shuffles) - len(conv_only) <= 1, "tool_calls exchanged more than once"
 
     # all joins in the heavy pass must broadcast (diary side is 10-1000x
     # smaller than the turn stream) — a SortMergeJoin would re-sort the
@@ -244,7 +245,7 @@ def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):
     assert "WindowGroupLimit" in plan, plan
 
     # the un-staged path reuses its persisted diary-grain frames (rollup +
-    # violated) instead of re-deriving the UDF-bearing turn pass per
+    # flags) instead of re-deriving the UDF-bearing turn pass per
     # consuming subtree (was measured at 8 ArrowEvalPython subtrees in one
     # issues plan before the persists)
     out = run_batch_from_dir(spark, synth_dir, cfg)

@@ -4,6 +4,7 @@ journal_transcribeme_sftp_push.py:166-191 + subject_summaries_update.sh:
 127-143), and the clear path (manual_update_utilities/sftp_push_error_clear.py)."""
 
 import pandas as pd
+import pytest
 
 from daily_journal_dataflow_qc_spark import schemas
 from daily_journal_dataflow_qc_spark.operators.compile import (
@@ -15,6 +16,8 @@ from daily_journal_dataflow_qc_spark.operators.transcript import (
     clear_resolved_push_errors,
     dedup_tool_calls,
     push_attempt_stats,
+    returned_accepted_diaries,
+    tool_call_lifecycle,
 )
 
 LOCAL_1 = "c1_audioJournal_day0001_submission1.wav"
@@ -68,10 +71,8 @@ def test_push_attempt_stats(spark):
 def test_issues_upload_failed_replaces_pending(spark, cfg):
     tc = _tool_calls(spark)
     qc = _audio_qc(spark)
-    requests = dedup_tool_calls(tc, "request")
-    returns = dedup_tool_calls(tc, "return")
     violated = spark.createDataFrame([], "conv_id string, filename string")
-    issues = issues_set(qc, requests, returns, violated, cfg, tool_calls=tc).toPandas()
+    issues = issues_set(qc, None, None, violated, cfg, tool_calls=tc).toPandas()
 
     failed = issues[issues.error_message == MSG_UPLOAD_FAILED]
     assert set(zip(failed.conv_id, failed.filename)) == {("c1", LOCAL_1)}
@@ -81,13 +82,38 @@ def test_issues_upload_failed_replaces_pending(spark, cfg):
     assert set(zip(pending.conv_id, pending.filename)) == {("c3", MARKED_3)}
 
 
-def test_clear_resolved_push_errors(spark, cfg):
+def test_mixed_tool_call_inputs_raise(spark, cfg):
+    """requests/returns together with lifecycle/tool_calls are two input
+    modes at once; neither mode at all is no input. Both fail loudly
+    instead of silently ignoring a frame or crashing on ``None.select``."""
     tc = _tool_calls(spark)
     qc = _audio_qc(spark)
     requests = dedup_tool_calls(tc, "request")
     returns = dedup_tool_calls(tc, "return")
+    lifecycle = tool_call_lifecycle(tc)
     violated = spark.createDataFrame([], "conv_id string, filename string")
-    issues = issues_set(qc, requests, returns, violated, cfg, tool_calls=tc)
+
+    for kwargs in ({"tool_calls": tc}, {"lifecycle": lifecycle}):
+        with pytest.raises(ValueError, match="not both"):
+            issues_set(qc, requests, returns, violated, cfg, **kwargs)
+    with pytest.raises(ValueError, match="not both"):
+        issues_set(qc, requests, None, violated, cfg, tool_calls=tc)
+    with pytest.raises(ValueError, match="not both"):
+        returned_accepted_diaries(qc, requests, returns, lifecycle=lifecycle)
+
+    with pytest.raises(ValueError, match="both requests and returns"):
+        issues_set(qc, None, None, violated, cfg)
+    with pytest.raises(ValueError, match="both requests and returns"):
+        issues_set(qc, requests, None, violated, cfg)
+    with pytest.raises(ValueError, match="both requests and returns"):
+        returned_accepted_diaries(qc, None, None)
+
+
+def test_clear_resolved_push_errors(spark, cfg):
+    tc = _tool_calls(spark)
+    qc = _audio_qc(spark)
+    violated = spark.createDataFrame([], "conv_id string, filename string")
+    issues = issues_set(qc, None, None, violated, cfg, tool_calls=tc)
 
     # later stream state: c1's push finally succeeded and returned
     fixed = pd.DataFrame(
@@ -133,10 +159,6 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
     window / push_attempt_stats derivations it replaced — including the
     null-ts first arrival (row_number orderBy ts puts NULL FIRST; the
     rollup's struct-min must pick the same NULL, not the later real ts)."""
-    from daily_journal_dataflow_qc_spark.operators.transcript import (
-        tool_call_lifecycle,
-    )
-
     rows = []
     # k1: verbatim re-deliveries + genuine retries, returned
     for a in (0, 0, 5, 10):
@@ -185,10 +207,6 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
     assert exh_new == exh_old == {("k4", "f4.wav")}
 
     # returned_accepted_diaries: lifecycle fast path == the two-window join
-    from daily_journal_dataflow_qc_spark.operators.transcript import (
-        returned_accepted_diaries,
-    )
-
     qc = spark.createDataFrame(
         [("k1", "f1.wav", "", 1), ("k4", "f4.wav", "", 1), ("k5", "f5.wav", "", 0)],
         "conv_id string, filename string, language string, audio_approved_bool int",
