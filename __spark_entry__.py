@@ -837,18 +837,20 @@ def _lsh_ann_oracle_sql(dim: int = 64, n_planes: int = 3, n_tables: int = 16, se
 
 
 def q_redaction(spark, sf):
-    # F11: the REAL redaction pandas-UDF over a constructed brace-bearing
+    # F11: the REAL redaction expression over a constructed brace-bearing
     # text (well-formed groups by construction, so the DuckDB mirror is a
     # plain substring replacement)
-    from daily_journal_dataflow_qc_spark.functions.redaction import redact_udf
+    from daily_journal_dataflow_qc_spark.functions.redaction import (
+        redacted_line,
+        violated_line,
+    )
 
     d = _t(spark, sf, "documents")
     braced = F.replace(F.lower(F.col("text")), F.lit("table"), F.lit("{john smith}"))
-    red = redact_udf(braced)
     return d.select(
         "doc_id",
-        red.getField("redacted").alias("redacted"),
-        red.getField("violated").cast("int").alias("violated"),
+        redacted_line(braced).alias("redacted"),
+        violated_line(braced).cast("int").alias("violated"),
     )
 
 

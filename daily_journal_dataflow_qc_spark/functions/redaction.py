@@ -1,4 +1,4 @@
-"""PII redaction rewrite (F11) as a vectorized pandas/Arrow UDF.
+"""PII redaction rewrite (F11) as pure Spark built-ins.
 
 Semantics re-derived from the reference algorithm
 (phone_transcript_redaction.py:38-114), NOT copied: every ``{...}`` group has
@@ -16,86 +16,58 @@ Quirks preserved for parity:
 * output is built with a trailing ``{`` per inner group then the tail
   (:63,81), reproducing the reference's exact spacing.
 
-This is Python-per-line inside an Arrow batch (pandas ``map``) — acceptable
-because redaction is inherently a per-line rewrite with early-exit control
-flow; the batch boundary (Arrow) keeps serde off the per-row path.
+The pandas oracle's ``_redaction_violated`` / ``_redact_valid_line`` are the
+Python statement of the rule; tests/test_naming.py fuzzes these expressions
+against them.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("redacted", T.StringType(), True),
-        T.StructField("violated", T.BooleanType(), False),
-    ]
-)
+from .text_metrics import substr_count
 
-
-def redact_line(line: str) -> tuple[str | None, bool]:
-    """Redact one line; returns (redacted_or_None, violated)."""
-    if line is None:
-        return None, False
-    parts = line.split("{")
-    if len(parts) == 1:
-        return parts[0], False
-    out = [parts[0], "{"]
-    for contents in parts[1:-1]:
-        sp = contents.split("}")
-        if len(sp) != 2:
-            return None, True
-        n = len(sp[0].split(" "))
-        out.append("REDACTED " * (n - 1) + "REDACTED}")
-        out.append(sp[1] + "{")
-    last = parts[-1]
-    if last == "":
-        # reference would raise on empty tail (:85 indexes [-1]); treat as a
-        # convention violation so the diary is routed to the flagged set
-        return None, True
-    if last[-1] == "}":
-        n = len(last.split(" "))
-        out.append("REDACTED " * (n - 1) + "REDACTED}")
-    else:
-        sp = last.split("}")
-        if len(sp) != 2:
-            return None, True
-        n = len(sp[0].split(" "))
-        out.append("REDACTED " * (n - 1) + "REDACTED}" + sp[1])
-    return "".join(out), False
+#: structural brace-convention well-formedness: any prefix without '{' is
+#: unchecked (may hold stray '}'), then each inner '{' group must contain
+#: exactly one '}' before the next '{', and a trailing lone '{' (empty tail)
+#: violates. The FINAL group is laxer — the reference accepts any tail that
+#: simply ends with '}' without counting its braces. Anchored with \z, not
+#: $: Java's $ also matches before a final line terminator, so a raw line
+#: ending in "}}\r" would pass.
+_WELLFORMED_RE = "^[^{]*(\\{[^{}]*\\}[^{}]*)*(\\{[^{]*\\})?\\z"
 
 
-#: structural brace-convention well-formedness (JVM regex form of the same
-#: rule redact_line enforces): any prefix without '{' is unchecked (may hold
-#: stray '}'), then each '{' group must contain exactly one '}' before the
-#: next '{', and a trailing lone '{' (empty tail) violates. Verified
-#: equivalent to redact_line's violated bit by a fuzz test
-#: (tests/test_naming.py::test_jvm_violation_predicate_matches_udf).
-#: inner '{' groups need exactly one '}' before the next '{'; the FINAL
-#: group is laxer — reference accepts any tail that simply ends with '}'
-#: (redact_line's last[-1] == '}' branch never counts braces)
-_WELLFORMED_RE = "^[^{]*(\\{[^{}]*\\}[^{}]*)*(\\{[^{]*\\})?$"
-
-
-def violated_line(col):
-    """F11 violation flag as a pure JVM predicate (whole-stage codegen) —
-    lets per-session violation flags be aggregated without routing text
-    through the Python boundary a second time."""
+def violated_line(col: Column) -> Column:
+    """F11 violation flag as a pure JVM predicate (whole-stage codegen)."""
     return F.coalesce(
         col.contains("{") & ~col.rlike(_WELLFORMED_RE), F.lit(False)
     )
 
 
-@F.pandas_udf(_RESULT_TYPE)
-def redact_udf(texts: pd.Series) -> pd.DataFrame:
-    # fast path: lines with no '{' pass through unchanged (reference :58-60);
-    # the per-line Python rewrite only runs on the brace-bearing minority
-    out = pd.DataFrame({"redacted": texts, "violated": False})
-    mask = texts.str.contains("{", regex=False).fillna(False)
-    if mask.any():
-        res = texts[mask].map(redact_line)
-        out.loc[mask, "redacted"] = res.map(lambda t: t[0])
-        out.loc[mask, "violated"] = res.map(lambda t: t[1])
-    return out
+def redacted_line(col: Column) -> Column:
+    """The redacted line; NULL when ``violated_line`` holds.
+
+    The line is split on ``{`` and rejoined with ``{``: part 0 passes
+    through, every later part becomes one ``REDACTED`` per space-separated
+    word before its ``}``, then ``}`` and the text after it. The rewrite
+    sits behind ``contains(col, '{')``, so lines without a brace never
+    reach the interpreted lambda."""
+
+    def part(p: Column, i: Column) -> Column:
+        # a part ending in '}' counts the words of the whole part: the same
+        # count for an inner part (exactly one '}'), the lax final group
+        # for the last one
+        words = F.when(p.endswith("}"), p).otherwise(F.substring_index(p, "}", 1))
+        return F.when(i == 0, p).otherwise(
+            F.concat(
+                F.repeat(F.lit("REDACTED "), substr_count(words, " ")),
+                F.lit("REDACTED}"),
+                F.substring_index(p, "}", -1),
+            )
+        )
+
+    rewritten = F.array_join(F.transform(F.split(col, "\\{", -1), part), "{")
+    return F.when(
+        col.contains("{"), F.when(~violated_line(col), rewritten)
+    ).otherwise(col)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.naming import with_language_marker
-from ..functions.redaction import redact_udf
+from ..functions.redaction import redacted_line, violated_line
 from ..functions.text_metrics import normalize_text, with_sentence_metrics
 
 DIARY_KEY = ["conv_id", "session_id"]
@@ -280,19 +280,14 @@ def returned_accepted_diaries(
 
 
 def redact_projection(turns: DataFrame) -> DataFrame:
-    """Stateless per-turn redaction projection: ``text`` becomes the
-    redacted text, ``violated`` the per-line violation bit.
-
-    ArrowEvalPython does not preserve partitioning or ordering, so no
-    window may sit above it: a UDF placed between the identity windows and
-    the per-turn stats windows forces Catalyst to re-exchange and re-sort
-    the wide rows. The batch heavy pass applies it after ``gap_stats`` (the
-    whole window chain stays on ONE exchange and its two sorts); the
-    streaming job's turn_projection applies it, then ``text_stats``, on the
-    scan side of the stateful exchange."""
-    red = redact_udf(normalize_text(F.col("text")))
+    """Stateless per-turn redaction projection over the normalized text:
+    ``text`` becomes the redacted text (NULL on a violated line),
+    ``violated`` the per-line violation bit. The batch heavy pass applies
+    it after ``gap_stats``; the streaming job's turn_projection applies it,
+    then ``text_stats``, on the scan side of the stateful exchange."""
+    text = normalize_text(F.col("text"))
     return turns.withColumns(
-        {"text": red.getField("redacted"), "violated": red.getField("violated")}
+        {"text": redacted_line(text), "violated": violated_line(text)}
     )
 
 
@@ -318,8 +313,8 @@ def attach_diaries(sessioned_turns: DataFrame, diaries: DataFrame) -> DataFrame:
 
 
 def gap_stats(turns_with_diary: DataFrame) -> DataFrame:
-    """Timestamp-side per-turn stats (NO text dependency — runs BEFORE the
-    redaction UDF so the lead windows sit directly on the sessionize sort).
+    """Timestamp-side per-turn stats (NO text dependency — runs BEFORE
+    redaction; the lead windows sit directly on the sessionize sort).
 
     The lead window partitions by conv_id ONLY and orders by (ts, turn_idx)
     — the exact sort the sessionize window upstream already established, so
@@ -348,8 +343,7 @@ def gap_stats(turns_with_diary: DataFrame) -> DataFrame:
 
 def text_stats(redacted: DataFrame) -> DataFrame:
     """Text-side per-turn sentence metrics (pure JVM projections over the
-    redacted text — no windows, so it composes freely AFTER the UDF even
-    though ArrowEvalPython drops partitioning/ordering)."""
+    redacted text — no windows)."""
     df = redacted.withColumn("text_lc", F.lower(F.col("text")))
     df = with_sentence_metrics(df, "text_lc")
     return df.withColumns(

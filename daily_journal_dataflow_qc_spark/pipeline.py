@@ -88,12 +88,11 @@ def _build(
     )
 
     # THE heavy pass: join (prunes to returned-accepted turns) -> ts-side
-    # gap windows -> redaction UDF -> text-side metric projections -> the
+    # gap windows -> redaction -> text-side metric projections -> the
     # stage step, text included. The gap lead-windows partition by conv_id
     # and order by (ts, turn_idx) — the exact sort the sessionize window
-    # upstream already produced — and the UDF comes after every window
-    # (ArrowEvalPython drops partitioning/ordering), so the whole pass runs
-    # on the single conv_id exchange and its two sorts. Violated diaries are
+    # upstream already produced — so the whole pass runs on the single
+    # conv_id exchange and its two sorts. Violated diaries are
     # NOT filtered before the stage: the per-turn `violated` bit rides
     # along, and diary-level poisoning is derived afterwards from a
     # column-pruned read (never a second wide window sort).
@@ -166,8 +165,8 @@ def run_batch(
     """Build the four output row sets in memory.
 
     persist_intermediates: cache the wide per-turn stats frame so
-    materializing all four outputs runs the heavy pass (windows + redaction
-    UDF) once — the batch analogue of the streaming job's single-pass
+    materializing all four outputs runs the heavy pass (windows +
+    redaction) once — the batch analogue of the streaming job's single-pass
     fan-out to multiple sinks.
     """
     def stage(turn_stats: DataFrame) -> DataFrame:

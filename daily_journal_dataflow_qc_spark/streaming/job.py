@@ -3,7 +3,7 @@
 Topology (single continuous job, checkpointed, exactly-once sinks):
 
     transcripts stream
-      -> per-turn stateless projection (normalize, redact UDF, metrics)
+      -> per-turn stateless projection (normalize, redact, metrics)
       -> watermark + dropDuplicatesWithinWatermark(conv_id, turn_idx)      [§2.10 dedup]
       -> groupBy(conv_id, session_window(ts, gap)) agg                     [diary assembly]
          (per-diary QC sums + (ts, word_count) pairs ONLY — 16 bytes of

@@ -1,6 +1,9 @@
 """S10 language-marker exchange rename + F1 filename field extraction + F12
 basename/dirname, pinned against the reference's split-index formulas."""
 
+import itertools
+import random
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -11,6 +14,16 @@ from daily_journal_dataflow_qc_spark.functions.naming import (
     filename_submission,
     strip_language_marker,
     with_language_marker,
+)
+from daily_journal_dataflow_qc_spark.functions.redaction import (
+    redacted_line,
+    violated_line,
+)
+from daily_journal_dataflow_qc_spark.operators.transcript import redact_projection
+from daily_journal_dataflow_qc_spark.oracle.pandas_oracle import (
+    _normalize,
+    _redact_valid_line,
+    _redaction_violated,
 )
 
 LOCAL = "conv7_audioJournal_day0042_submission2.wav"
@@ -80,33 +93,43 @@ def test_basename_dirname(spark):
     assert got["d"].tolist() == ["/a/b", "", "/x/y"]
 
 
-def test_jvm_violation_predicate_matches_udf(spark):
-    """The JVM structural brace predicate must agree with redact_line's
-    violated bit on an exhaustive small-alphabet fuzz set."""
-    import itertools
+def test_redact_projection_matches_oracle_spec(spark):
+    """``redact_projection``'s (text, violated) must agree with the pandas
+    oracle's redaction spec on the normalized line: every string of up to
+    7 characters over a brace-heavy alphabet, seeded random strings with
+    tabs, CR and non-ASCII, NULL, and the named quirks (empty tokens, the
+    lax final group, a trailing '{')."""
+    rng = random.Random(20261017)
+    samples = [
+        "".join(p) for n in range(8) for p in itertools.product("{}a ", repeat=n)
+    ] + [
+        "".join(rng.choices("{}ab é\t\r", k=rng.randint(1, 40)))
+        for _ in range(4000)
+    ] + [None, "{a  b}", "x {a}b}", "a {x", "{}", "hello {john smith} bye"]
 
-    from daily_journal_dataflow_qc_spark.functions.redaction import (
-        redact_line,
-        violated_line,
-    )
+    def spec(line):
+        if line is None:
+            return None, False
+        violated = _redaction_violated(line)
+        return (None if violated else _redact_valid_line(line)), violated
 
-    # all strings up to length 6 over a brace-heavy alphabet + fixture-like
-    # longer samples
-    alpha = "{}a "
-    samples = [""]
-    for n in range(1, 7):
-        samples += ["".join(p) for p in itertools.product(alpha, repeat=n)]
-    samples += [
-        "hello {john smith} bye", "a {x} b {y} c", "a {x}} b", "a {x",
-        "{}", "}{", "} ok {fine}", "no braces at all", "{a}{b}", "{a} {b",
-    ]
-    want = [redact_line(s)[1] for s in samples]
-    df = spark.createDataFrame([(s,) for s in samples], "t string")
+    # the projection normalizes first; the bare column expressions (as the
+    # `redaction` driver query uses them) must hold on the raw line too
+    raw = F.col("text")
+    df = spark.createDataFrame(list(enumerate(samples)), "i int, text string")
     got = [
-        bool(r["v"])
-        for r in df.select(violated_line(F.col("t")).alias("v")).collect()
+        ((r["text"], r["violated"]), (r["raw_text"], r["raw_violated"]))
+        for r in redact_projection(
+            df.withColumns(
+                {"raw_text": redacted_line(raw), "raw_violated": violated_line(raw)}
+            )
+        )
+        .orderBy("i")
+        .collect()
     ]
+    want = [(spec(s and _normalize(s)), spec(s)) for s in samples]
     bad = [(s, w, g) for s, w, g in zip(samples, want, got) if w != g]
+    assert len(got) == len(samples) > 25000
     assert not bad, f"{len(bad)} disagreements, first: {bad[:5]}"
 
 
