@@ -1417,6 +1417,7 @@ def q_return_error_clear(spark, sf):
     )
     from daily_journal_dataflow_qc_spark.operators.transcript import (
         clear_resolved_return_errors,
+        tool_call_lifecycle,
     )
 
     ev = _t(spark, sf, "events")
@@ -1448,7 +1449,8 @@ def q_return_error_clear(spark, sf):
     cleared = clear_resolved_return_errors(issues, pending, transcripts)
 
     # reconciliation leg: issues_set with ONLY the output-drift inputs live
-    # (no tool tags / in-deadline requests, so the legacy families are empty)
+    # (no tool tags / in-deadline requests, so the tool-side families are
+    # empty)
     cfg = PipelineConfig(compute_date=_dt.date(2024, 6, 1))
     dk = [F.col("_i").alias("day"), F.lit(1).alias("daily_submission_number")]
     aqc_one = keyed.select(
@@ -1459,20 +1461,27 @@ def q_return_error_clear(spark, sf):
         "_h",
     )
     aqc = aqc_one.unionByName(aqc_one.filter(F.col("_h") == 0)).drop("_h")
-    reqs = keyed.select(
-        "conv_id",
-        F.col("filename").alias("request_key"),
-        F.to_timestamp(F.lit("2024-06-01")).alias("ts"),
-    )
-    rets = keyed.filter(F.col("_h") != 7).select(
-        "conv_id", F.col("filename").alias("request_key")
+    # a schemas.TOOL_CALLS-shaped stream: one request per key (so no key
+    # exhausts its retries), a return for every key but _h==7
+    def tool_rows(df, kind):
+        return df.select(
+            "conv_id",
+            F.col("filename").alias("request_key"),
+            F.lit(kind).alias("kind"),
+            F.lit(None).cast("string").alias("tool"),
+            F.to_timestamp(F.lit("2024-06-01")).alias("ts"),
+            F.lit(None).cast("string").alias("payload"),
+        )
+
+    tool_calls = tool_rows(keyed, "request").unionByName(
+        tool_rows(keyed.filter(F.col("_h") != 7), "return")
     )
     violated = spark.createDataFrame([], "conv_id string, filename string")
     tqc = keyed.filter(F.pmod("_h", F.lit(2)) == 0).select("conv_id", *dk, "filename")
     disf = keyed.filter(F.pmod("_h", F.lit(3)) == 0).select("conv_id", *dk, "filename")
     turns = keyed.filter(F.col("_h") != 5).select("conv_id", *dk)
     recon = issues_set(
-        aqc, reqs, rets, violated, cfg,
+        aqc, tool_call_lifecycle(tool_calls), violated, cfg,
         transcript_qc=tqc, disfluencies=disf, turn_stats=turns,
     )
     return cleared.unionByName(recon.select("conv_id", "filename", "error_message"))

@@ -39,12 +39,8 @@ class PipelineConfig:
     # injected "today" for all age computations (never wall-clock; SURVEY §5.2)
     compute_date: _dt.date = field(default_factory=lambda: _dt.date(2023, 6, 1))
 
-    # streaming knobs
+    # streaming: event-time watermark of the turn dedup + session window
     watermark_delay: str = "2 days"
-    dedup_watermark_delay: str = "2 days"
-
-    # skew: salt bucket count for hot conv_ids before the windowed aggregate
-    salt_buckets: int = 8
 
     @property
     def compute_date_str(self) -> str:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..functions.naming import with_language_marker
+from ..functions.naming import strip_language_marker, with_language_marker
 
 # reference message strings (journal_outputs_error_check.py:76-182;
 # phone_transcript_redaction.py:70)
@@ -159,22 +159,21 @@ def accepted_set(
 
 def issues_set(
     audio_qc_df: DataFrame,
-    requests: DataFrame | None,
-    returns: DataFrame | None,
+    lifecycle: DataFrame,
     violated_diaries: DataFrame,
     cfg: PipelineConfig,
-    tool_calls: DataFrame | None = None,
     transcript_qc: DataFrame | None = None,
     disfluencies: DataFrame | None = None,
     turn_stats: DataFrame | None = None,
-    lifecycle: DataFrame | None = None,
 ) -> DataFrame:
     """The major-issues log (flagged row set), deduped keeping the earliest
     detection date (journal_outputs_error_check.py:199-214, O4).
 
-    When the raw ``tool_calls`` stream is given, the S8 push lifecycle is
-    attempt-aware: a key with >= cfg.max_push_attempts request rows and no
-    return exhausted its retries (journal_transcribeme_sftp_push.py:166-191)
+    ``lifecycle`` is a ``transcript.tool_call_lifecycle`` frame — the one
+    keyed rollup of the tool-call stream every request/return family reads.
+    The S8 push lifecycle is attempt-aware: a key with >=
+    cfg.max_push_attempts request rows and no return exhausted its retries
+    (journal_transcribeme_sftp_push.py:166-191)
     — it is flagged 'TranscribeMe SFTP upload failed' under its LOCAL name
     (the file never left audio_to_send, subject_summaries_update.sh:127-143)
     and is EXCLUDED from the pending / no-QC reconciliations, which track
@@ -207,19 +206,12 @@ def issues_set(
     there is no per-row crash state to reconcile, so they are documented
     inapplicable (ARCHITECTURE §2 notes).
 
-    ``lifecycle``: a precomputed ``transcript.tool_call_lifecycle`` frame
-    (the pipeline shares one — unpersisted — copy across the round-trip
-    semi-join and every family here). When given —
-    or when ``tool_calls`` is given, from which it is derived — the
-    attempt-aware request/return sides come from that single keyed rollup
-    instead of per-family ``dedup_tool_calls`` window derivations (which
-    Catalyst cannot exchange-reuse across the families: per-consumer
-    pruning breaks canonical equality, so the un-restructured plan carried
-    56 tool-call scans and 45 exchanges). ``requests``/``returns`` must be
-    None in that mode; a mixed or empty call raises ``ValueError``."""
-    from .transcript import check_tool_call_mode
-
-    check_tool_call_mode(requests, returns, lifecycle, tool_calls)
+    The pipeline shares one (unpersisted) lifecycle copy across the
+    round-trip semi-join and every family here. Each request/return side is
+    a row-filter of that rollup, not a per-family ``dedup_tool_calls``
+    window derivation, which Catalyst cannot exchange-reuse across the
+    families: per-consumer pruning breaks canonical equality, so the
+    un-restructured plan carried 56 tool-call scans and 45 exchanges."""
     today = F.lit(cfg.compute_date_str)
     # tool-side reconciliation happens under the language-marked exchange
     # name (S10): requests/returns carry it from the SFTP side, so the
@@ -230,73 +222,52 @@ def issues_set(
         "conv_id",
         with_language_marker(F.col("filename"), F.col("language")).alias("request_key"),
     )
-    if lifecycle is None and tool_calls is not None:
-        from .transcript import tool_call_lifecycle
-
-        lifecycle = tool_call_lifecycle(tool_calls)
-
-    upload_failed = None
-    if lifecycle is not None:
-        from ..functions.naming import strip_language_marker
-
-        # every request/return side below is a row-filter of the ONE keyed
-        # rollup: dedup_tool_calls membership == the kind-existence flags,
-        # the first-arrival ts == the null-first struct-min (see
-        # tool_call_lifecycle), and the anti-join-vs-exhausted == the
-        # negated exhausted predicate (lifecycle is one row per key).
-        # returned/n_attempts are non-null wherever has_request is true, so
-        # the negation cannot null-drop a key the anti-join would keep.
-        _exh = (~F.col("returned")) & (
-            F.col("n_attempts") >= cfg.max_push_attempts
-        )
-        # reconciliations below track files that reached the tool — a never-
-        # uploaded file is neither pending nor accountable on the tool side
-        req = lifecycle.filter(F.col("has_request") & ~_exh).select(
-            "conv_id", "request_key", F.col("first_request_ts").alias("ts")
-        )
-        req_all = lifecycle.filter("has_request").select(
-            "conv_id", "request_key"
-        )  # request EXISTENCE checks (missing-request)
-        ret = lifecycle.filter("returned").select("conv_id", "request_key")
-        exhausted = lifecycle.filter(_exh).select("conv_id", "request_key")
-        # req-vs-ret relations collapse to row predicates — both sides live
-        # on the SAME lifecycle row, so the anti/semi joins the legacy
-        # branch needs become filters (3 fewer joins in the issues plan)
-        no_return = lifecycle.filter(
-            F.col("has_request") & ~_exh & ~F.col("returned")
-        ).select("conv_id", "request_key", F.col("first_request_ts").alias("ts"))
-        orphan_src = lifecycle.filter(
-            F.col("returned") & ~F.col("has_request")
-        ).select("conv_id", "request_key")
-        round_trip = lifecycle.filter(
-            F.col("has_request") & F.col("returned")
-        ).select("conv_id", "request_key")
-        # flag under the LOCAL name: the stuck file sits in audio_to_send
-        # before the S10 rename. Language comes from the conversation's QC
-        # rows; with none (e.g. consent missing) the marked key is kept —
-        # a documented fallback, the flag still identifies the submission.
-        # ONE language per conv (min), so a conversation with QC rows in
-        # several languages cannot fan the exhausted key into multiple
-        # upload-failed rows; the pandas oracle picks the same min.
-        conv_lang = audio_qc_df.groupBy("conv_id").agg(
-            F.min("language").alias("language")
-        )
-        upload_failed = exhausted.join(F.broadcast(conv_lang), "conv_id", "left").select(
-            "conv_id",
-            strip_language_marker(F.col("request_key"), F.col("language")).alias(
-                "request_key"
-            ),
-        )
-    else:
-        # attempt-UNAWARE mode (no raw tool_calls): the caller hands the
-        # already-deduped request/return frames (the reconciliation driver
-        # query builds them directly)
-        req = requests.select("conv_id", "request_key", "ts")
-        req_all = req  # request EXISTENCE checks (orphan / missing-request)
-        ret = returns.select("conv_id", "request_key")
-        no_return = req.join(ret, ["conv_id", "request_key"], "left_anti")
-        orphan_src = ret.join(req_all, ["conv_id", "request_key"], "left_anti")
-        round_trip = None  # completed-audio runs its two semi-joins below
+    # every request/return side below is a row-filter of the ONE keyed
+    # rollup: dedup_tool_calls membership == the kind-existence flags,
+    # the first-arrival ts == the null-first struct-min (see
+    # tool_call_lifecycle), and the anti-join-vs-exhausted == the
+    # negated exhausted predicate (lifecycle is one row per key).
+    # returned/n_attempts are non-null wherever has_request is true, so
+    # the negation cannot null-drop a key the anti-join would keep.
+    _exh = (~F.col("returned")) & (
+        F.col("n_attempts") >= cfg.max_push_attempts
+    )
+    # reconciliations below track files that reached the tool — a never-
+    # uploaded file is neither pending nor accountable on the tool side
+    req = lifecycle.filter(F.col("has_request") & ~_exh).select(
+        "conv_id", "request_key", F.col("first_request_ts").alias("ts")
+    )
+    req_all = lifecycle.filter("has_request").select(
+        "conv_id", "request_key"
+    )  # request EXISTENCE checks (missing-request)
+    exhausted = lifecycle.filter(_exh).select("conv_id", "request_key")
+    # req-vs-ret relations collapse to row predicates — both sides live
+    # on the SAME lifecycle row, so they are filters, not anti/semi joins
+    no_return = lifecycle.filter(
+        F.col("has_request") & ~_exh & ~F.col("returned")
+    ).select("conv_id", "request_key", F.col("first_request_ts").alias("ts"))
+    orphan_src = lifecycle.filter(
+        F.col("returned") & ~F.col("has_request")
+    ).select("conv_id", "request_key")
+    round_trip = lifecycle.filter(
+        F.col("has_request") & F.col("returned")
+    ).select("conv_id", "request_key")
+    # flag under the LOCAL name: the stuck file sits in audio_to_send
+    # before the S10 rename. Language comes from the conversation's QC
+    # rows; with none (e.g. consent missing) the marked key is kept —
+    # a documented fallback, the flag still identifies the submission.
+    # ONE language per conv (min), so a conversation with QC rows in
+    # several languages cannot fan the exhausted key into multiple
+    # upload-failed rows; the pandas oracle picks the same min.
+    conv_lang = audio_qc_df.groupBy("conv_id").agg(
+        F.min("language").alias("language")
+    )
+    upload_failed = exhausted.join(F.broadcast(conv_lang), "conv_id", "left").select(
+        "conv_id",
+        strip_language_marker(F.col("request_key"), F.col("language")).alias(
+            "request_key"
+        ),
+    )
 
     def flag(df: DataFrame, stage: str, msg: str) -> DataFrame:
         return df.select(
@@ -347,11 +318,9 @@ def issues_set(
 
     all_issues = pending.unionByName(orphan).unionByName(no_qc).unionByName(
         missing_req
-    ).unionByName(violation)
-    if upload_failed is not None:
-        all_issues = all_issues.unionByName(
-            flag(upload_failed, "pre-transcript", MSG_UPLOAD_FAILED)
-        )
+    ).unionByName(violation).unionByName(
+        flag(upload_failed, "pre-transcript", MSG_UPLOAD_FAILED)
+    )
 
     # ---- output reconciliations (see docstring). Key columns are renamed on
     # the aggregate side: both sides share lineage with audio_qc_df and a
@@ -410,28 +379,13 @@ def issues_set(
                 "_marked"
             ),
         )
-        if round_trip is not None:
-            # lifecycle mode: round-trip membership is ONE key set (the
-            # request/return existence conjunction), not two semi-joins
-            completed = accepted_marked.join(
-                round_trip.select(
-                    "conv_id", F.col("request_key").alias("_marked")
-                ),
-                ["conv_id", "_marked"],
-                "left_semi",
-            )
-        else:
-            completed = accepted_marked.join(
-                req_all.select(
-                    "conv_id", F.col("request_key").alias("_marked")
-                ),
-                ["conv_id", "_marked"],
-                "left_semi",
-            ).join(
-                ret.select("conv_id", F.col("request_key").alias("_marked")),
-                ["conv_id", "_marked"],
-                "left_semi",
-            )
+        # round-trip membership is ONE key set (the request/return
+        # existence conjunction), not two semi-joins
+        completed = accepted_marked.join(
+            round_trip.select("conv_id", F.col("request_key").alias("_marked")),
+            ["conv_id", "_marked"],
+            "left_semi",
+        )
         completed = completed.join(
             violated_diaries.select("conv_id", "filename"),
             ["conv_id", "filename"],

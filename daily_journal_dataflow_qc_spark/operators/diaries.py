@@ -68,24 +68,36 @@ def diary_identity(
     sessioned: DataFrame, conv_meta: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """One row per diary (conv_id, session_id) with day / submission / hour
-    identity and the conv dimension attached.
-
-    Convs with no consent date are skipped entirely, matching the reference's
-    early return (mindlamp_accounting.py:21-25).
-    """
+    identity and the conv dimension attached."""
     per_session = sessioned.groupBy("conv_id", "session_id").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
         F.count("*").alias("n_turns"),
         F.max(F.col("tool").isNotNull()).alias("has_tool_tag"),
     )
+    return session_identity(per_session, conv_meta, cfg)
+
+
+def session_identity(
+    sessions: DataFrame, conv_meta: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """Identity of per-session rows (``conv_id``, ``session_start``): the
+    conv dimension broadcast-joined on, study day, submission rank and
+    canonical filename. The batch ``diary_identity`` and the streaming
+    foreachBatch (over a micro-batch of closed sessions) share it.
+
+    Convs with no consent date are skipped entirely, matching the reference's
+    early return (mindlamp_accounting.py:21-25).
+    """
     dim = conv_meta.filter(F.col("consent_date").isNotNull())
-    joined = per_session.join(F.broadcast(dim), "conv_id", "inner")
+    joined = sessions.join(F.broadcast(dim), "conv_id", "inner")
     assigned = with_day_assignment(
         joined, ts_col="session_start", day_shift_hour=cfg.day_shift_hour
     )
-    # global submission rank per (conv, study day), chronological — the
-    # engine-side fix of the reference's per-batch cumcount (SURVEY §7.3.1)
+    # chronological submission rank per (conv, study day) over the frame
+    # given: global in batch — the engine-side fix of the reference's
+    # per-batch cumcount — and per micro-batch in the stream, the
+    # reference's own semantics (SURVEY §7.3.1)
     w = Window.partitionBy("conv_id", "day").orderBy("session_start")
     return assigned.withColumn(
         "daily_submission_number", F.row_number().over(w)

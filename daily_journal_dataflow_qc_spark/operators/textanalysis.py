@@ -327,15 +327,15 @@ def ngram_lm_perplexity(
         # callers that care pass a list and unpersist() when done scoring
         cache_registry.append(bigrams)
     contexts = bigrams.groupBy("prev").agg(F.sum("_cpc").alias("_cp"))
-    # vocab size as ONE bounded driver scalar off the persisted (vocab-
-    # bounded, never corpus-bounded) LM table — r07: replaces a
-    # crossJoin(broadcast(1-row frame)) whose BroadcastNestedLoopJoin sat
-    # on the corpus-sized scoring side and cost a separate broadcast-build
-    # job; as a literal it also null-safely survives unseen contexts
-    v = bigrams.agg(F.countDistinct("cur").alias("_v")).head()[0] or 0
+    # vocab size as a scalar subquery off the persisted (vocab-bounded,
+    # never corpus-bounded) LM table: evaluated once at execution, so
+    # building the frame runs no Spark job, and unlike a crossJoin of a
+    # 1-row frame it puts no BroadcastNestedLoopJoin on the corpus-sized
+    # scoring side. A global aggregate always yields one non-null row.
+    v = bigrams.agg(F.countDistinct("cur")).scalar()
     logp = F.log(
         (F.coalesce(F.col("_cpc"), F.lit(0)) + k)
-        / (F.coalesce(F.col("_cp"), F.lit(0)) + k * (F.lit(v) + 1))
+        / (F.coalesce(F.col("_cp"), F.lit(0)) + k * (v + 1))
     )
     if train_df is None:
         # SELF-train: every scored bigram event exists in the LM table by

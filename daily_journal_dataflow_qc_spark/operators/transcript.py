@@ -218,32 +218,12 @@ def mindlamp_json_bug_adjust(
     return mp3_keep, json_keep, issues_keep
 
 
-def check_tool_call_mode(
-    requests: DataFrame | None,
-    returns: DataFrame | None,
-    *rollups: DataFrame | None,
-) -> None:
-    """Fail loudly unless exactly one tool-call input mode is given: the
-    deduped ``requests``/``returns`` pair, or a rollup source (``lifecycle``
-    or raw ``tool_calls``). Mixed frames would otherwise be silently
-    ignored, and a missing side would fail later on ``None.select``."""
-    legacy = requests is not None or returns is not None
-    rollup = any(r is not None for r in rollups)
-    if legacy and rollup:
-        raise ValueError(
-            "pass requests/returns OR lifecycle/tool_calls, not both"
-        )
-    if not rollup and (requests is None or returns is None):
-        raise ValueError(
-            "pass lifecycle/tool_calls, or both requests and returns"
-        )
-
-
 def returned_accepted_diaries(
     audio_qc_df: DataFrame,
-    requests: DataFrame | None,
-    returns: DataFrame | None,
-    lifecycle: DataFrame | None = None,
+    requests: object = None,
+    returns: object = None,
+    *,
+    lifecycle: DataFrame,
 ) -> DataFrame:
     """Accepted diaries whose transcript round-trip completed (J8 inner path).
 
@@ -253,27 +233,17 @@ def returned_accepted_diaries(
     finished transcript up under the same marked name,
     journal_transcribeme_sftp_pull.py:52-53).
 
-    ``lifecycle`` (a ``tool_call_lifecycle`` frame, usually the pipeline's
-    persisted copy): the round-trip key set is read off its
-    ``has_request AND returned`` flags — one aggregation instead of two
-    window dedups joined, identical membership (both ``dedup_tool_calls``
-    frames are one row per key, so their inner join IS the conjunction of
-    the kind-existence flags).
-
-    Exactly one input mode: ``lifecycle``, or ``requests`` AND ``returns``;
-    a mixed or empty call raises ``ValueError``."""
-    check_tool_call_mode(requests, returns, lifecycle)
+    ``lifecycle`` (a ``tool_call_lifecycle`` frame): the round-trip key set
+    is read off its ``has_request AND returned`` flags."""
+    # the two always-None slots keep perfbench/workloads.py's positional call
+    if requests is not None or returns is not None:
+        raise ValueError("requests/returns must be None; pass lifecycle=")
     accepted = audio_qc_df.filter(F.col("audio_approved_bool") == 1).withColumn(
         "_tool_key", with_language_marker(F.col("filename"), F.col("language"))
     )
-    if lifecycle is not None:
-        round_trip = lifecycle.filter(
-            F.col("has_request") & F.col("returned")
-        ).select("conv_id", F.col("request_key").alias("_tool_key"))
-    else:
-        req_keys = requests.select("conv_id", F.col("request_key").alias("_tool_key"))
-        ret_keys = returns.select("conv_id", F.col("request_key").alias("_tool_key"))
-        round_trip = req_keys.join(ret_keys, ["conv_id", "_tool_key"], "inner")
+    round_trip = lifecycle.filter(
+        F.col("has_request") & F.col("returned")
+    ).select("conv_id", F.col("request_key").alias("_tool_key"))
     return accepted.join(round_trip, ["conv_id", "_tool_key"], "left_semi").drop(
         "_tool_key"
     )

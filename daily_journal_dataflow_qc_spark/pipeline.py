@@ -83,9 +83,7 @@ def _build(
     # shuffle) once per consuming output job, so a caller that materializes
     # the outputs one after another should persist it.
     lifecycle = transcript_ops.tool_call_lifecycle(tool_calls)
-    returned = transcript_ops.returned_accepted_diaries(
-        qc, None, None, lifecycle=lifecycle
-    )
+    returned = transcript_ops.returned_accepted_diaries(qc, lifecycle=lifecycle)
 
     # THE heavy pass: join (prunes to returned-accepted turns) -> ts-side
     # gap windows -> redaction -> text-side metric projections -> the
@@ -135,8 +133,7 @@ def _build(
     # construction — and handing the per-turn frame here would re-read the
     # staged turns (or re-run the heavy pass) just to materialize issues.
     issues = compile_ops.issues_set(
-        qc, None, None, violated, cfg, lifecycle=lifecycle,
-        transcript_qc=tqc, disfluencies=disf,
+        qc, lifecycle, violated, cfg, transcript_qc=tqc, disfluencies=disf,
         turn_stats=tqc.select("conv_id", "day", "daily_submission_number"),
     )
 

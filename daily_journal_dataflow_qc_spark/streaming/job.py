@@ -36,11 +36,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from .. import schemas
-from ..functions.datetime_rules import proposed_processed_name, with_day_assignment
 from ..functions.naming import with_language_marker
+from ..operators import compile as compile_ops
+from ..operators.diaries import audio_qc, session_identity
 from ..operators.transcript import redact_projection, text_stats
 from ..sources.table_format import is_catalog_table, read_table
 from .keystore import IncrementalKeyStore
@@ -144,6 +146,43 @@ def _streamed_files(checkpoint_loc: str, batch_id: int) -> list[str] | None:
     return sorted(paths) or None
 
 
+def _read_stream(
+    spark: SparkSession,
+    location: str,
+    schema: StructType,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """Streaming scan of a catalog table or parquet directory, with the
+    ``maxFilesPerTrigger`` backpressure option when given."""
+    options = (
+        {"maxFilesPerTrigger": str(max_files_per_trigger)}
+        if max_files_per_trigger
+        else None
+    )
+    return read_table(spark, location, schema, streaming=True, options=options)
+
+
+def _read_admitted(
+    spark: SparkSession,
+    location: str,
+    schema: StructType,
+    checkpoint_loc: str,
+    batch_id: int,
+) -> DataFrame:
+    """Batch re-read of a stream's source, scoped to the files the stream
+    admitted through ``batch_id`` (see _streamed_files). A catalog table
+    (Iceberg path) has no FileStreamSource log, so it is read whole and
+    pruned by the caller's filters (a partition-pruned point read on a
+    time-partitioned production table; the snapshot-scoped equivalent is an
+    Iceberg as-of read at the batch's end offset). An unreadable log falls
+    back to the whole directory."""
+    if not is_catalog_table(location):
+        admitted = _streamed_files(checkpoint_loc, batch_id)
+        if admitted:
+            return spark.read.schema(schema).parquet(*admitted)
+    return read_table(spark, location, schema)
+
+
 def turn_projection(turns: DataFrame) -> DataFrame:
     """Stateless per-turn stage: redact + lower + sentence metrics — the
     batch heavy pass's per-turn projection, without its windows."""
@@ -239,39 +278,6 @@ def session_qc_aggregate(projected: DataFrame, cfg: PipelineConfig) -> DataFrame
     ).drop("all_ascii")
 
 
-def compile_batch(diary_rows: DataFrame, conv_meta: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """foreachBatch body: identity + acceptance on a micro-batch of closed
-    diary sessions (per-batch submission rank = reference semantics)."""
-    dim = conv_meta.filter(F.col("consent_date").isNotNull())
-    j = diary_rows.join(F.broadcast(dim), "conv_id", "inner")
-    j = with_day_assignment(j, ts_col="session_start", day_shift_hour=cfg.day_shift_hour)
-    w = Window.partitionBy("conv_id", "day").orderBy("session_start")
-    j = j.withColumn("daily_submission_number", F.row_number().over(w)).withColumn(
-        "filename",
-        proposed_processed_name(F.col("conv_id"), F.col("day"), F.col("daily_submission_number")),
-    )
-    corrupted = F.col("db_level").isNull() | F.col("duration_sec").isNull()
-    vol = F.round(F.col("db_level"), 2)
-    approved = (
-        F.when(corrupted, 0)
-        .when(
-            (vol < cfg.db_cutoff)
-            | (F.col("duration_sec") < cfg.length_cutoff_sec)
-            | (F.col("daily_submission_number") > 1),
-            0,
-        )
-        .otherwise(1)
-    )
-    return j.withColumns(
-        {
-            "length_minutes": F.when(corrupted, None).otherwise(F.round(F.col("duration_sec") / 60.0, 3)),
-            "overall_db": F.when(corrupted, None).otherwise(vol),
-            "mean_flatness": F.when(corrupted, None).otherwise(F.round(F.col("flatness"), 4)),
-            "audio_approved_bool": approved.cast("int"),
-        }
-    )
-
-
 def _trigger_kwargs(trigger_seconds: float | None) -> dict:
     """availableNow (drain-and-stop; default) vs a continuous
     processing-time trigger — the deployed CEP mode."""
@@ -300,20 +306,9 @@ def start_session_qc_query(
     Returns (query, {sink_name: IdempotentBatchSink}).
     """
     _apply_stream_conf(spark)
-    if is_catalog_table(input_dir):
-        # production path: an Iceberg (or other catalog) table — snapshots
-        # provide the incremental admission a file stream gets from its
-        # metadata log. The foreachBatch turn-stats rebuild's admitted-FILE
-        # scoping does not apply there; it falls back to the full-table read
-        # pruned by conv/ts (a partition-pruned point read on a
-        # time-partitioned production table).
-        turns = read_table(spark, input_dir, schemas.TRANSCRIPTS, streaming=True)
-    else:
-        reader = spark.readStream.schema(schemas.TRANSCRIPTS)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        turns = reader.parquet(input_dir)
-
+    # on a catalog table (Iceberg in production) snapshots provide the
+    # incremental admission a file stream gets from its metadata log
+    turns = _read_stream(spark, input_dir, schemas.TRANSCRIPTS, max_files_per_trigger)
     diary_stream = session_qc_aggregate(turn_projection(turns), cfg)
 
     sinks = {
@@ -359,8 +354,9 @@ def start_session_qc_query(
             # the stateful lineage processes every partition, then return.
             batch_df.write.format("noop").mode("overwrite").save()
             return
-        qc = compile_batch(batch_df, meta, cfg)
-        qc = qc.persist()
+        # the batch identity tail + acceptance predicate over this batch's
+        # closed sessions (per-batch submission rank = reference semantics)
+        qc = audio_qc(session_identity(batch_df, meta, cfg), cfg).persist()
         persisted = [qc]
         try:
             # materialize the cache ONCE before fanning out: concurrent
@@ -377,14 +373,10 @@ def start_session_qc_query(
             # separate IdempotentBatchSink instances (independent manifest
             # files), so concurrent commits stay exactly-once.
             accepted = qc.filter(F.col("audio_approved_bool") == 1)
+            # not compile_ops.rejected_set: its within-partition sort is
+            # wasted on a per-batch sink file
             rejected = qc.filter(F.col("audio_approved_bool") != 1).select(
-                "conv_id",
-                "day",
-                "daily_submission_number",
-                "overall_db",
-                "length_minutes",
-                "submit_hour_int",
-                "subject_consent_month",
+                *compile_ops.REJECTED_COLS
             )
             jobs = [
                 (sinks["audio_qc"].write, qc.drop("_ts_wc")),
@@ -503,25 +495,10 @@ def start_session_qc_query(
                     F.max("session_end").alias("hi"),
                 ).head()
                 if bounds and bounds["lo"] is not None:
-                    if is_catalog_table(input_dir):
-                        # catalog-table source (Iceberg path): no
-                        # FileStreamSource metadata log exists, so the rebuild
-                        # reads the TABLE in batch mode — pruned below by the
-                        # conv semi-join + ts range (a partition-pruned point
-                        # read on a time-partitioned production table; the
-                        # snapshot-scoped equivalent of the admitted-file list
-                        # is an Iceberg as-of read at the batch's end offset).
-                        raw_src = read_table(
-                            spark, input_dir, schemas.TRANSCRIPTS
-                        )
-                    else:
-                        admitted = _streamed_files(qc_checkpoint, batch_id)
-                        reader = spark.read.schema(schemas.TRANSCRIPTS)
-                        raw_src = (
-                            reader.parquet(*admitted)
-                            if admitted
-                            else reader.parquet(input_dir)
-                        )
+                    raw_src = _read_admitted(
+                        spark, input_dir, schemas.TRANSCRIPTS, qc_checkpoint,
+                        batch_id,
+                    )
                     # renamed key columns sidestep the self-lineage ambiguity
                     # (the semi-join side and the range-join side both derive
                     # from diary_keys)
@@ -614,13 +591,7 @@ def start_validator_query(
     _apply_stream_conf(spark)
     from .state import turn_stream_validator
 
-    if is_catalog_table(input_dir):
-        turns = read_table(spark, input_dir, schemas.TRANSCRIPTS, streaming=True)
-    else:
-        reader = spark.readStream.schema(schemas.TRANSCRIPTS)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        turns = reader.parquet(input_dir)
+    turns = _read_stream(spark, input_dir, schemas.TRANSCRIPTS, max_files_per_trigger)
     flags = turn_stream_validator(turns)
     sink = IdempotentBatchSink(output_root, "turn_flags")
 
@@ -670,13 +641,7 @@ def start_pending_flags_query(
     _apply_stream_conf(spark)
     from ..operators.transcript import push_attempt_stats
 
-    if is_catalog_table(tool_calls_dir):
-        tc = read_table(spark, tool_calls_dir, schemas.TOOL_CALLS, streaming=True)
-    else:
-        reader = spark.readStream.schema(schemas.TOOL_CALLS)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        tc = reader.parquet(tool_calls_dir)
+    tc = _read_stream(spark, tool_calls_dir, schemas.TOOL_CALLS, max_files_per_trigger)
     req = (
         tc.filter(F.col("kind") == "request")
         .select("conv_id", "request_key", F.col("ts").alias("req_ts"))
@@ -719,18 +684,10 @@ def start_pending_flags_query(
             # dedup state commits (see write_batch's replay note)
             df.write.format("noop").mode("overwrite").save()
             return
-        if is_catalog_table(tool_calls_dir):
-            # catalog-table source: batch read of the table (the semi-join
-            # below scopes the scan to the handful of keys emitting now)
-            tcb = read_table(spark, tool_calls_dir, schemas.TOOL_CALLS)
-        else:
-            admitted = _streamed_files(checkpoint, batch_id)
-            reader = spark.read.schema(schemas.TOOL_CALLS)
-            tcb = (
-                reader.parquet(*admitted)
-                if admitted
-                else reader.parquet(tool_calls_dir)
-            )
+        # the semi-join below scopes the scan to the keys emitting now
+        tcb = _read_admitted(
+            spark, tool_calls_dir, schemas.TOOL_CALLS, checkpoint, batch_id
+        )
         keys = df.select(
             F.col("conv_id").alias("_c"), F.col("filename").alias("_k")
         ).distinct()

@@ -6,6 +6,7 @@ oracle's accepted / rejected / flagged / per-turn row sets exactly
 import pandas as pd
 import pytest
 
+from daily_journal_dataflow_qc_spark import schemas
 from daily_journal_dataflow_qc_spark.oracle import pandas_oracle
 from daily_journal_dataflow_qc_spark.pipeline import run_batch_from_dir
 
@@ -109,14 +110,15 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
     transcript rows; c4 redacted-CSV product with no transcript-QC row;
     c5 violated diary — completed + no turn rows, but must be flagged
     pre-redaction ONLY (its pulled txt exists in the reference)."""
-    from pyspark.sql import functions as F
-
     from daily_journal_dataflow_qc_spark.operators.compile import (
         MSG_COMPLETED_NO_TRANSCRIPT,
         MSG_COMPLETED_NO_UNIQUE_QC,
         MSG_REDACTED_CSV_NO_TQC,
         MSG_REDACTION_VIOLATION,
         issues_set,
+    )
+    from daily_journal_dataflow_qc_spark.operators.transcript import (
+        tool_call_lifecycle,
     )
 
     def df(rows, cols):
@@ -136,11 +138,18 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
          "audio_approved_bool", "has_tool_tag"],
     )
     ts0 = pd.Timestamp(cfg.compute_date_str, tz="UTC")
-    reqs = df(
-        [(c, f"f{i}.wav", ts0) for i, c in enumerate(["c1", "c2", "c3", "c4", "c5"], 1)],
-        ["conv_id", "request_key", "ts"],
+    # every key pushed once and returned: a completed round trip
+    tool_calls = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (c, f"f{i}.wav", kind, "transcribeme", ts0, None)
+                for i, c in enumerate(["c1", "c2", "c3", "c4", "c5"], 1)
+                for kind in ("request", "return")
+            ],
+            columns=schemas.TOOL_CALLS.fieldNames(),
+        ),
+        schema=schemas.TOOL_CALLS,
     )
-    rets = reqs.select("conv_id", "request_key")
     violated = df([("c5", 1, 1, "f5.wav")],
                   ["conv_id", "day", "daily_submission_number", "filename"])
     tqc = df(
@@ -157,7 +166,7 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
     )
 
     got = issues_set(
-        aqc, reqs, rets, violated, cfg,
+        aqc, tool_call_lifecycle(tool_calls), violated, cfg,
         transcript_qc=tqc, disfluencies=disf, turn_stats=turns,
     ).toPandas()
     flags = set(zip(got.conv_id, got.filename, got.file_stage, got.error_message))

@@ -122,11 +122,15 @@ def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg):
 
 
 def test_compile_batch_joins_broadcast(spark, synth_dir, cfg):
-    """The foreachBatch compile stage must broadcast the conv_meta
-    dimension — a SortMergeJoin here would re-sort every micro-batch."""
+    """The foreachBatch compile stage (the shared identity tail + audio QC)
+    must broadcast the conv_meta dimension — a SortMergeJoin here would
+    re-sort every micro-batch."""
     import pandas as pd
 
-    from daily_journal_dataflow_qc_spark.streaming.job import compile_batch
+    from daily_journal_dataflow_qc_spark.operators.diaries import (
+        audio_qc,
+        session_identity,
+    )
 
     diary_rows = spark.createDataFrame(
         pd.DataFrame(
@@ -140,7 +144,7 @@ def test_compile_batch_joins_broadcast(spark, synth_dir, cfg):
     )
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     plan = (
-        compile_batch(diary_rows, conv_meta, cfg)
+        audio_qc(session_identity(diary_rows, conv_meta, cfg), cfg)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

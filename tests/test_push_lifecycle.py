@@ -72,7 +72,7 @@ def test_issues_upload_failed_replaces_pending(spark, cfg):
     tc = _tool_calls(spark)
     qc = _audio_qc(spark)
     violated = spark.createDataFrame([], "conv_id string, filename string")
-    issues = issues_set(qc, None, None, violated, cfg, tool_calls=tc).toPandas()
+    issues = issues_set(qc, tool_call_lifecycle(tc), violated, cfg).toPandas()
 
     failed = issues[issues.error_message == MSG_UPLOAD_FAILED]
     assert set(zip(failed.conv_id, failed.filename)) == {("c1", LOCAL_1)}
@@ -82,38 +82,11 @@ def test_issues_upload_failed_replaces_pending(spark, cfg):
     assert set(zip(pending.conv_id, pending.filename)) == {("c3", MARKED_3)}
 
 
-def test_mixed_tool_call_inputs_raise(spark, cfg):
-    """requests/returns together with lifecycle/tool_calls are two input
-    modes at once; neither mode at all is no input. Both fail loudly
-    instead of silently ignoring a frame or crashing on ``None.select``."""
-    tc = _tool_calls(spark)
-    qc = _audio_qc(spark)
-    requests = dedup_tool_calls(tc, "request")
-    returns = dedup_tool_calls(tc, "return")
-    lifecycle = tool_call_lifecycle(tc)
-    violated = spark.createDataFrame([], "conv_id string, filename string")
-
-    for kwargs in ({"tool_calls": tc}, {"lifecycle": lifecycle}):
-        with pytest.raises(ValueError, match="not both"):
-            issues_set(qc, requests, returns, violated, cfg, **kwargs)
-    with pytest.raises(ValueError, match="not both"):
-        issues_set(qc, requests, None, violated, cfg, tool_calls=tc)
-    with pytest.raises(ValueError, match="not both"):
-        returned_accepted_diaries(qc, requests, returns, lifecycle=lifecycle)
-
-    with pytest.raises(ValueError, match="both requests and returns"):
-        issues_set(qc, None, None, violated, cfg)
-    with pytest.raises(ValueError, match="both requests and returns"):
-        issues_set(qc, requests, None, violated, cfg)
-    with pytest.raises(ValueError, match="both requests and returns"):
-        returned_accepted_diaries(qc, None, None)
-
-
 def test_clear_resolved_push_errors(spark, cfg):
     tc = _tool_calls(spark)
     qc = _audio_qc(spark)
     violated = spark.createDataFrame([], "conv_id string, filename string")
-    issues = issues_set(qc, None, None, violated, cfg, tool_calls=tc)
+    issues = issues_set(qc, tool_call_lifecycle(tc), violated, cfg)
 
     # later stream state: c1's push finally succeeded and returned
     fixed = pd.DataFrame(
@@ -206,17 +179,18 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
                and r["n_attempts"] >= cfg.max_push_attempts}
     assert exh_new == exh_old == {("k4", "f4.wav")}
 
-    # returned_accepted_diaries: lifecycle fast path == the two-window join
+    # returned_accepted_diaries: only the accepted, round-tripped k1; the
+    # two legacy positional slots take nothing but None
     qc = spark.createDataFrame(
         [("k1", "f1.wav", "", 1), ("k4", "f4.wav", "", 1), ("k5", "f5.wav", "", 0)],
         "conv_id string, filename string, language string, audio_approved_bool int",
     )
-    old = returned_accepted_diaries(
-        qc, dedup_tool_calls(tc, "request"), dedup_tool_calls(tc, "return")
-    )
-    new = returned_accepted_diaries(qc, None, None, lifecycle=tool_call_lifecycle(tc))
-    assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
+    lifecycle = tool_call_lifecycle(tc)
+    new = returned_accepted_diaries(qc, None, None, lifecycle=lifecycle)
     assert [r["conv_id"] for r in new.collect()] == ["k1"]
+    for slots in ((tc, None), (None, tc)):
+        with pytest.raises(ValueError, match="requests/returns"):
+            returned_accepted_diaries(qc, *slots, lifecycle=lifecycle)
 
     # NULL-ts robustness (schemas.TOOL_CALLS pins ts non-null, but the
     # rollup must not silently substitute a later real timestamp if fed a

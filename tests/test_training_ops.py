@@ -1116,6 +1116,33 @@ def test_lm_cache_registry_exposes_persisted_table(spark):
     assert not reg[0].is_cached
 
 
+def test_ngram_lm_perplexity_build_runs_no_job(spark):
+    """Building the perplexity frame is lazy: the vocab size is a scalar
+    subquery, not a driver-side action. Jobs are counted under a job
+    group set around the build, then around one action as a control."""
+    from daily_journal_dataflow_qc_spark.operators.textanalysis import (
+        ngram_lm_perplexity,
+    )
+
+    d = _docs(spark)
+    sc = spark.sparkContext
+    group = "ngram-lm-build"
+    tracker = sc.statusTracker()
+    reg: list = []
+    sc.setJobGroup(group, "ngram_lm_perplexity build")
+    try:
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        out = ngram_lm_perplexity(d, cache_registry=reg)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        out.collect()
+        assert len(tracker.getJobIdsForGroup(group)) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        for df in reg:
+            df.unpersist()
+
+
 def test_budget_admit_rejects_null_token_counts():
     """A null n_tokens row in the admitted store must fail the budget
     stream with a contract message, not an opaque numpy cast error."""
