@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.naming import strip_language_marker, with_language_marker
+from .transcript import retries_exhausted
 
 # reference message strings (journal_outputs_error_check.py:76-182;
 # phone_transcript_redaction.py:70)
@@ -162,26 +163,37 @@ def issues_set(
     lifecycle: DataFrame,
     violated_diaries: DataFrame,
     cfg: PipelineConfig,
-    transcript_qc: DataFrame | None = None,
-    disfluencies: DataFrame | None = None,
-    turn_stats: DataFrame | None = None,
+    transcript_qc: DataFrame,
+    disfluencies: DataFrame,
+    turn_stats: DataFrame,
 ) -> DataFrame:
-    """The major-issues log (flagged row set), deduped keeping the earliest
-    detection date (journal_outputs_error_check.py:199-214, O4).
+    """The major-issues log (flagged row set), built the way the reference
+    sweeps its files: every rule checked against one row, then deduped on
+    the issue identity (journal_outputs_error_check.py:76-214).
 
     ``lifecycle`` is a ``transcript.tool_call_lifecycle`` frame — the one
-    keyed rollup of the tool-call stream every request/return family reads.
-    The S8 push lifecycle is attempt-aware: a key with >=
-    cfg.max_push_attempts request rows and no return exhausted its retries
-    (journal_transcribeme_sftp_push.py:166-191)
-    — it is flagged 'TranscribeMe SFTP upload failed' under its LOCAL name
-    (the file never left audio_to_send, subject_summaries_update.sh:127-143)
-    and is EXCLUDED from the pending / no-QC reconciliations, which track
-    files that actually reached the tool.
+    keyed rollup of the tool-call stream. It is joined FULL OUTER to the
+    accepted diaries on the marked tool-side key, and the six tool-call
+    families are one rule table over that frame:
 
-    When the transcript-side outputs are given, three OUTPUT-RECONCILIATION
-    families run (all empty on a healthy run — they detect output drift, the
-    reference's post-hoc consistency sweep over its own CSV/file artifacts):
+    * pending (J7), orphan return, request with no QC, missing request (J6),
+    * upload failed: the S8 push lifecycle is attempt-aware — a key with >=
+      cfg.max_push_attempts request rows and no return exhausted its
+      retries (journal_transcribeme_sftp_push.py:166-191). It is flagged
+      'TranscribeMe SFTP upload failed' under its LOCAL name (the file
+      never left audio_to_send, subject_summaries_update.sh:127-143) and is
+      EXCLUDED from the pending / no-QC reconciliations, which track files
+      that actually reached the tool,
+    * completed audio vs pulled transcript (subject_summaries_update.sh:
+      264): an accepted diary whose tool round trip RETURNED (the graft of
+      completed_audio membership) must have per-turn transcript rows.
+      Redaction-violated diaries are excluded — their pulled txt exists in
+      the reference (the redaction step discards the CSV downstream), and
+      they are already flagged 'pre-redaction'.
+
+    Two more OUTPUT-RECONCILIATION families are uniqueness checks (both
+    empty on a healthy run — they detect output drift, the reference's
+    post-hoc consistency sweep over its own CSV/file artifacts):
 
     * completed-pipeline vs audio QC uniqueness (journal_outputs_error_
       check.py:76,84): every transcript-QC row evidences a wav that
@@ -191,13 +203,7 @@ def issues_set(
     * redacted CSV vs transcript QC (journal_outputs_error_check.py:151,
       159): each disfluency-summary row evidences the redacted CSV the
       sentence-stats step consumed; transcript QC computed from that same
-      CSV must have exactly one row for the key,
-    * completed audio vs pulled transcript (subject_summaries_update.
-      sh:264): an accepted diary whose tool round trip RETURNED (the graft
-      of completed_audio membership) must have per-turn transcript rows.
-      Redaction-violated diaries are excluded — their pulled txt exists in
-      the reference (the redaction step discards the CSV downstream), and
-      they are already flagged 'pre-redaction'.
+      CSV must have exactly one row for the key.
 
     The remaining reference crash-stage flags (ffmpeg failed, temp_audio
     leftover, 'Audio QC function crashed', 'Calculation of transcript stats
@@ -206,13 +212,14 @@ def issues_set(
     there is no per-row crash state to reconcile, so they are documented
     inapplicable (ARCHITECTURE §2 notes).
 
-    The pipeline shares one (unpersisted) lifecycle copy across the
-    round-trip semi-join and every family here. Each request/return side is
-    a row-filter of that rollup, not a per-family ``dedup_tool_calls``
-    window derivation, which Catalyst cannot exchange-reuse across the
-    families: per-consumer pruning breaks canonical equality, so the
-    un-restructured plan carried 56 tool-call scans and 45 exchanges."""
+    O4 (keep the earliest detection date per issue identity) reduces to
+    ``distinct``: every row of one run carries the same compute date.
+
+    One frame, not a subplan per family: row-filtered copies of the rollup
+    are pruned differently per consumer, so Catalyst cannot reuse them and
+    each copy re-scans and re-aggregates the tool calls."""
     today = F.lit(cfg.compute_date_str)
+    diary_key = ["conv_id", "day", "daily_submission_number"]
     # tool-side reconciliation happens under the language-marked exchange
     # name (S10): requests/returns carry it from the SFTP side, so the
     # engine's accepted keys are marked before matching. Redaction-violation
@@ -221,52 +228,104 @@ def issues_set(
     accepted_keys = audio_qc_df.filter(F.col("audio_approved_bool") == 1).select(
         "conv_id",
         with_language_marker(F.col("filename"), F.col("language")).alias("request_key"),
+        "has_tool_tag",
+        "day",
+        "daily_submission_number",
+        "filename",
+        F.lit(True).alias("_accepted"),
     )
-    # every request/return side below is a row-filter of the ONE keyed
-    # rollup: dedup_tool_calls membership == the kind-existence flags,
-    # the first-arrival ts == the null-first struct-min (see
-    # tool_call_lifecycle), and the anti-join-vs-exhausted == the
-    # negated exhausted predicate (lifecycle is one row per key).
-    # returned/n_attempts are non-null wherever has_request is true, so
-    # the negation cannot null-drop a key the anti-join would keep.
-    _exh = (~F.col("returned")) & (
-        F.col("n_attempts") >= cfg.max_push_attempts
-    )
-    # reconciliations below track files that reached the tool — a never-
-    # uploaded file is neither pending nor accountable on the tool side
-    req = lifecycle.filter(F.col("has_request") & ~_exh).select(
-        "conv_id", "request_key", F.col("first_request_ts").alias("ts")
-    )
-    req_all = lifecycle.filter("has_request").select(
-        "conv_id", "request_key"
-    )  # request EXISTENCE checks (missing-request)
-    exhausted = lifecycle.filter(_exh).select("conv_id", "request_key")
-    # req-vs-ret relations collapse to row predicates — both sides live
-    # on the SAME lifecycle row, so they are filters, not anti/semi joins
-    no_return = lifecycle.filter(
-        F.col("has_request") & ~_exh & ~F.col("returned")
-    ).select("conv_id", "request_key", F.col("first_request_ts").alias("ts"))
-    orphan_src = lifecycle.filter(
-        F.col("returned") & ~F.col("has_request")
-    ).select("conv_id", "request_key")
-    round_trip = lifecycle.filter(
-        F.col("has_request") & F.col("returned")
-    ).select("conv_id", "request_key")
-    # flag under the LOCAL name: the stuck file sits in audio_to_send
-    # before the S10 rename. Language comes from the conversation's QC
-    # rows; with none (e.g. consent missing) the marked key is kept —
-    # a documented fallback, the flag still identifies the submission.
-    # ONE language per conv (min), so a conversation with QC rows in
-    # several languages cannot fan the exhausted key into multiple
+    # upload failed is flagged under the LOCAL name: the stuck file sits in
+    # audio_to_send before the S10 rename. Language comes from the
+    # conversation's QC rows; with none (e.g. consent missing) the marked
+    # key is kept — a documented fallback, the flag still identifies the
+    # submission. ONE language per conv (min), so a conversation with QC
+    # rows in several languages cannot fan the exhausted key into multiple
     # upload-failed rows; the pandas oracle picks the same min.
     conv_lang = audio_qc_df.groupBy("conv_id").agg(
         F.min("language").alias("language")
     )
-    upload_failed = exhausted.join(F.broadcast(conv_lang), "conv_id", "left").select(
-        "conv_id",
-        strip_language_marker(F.col("request_key"), F.col("language")).alias(
-            "request_key"
+    # USING joins: every side shares lineage with audio_qc_df, and a
+    # same-name equi-join on column expressions would hit
+    # AMBIGUOUS_REFERENCE. One row per (lifecycle key | accepted diary);
+    # the presence flags are NULL where a side has no row.
+    frame = (
+        lifecycle.join(accepted_keys, ["conv_id", "request_key"], "full")
+        .join(F.broadcast(conv_lang), "conv_id", "left")
+        .join(
+            violated_diaries.select(
+                "conv_id", "filename", F.lit(True).alias("_violated")
+            ),
+            ["conv_id", "filename"],
+            "left",
+        )
+        .join(
+            turn_stats.select(*diary_key).distinct()
+            .withColumn("_has_turns", F.lit(True)),
+            diary_key,
+            "left",
+        )
+    )
+
+    def present(name: str):
+        return F.coalesce(F.col(name), F.lit(False))
+
+    accepted, has_request, returned = (
+        present("_accepted"), present("has_request"), present("returned")
+    )
+    exhausted = F.coalesce(retries_exhausted(cfg), F.lit(False))
+    # reconciliations below track files that reached the tool — a never-
+    # uploaded file is neither pending nor accountable on the tool side
+    reached_tool = has_request & ~exhausted
+    marked = F.col("request_key")
+    rules = [
+        # J7: request with no return, older than the deadline (a NULL
+        # first-arrival ts has no age: the condition is NULL, no flag)
+        (
+            reached_tool & ~returned & (
+                F.datediff(F.to_date(today), F.to_date("first_request_ts"))
+                >= cfg.pending_deadline_days
+            ),
+            marked, "pre-transcript", MSG_PENDING,
         ),
+        # J6: return with no request (orphan)
+        (returned & ~has_request, marked, "pre-wav", MSG_ORPHAN_RETURN),
+        # J6: request whose diary is not in the accepted audio QC set
+        (reached_tool & ~accepted, marked, "post-audioQC", MSG_REQUEST_NO_QC),
+        # J6: accepted tool-tagged diary with no request record
+        (
+            accepted & present("has_tool_tag") & ~has_request,
+            marked, "pre-wav", MSG_MISSING_REQUEST,
+        ),
+        # S8: retries exhausted, under the LOCAL name (see conv_lang)
+        (
+            exhausted,
+            strip_language_marker(marked, F.col("language")),
+            "pre-transcript", MSG_UPLOAD_FAILED,
+        ),
+        # completed (round trip returned), not violated, no turn rows
+        (
+            accepted & has_request & returned & ~present("_violated")
+            & ~present("_has_turns"),
+            F.col("filename"), "pre-transcript", MSG_COMPLETED_NO_TRANSCRIPT,
+        ),
+    ]
+    rule_flags = F.array(*[
+        F.when(cond, F.struct(
+            key.alias("filename"),
+            F.lit(stage).alias("file_stage"),
+            F.lit(msg).alias("error_message"),
+        ))
+        for cond, key, stage, msg in rules
+    ])
+    # the array gets its own Project: next to a sibling column inside the
+    # explode's select, the Generate would re-derive it per output row.
+    # explode_outer: the array has one slot per rule, never empty, and a
+    # plain explode makes the optimizer re-derive it in a size() > 0 filter
+    tool_issues = (
+        frame.select("conv_id", rule_flags.alias("_flags"))
+        .select("conv_id", F.explode_outer("_flags").alias("_f"))
+        .filter(F.col("_f").isNotNull())
+        .select(today.alias("date_detected"), "conv_id", "_f.*")
     )
 
     def flag(df: DataFrame, stage: str, msg: str) -> DataFrame:
@@ -278,37 +337,6 @@ def issues_set(
             F.lit(msg).alias("error_message"),
         )
 
-    # J7: request with no return, older than the deadline -> pending flag
-    pending = flag(
-        no_return.filter(
-            F.datediff(F.to_date(today), F.to_date("ts")) >= cfg.pending_deadline_days
-        ),
-        "pre-transcript",
-        MSG_PENDING,
-    )
-    # J6: return with no request (orphan)
-    orphan = flag(orphan_src, "pre-wav", MSG_ORPHAN_RETURN)
-    # J6: request whose diary is not in the accepted audio QC set
-    no_qc = flag(
-        req.join(accepted_keys, ["conv_id", "request_key"], "left_anti"),
-        "post-audioQC",
-        MSG_REQUEST_NO_QC,
-    )
-    # J6: accepted tool-tagged diary with no request record
-    missing_req = flag(
-        audio_qc_df.filter(
-            (F.col("audio_approved_bool") == 1) & F.col("has_tool_tag")
-        )
-        .select(
-            "conv_id",
-            with_language_marker(F.col("filename"), F.col("language")).alias(
-                "request_key"
-            ),
-        )
-        .join(req_all, ["conv_id", "request_key"], "left_anti"),
-        "pre-wav",
-        MSG_MISSING_REQUEST,
-    )
     # redaction violations (phone_transcript_redaction.py:69-72)
     violation = flag(
         violated_diaries.select("conv_id", F.col("filename").alias("request_key")),
@@ -316,18 +344,10 @@ def issues_set(
         MSG_REDACTION_VIOLATION,
     )
 
-    all_issues = pending.unionByName(orphan).unionByName(no_qc).unionByName(
-        missing_req
-    ).unionByName(violation).unionByName(
-        flag(upload_failed, "pre-transcript", MSG_UPLOAD_FAILED)
-    )
-
-    # ---- output reconciliations (see docstring). Key columns are renamed on
-    # the aggregate side: both sides share lineage with audio_qc_df and a
-    # same-name equi-join would hit AMBIGUOUS_REFERENCE. All bases are
-    # diary-grain (small) — AQE broadcasts the joins.
-    diary_key = ["conv_id", "day", "daily_submission_number"]
-
+    # ---- uniqueness reconciliations (see docstring). Key columns are
+    # renamed on the aggregate side: both sides share lineage with
+    # audio_qc_df and a same-name equi-join would hit AMBIGUOUS_REFERENCE.
+    # All bases are diary-grain (small) — AQE broadcasts the joins.
     def _counts(df: DataFrame, name: str) -> DataFrame:
         return df.groupBy(
             *[F.col(c).alias(f"_{name}_{c}") for c in diary_key]
@@ -343,75 +363,30 @@ def issues_set(
             .select("conv_id", "request_key")
         )
 
-    if transcript_qc is not None:
-        base_a = transcript_qc.select(
-            *diary_key, F.col("filename").alias("request_key")
-        ).distinct()
-        all_issues = all_issues.unionByName(
-            flag(
-                _not_unique(base_a, _counts(audio_qc_df, "aqc"), "aqc"),
-                "post-audioQC",
-                MSG_COMPLETED_NO_UNIQUE_QC,
-            )
+    base_a = transcript_qc.select(
+        *diary_key, F.col("filename").alias("request_key")
+    ).distinct()
+    base_b = disfluencies.select(
+        *diary_key,
+        F.concat(
+            F.regexp_replace("filename", "\\.wav$", ""),
+            F.lit("_REDACTED.csv"),
+        ).alias("request_key"),
+    ).distinct()
+    all_issues = tool_issues.unionByName(violation).unionByName(
+        flag(
+            _not_unique(base_a, _counts(audio_qc_df, "aqc"), "aqc"),
+            "post-audioQC",
+            MSG_COMPLETED_NO_UNIQUE_QC,
         )
-    if disfluencies is not None and transcript_qc is not None:
-        base_b = disfluencies.select(
-            *diary_key,
-            F.concat(
-                F.regexp_replace("filename", "\\.wav$", ""),
-                F.lit("_REDACTED.csv"),
-            ).alias("request_key"),
-        ).distinct()
-        all_issues = all_issues.unionByName(
-            flag(
-                _not_unique(base_b, _counts(transcript_qc, "tqc"), "tqc"),
-                "pre-transcriptQC",
-                MSG_REDACTED_CSV_NO_TQC,
-            )
+    ).unionByName(
+        flag(
+            _not_unique(base_b, _counts(transcript_qc, "tqc"), "tqc"),
+            "pre-transcriptQC",
+            MSG_REDACTED_CSV_NO_TQC,
         )
-    if turn_stats is not None:
-        accepted_marked = audio_qc_df.filter(
-            F.col("audio_approved_bool") == 1
-        ).select(
-            *diary_key,
-            "filename",
-            with_language_marker(F.col("filename"), F.col("language")).alias(
-                "_marked"
-            ),
-        )
-        # round-trip membership is ONE key set (the request/return
-        # existence conjunction), not two semi-joins
-        completed = accepted_marked.join(
-            round_trip.select("conv_id", F.col("request_key").alias("_marked")),
-            ["conv_id", "_marked"],
-            "left_semi",
-        )
-        completed = completed.join(
-            violated_diaries.select("conv_id", "filename"),
-            ["conv_id", "filename"],
-            "left_anti",
-        )
-        ts_ids = turn_stats.select(
-            *[F.col(c).alias(f"_ts_{c}") for c in diary_key]
-        ).distinct()
-        bad_c = (
-            completed.join(
-                ts_ids,
-                [F.col(c) == F.col(f"_ts_{c}") for c in diary_key],
-                "left_anti",
-            )
-            .select("conv_id", F.col("filename").alias("request_key"))
-        )
-        all_issues = all_issues.unionByName(
-            flag(bad_c, "pre-transcript", MSG_COMPLETED_NO_TRANSCRIPT)
-        )
-    # O4: keep-earliest dedup on the full issue identity
-    w = Window.partitionBy(
-        "conv_id", "filename", "file_stage", "error_message"
-    ).orderBy("date_detected")
-    return (
-        all_issues.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .sortWithinPartitions("date_detected", "conv_id", "filename", "file_stage")
+    )
+    # O4: one compute date per run, so keep-earliest is distinct
+    return all_issues.distinct().sortWithinPartitions(
+        "date_detected", "conv_id", "filename", "file_stage"
     )

@@ -19,7 +19,7 @@ Parity traps honored (SURVEY.md §7.3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -109,6 +109,14 @@ def tool_call_lifecycle(tool_calls: DataFrame) -> DataFrame:
         F.max(is_req).alias("has_request"),
         F.max(F.col("kind") == "return").alias("returned"),
     )
+
+
+def retries_exhausted(cfg: PipelineConfig) -> Column:
+    """S8 exhausted-retries predicate over a ``push_attempt_stats`` or
+    ``tool_call_lifecycle`` row: cfg.max_push_attempts attempts and no
+    return — the file is still in audio_to_send
+    (journal_transcribeme_sftp_push.py:166-191)."""
+    return (~F.col("returned")) & (F.col("n_attempts") >= cfg.max_push_attempts)
 
 
 def clear_resolved_push_errors(

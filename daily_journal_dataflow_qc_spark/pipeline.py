@@ -69,19 +69,19 @@ def _build(
     diaries = diary_ops.diary_identity(sessioned, conv_meta, cfg)
     qc = diary_ops.audio_qc(diaries, cfg).persist()  # diary-level: small
 
-    # tool-call round trip (J8 batch form): ONE keyed rollup shape of the
-    # tool-call stream feeds the round-trip semi-join AND every issues
-    # reconciliation family (the per-family dedup_tool_calls windows were
-    # re-derived up to 15x in the issues plan — Catalyst cannot exchange-
-    # reuse them across consumers once pruning specializes each copy).
-    # Deliberately NOT persisted: the blocking cache build lands on the
-    # heavy staged write's critical path and was A/B-measured to cost more
-    # than the sub-second per-consumer re-aggregations it saves (which
-    # overlap inside the concurrent output jobs) — the same verdict as the
-    # rejected requests/returns persist. The verdict holds only while the
-    # output jobs overlap: the rollup is recomputed (full tool_calls scan +
-    # shuffle) once per consuming output job, so a caller that materializes
-    # the outputs one after another should persist it.
+    # tool-call round trip (J8 batch form): ONE keyed rollup of the
+    # tool-call stream feeds the round-trip semi-join AND the issues log,
+    # whose tool-call families are one rule pass over one lifecycle x
+    # accepted-keys frame (per-family copies cannot be exchange-reused
+    # once pruning specializes each one). Deliberately NOT persisted: the
+    # blocking cache build lands on the heavy staged write's critical path
+    # and was A/B-measured to cost more than the sub-second per-consumer
+    # re-aggregations it saves (which overlap inside the concurrent output
+    # jobs) — the same verdict as the rejected requests/returns persist.
+    # The verdict holds only while the output jobs overlap: the rollup is
+    # recomputed (full tool_calls scan + shuffle) once per consuming output
+    # job, so a caller that materializes the outputs one after another
+    # should persist it.
     lifecycle = transcript_ops.tool_call_lifecycle(tool_calls)
     returned = transcript_ops.returned_accepted_diaries(qc, lifecycle=lifecycle)
 

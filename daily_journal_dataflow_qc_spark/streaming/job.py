@@ -639,7 +639,7 @@ def start_pending_flags_query(
       backoff) has long been admitted and the count is exact.
     """
     _apply_stream_conf(spark)
-    from ..operators.transcript import push_attempt_stats
+    from ..operators.transcript import push_attempt_stats, retries_exhausted
 
     tc = _read_stream(spark, tool_calls_dir, schemas.TOOL_CALLS, max_files_per_trigger)
     req = (
@@ -671,9 +671,7 @@ def start_pending_flags_query(
         F.col("request_key").alias("filename"),
         F.col("req_ts"),
         F.lit("pre-transcript").alias("file_stage"),
-        F.lit(
-            "File has been pending return from TranscribeMe for over 2 weeks now"
-        ).alias("error_message"),
+        F.lit(compile_ops.MSG_PENDING).alias("error_message"),
     )
     sink = IdempotentBatchSink(output_root, "pending_flags")
     checkpoint = os.path.join(output_root, "_checkpoint_pending")
@@ -698,10 +696,7 @@ def start_pending_flags_query(
         )
         exhausted = (
             push_attempt_stats(scoped)
-            .filter(
-                (~F.col("returned"))
-                & (F.col("n_attempts") >= cfg.max_push_attempts)
-            )
+            .filter(retries_exhausted(cfg))
             .select("conv_id", F.col("request_key").alias("filename"))
         )
         out = df.join(F.broadcast(exhausted), ["conv_id", "filename"], "left_anti")

@@ -109,12 +109,22 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
     rank's real failure mode); c3 completed round trip but no per-turn
     transcript rows; c4 redacted-CSV product with no transcript-QC row;
     c5 violated diary — completed + no turn rows, but must be flagged
-    pre-redaction ONLY (its pulled txt exists in the reference)."""
+    pre-redaction ONLY (its pulled txt exists in the reference).
+
+    Tool-call rules that meet on one key: c6 return-only key of an accepted
+    tool-tagged diary (orphan AND missing request); c7 exhausted retries of
+    an accepted diary (upload failed only — no no-QC, no missing request);
+    c8 duplicated accepted identity with an overdue request (ONE pending
+    row)."""
     from daily_journal_dataflow_qc_spark.operators.compile import (
         MSG_COMPLETED_NO_TRANSCRIPT,
         MSG_COMPLETED_NO_UNIQUE_QC,
+        MSG_MISSING_REQUEST,
+        MSG_ORPHAN_RETURN,
+        MSG_PENDING,
         MSG_REDACTED_CSV_NO_TQC,
         MSG_REDACTION_VIOLATION,
+        MSG_UPLOAD_FAILED,
         issues_set,
     )
     from daily_journal_dataflow_qc_spark.operators.transcript import (
@@ -131,6 +141,10 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
         ("c3", 1, 1, "f3.wav", "ENGLISH", 1, True),
         ("c4", 1, 1, "f4.wav", "ENGLISH", 1, True),
         ("c5", 1, 1, "f5.wav", "ENGLISH", 1, True),
+        ("c6", 1, 1, "f6.wav", "ENGLISH", 1, True),
+        ("c7", 1, 1, "f7.wav", "ENGLISH", 1, True),
+        ("c8", 1, 1, "f8.wav", "ENGLISH", 1, True),
+        ("c8", 1, 1, "f8.wav", "ENGLISH", 1, True),  # duplicate identity
     ]
     aqc = df(
         aqc_rows,
@@ -138,14 +152,22 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
          "audio_approved_bool", "has_tool_tag"],
     )
     ts0 = pd.Timestamp(cfg.compute_date_str, tz="UTC")
-    # every key pushed once and returned: a completed round trip
+    old = ts0 - pd.Timedelta(days=cfg.pending_deadline_days + 1)
+    # c1-c5 pushed once and returned: a completed round trip
     tool_calls = spark.createDataFrame(
         pd.DataFrame(
             [
                 (c, f"f{i}.wav", kind, "transcribeme", ts0, None)
                 for i, c in enumerate(["c1", "c2", "c3", "c4", "c5"], 1)
                 for kind in ("request", "return")
-            ],
+            ]
+            + [("c6", "f6.wav", "return", "transcribeme", ts0, None)]
+            + [
+                ("c7", "f7.wav", "request", "transcribeme",
+                 old + pd.Timedelta(seconds=5 * a), None)
+                for a in range(cfg.max_push_attempts)
+            ]
+            + [("c8", "f8.wav", "request", "transcribeme", old, None)],
             columns=schemas.TOOL_CALLS.fieldNames(),
         ),
         schema=schemas.TOOL_CALLS,
@@ -175,6 +197,10 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
         ("c3", "f3.wav", "pre-transcript", MSG_COMPLETED_NO_TRANSCRIPT),
         ("c4", "f4_REDACTED.csv", "pre-transcriptQC", MSG_REDACTED_CSV_NO_TQC),
         ("c5", "f5.wav", "pre-redaction", MSG_REDACTION_VIOLATION),
+        ("c6", "f6.wav", "pre-wav", MSG_ORPHAN_RETURN),
+        ("c6", "f6.wav", "pre-wav", MSG_MISSING_REQUEST),
+        ("c7", "f7.wav", "pre-transcript", MSG_UPLOAD_FAILED),
+        ("c8", "f8.wav", "pre-transcript", MSG_PENDING),
     }, flags
     # dedup invariant: one row per issue identity even with duplicated bases
-    assert len(got) == 4
+    assert len(got) == 8

@@ -23,6 +23,20 @@ def _staged_heavy_pass(spark, synth_dir, cfg):
     return captured[0]
 
 
+def _final_plan_nodes(plan):
+    """Every operator of an executed plan, descending through the adaptive
+    wrapper and its query stages. InMemoryTableScan is a leaf here: its
+    cached plan runs once, however many consumers read it."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _final_plan_nodes(plan.executedPlan())
+    if plan.getClass().getSimpleName().endswith("QueryStageExec"):
+        return [plan] + _final_plan_nodes(plan.plan())
+    children = plan.children()
+    return [plan] + [
+        n for i in range(children.size()) for n in _final_plan_nodes(children.apply(i))
+    ]
+
+
 def test_staged_heavy_pass_plan_shape(spark, synth_dir, cfg):
     # cached frames left behind by pipeline tests (qc/rollup/flags persist)
     # substitute InMemoryRelations into matching subtrees and change the
@@ -208,9 +222,9 @@ def test_pending_flags_topology_plan_shape(spark, stream_input, cfg):
 
 
 def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):
-    """Scale pins for the 9-family issues log, asserted on the FINAL
+    """Scale pins for the one-pass issues log, asserted on the FINAL
     adaptive plan. SortMergeJoin is EXPECTED for the diary-grain x
-    diary-grain reconciliations (requests x accepted keys, transcript-QC
+    diary-grain reconciliations (lifecycle x accepted keys, transcript-QC
     identity x audio-QC counts): at production scale BOTH sides are
     unbounded (every diary ever), so hash-shuffled merge joins are the
     correct plan and forcing broadcast would OOM the driver. What must
@@ -242,9 +256,19 @@ def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):
     assert "EvalPython" not in plan, plan
     # conv_meta (the only true dimension) broadcasts
     assert "BroadcastHashJoin" in plan, plan
-    # keep-earliest dedup rides a WindowGroupLimit (rank pushdown), never a
-    # full window sort of the union without the limit optimization
-    assert "WindowGroupLimit" in plan, plan
+    # one rule pass: the tool-call rollup is read once, the keep-earliest
+    # dedup is a distinct (no window), and the six tool-call families add
+    # no join beyond the one lifecycle x accepted-keys frame
+    nodes = _final_plan_nodes(df._jdf.queryExecution().executedPlan())
+    kinds = [n.getClass().getSimpleName() for n in nodes]
+    scans = [
+        n for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and "tool_calls" in n.toString()
+    ]
+    assert len(scans) == 1, plan
+    assert not [k for k in kinds if k.startswith("Window")], plan
+    assert sum("Join" in k for k in kinds) <= 6, plan
 
     # the un-staged path reuses its persisted diary-grain frames (rollup +
     # flags) instead of re-deriving the wide turn pass per consuming

@@ -50,11 +50,20 @@ def _audio_qc(spark):
     # so no missing-request flag muddies the assertions
     return spark.createDataFrame(
         [
-            ("c1", LOCAL_1, "ENGLISH", 1, True),
-            ("c3", LOCAL_3, "ENGLISH", 1, True),
+            ("c1", 1, 1, LOCAL_1, "ENGLISH", 1, True),
+            ("c3", 2, 1, LOCAL_3, "ENGLISH", 1, True),
         ],
-        "conv_id string, filename string, language string, "
+        "conv_id string, day int, daily_submission_number int, "
+        "filename string, language string, "
         "audio_approved_bool int, has_tool_tag boolean",
+    )
+
+
+def _no_diaries(spark):
+    # empty transcript-QC / disfluency / turn-stats evidence: the output
+    # reconciliations stay silent on keys that never round-tripped
+    return spark.createDataFrame(
+        [], "conv_id string, day int, daily_submission_number int, filename string"
     )
 
 
@@ -72,7 +81,10 @@ def test_issues_upload_failed_replaces_pending(spark, cfg):
     tc = _tool_calls(spark)
     qc = _audio_qc(spark)
     violated = spark.createDataFrame([], "conv_id string, filename string")
-    issues = issues_set(qc, tool_call_lifecycle(tc), violated, cfg).toPandas()
+    none = _no_diaries(spark)
+    issues = issues_set(
+        qc, tool_call_lifecycle(tc), violated, cfg, none, none, none
+    ).toPandas()
 
     failed = issues[issues.error_message == MSG_UPLOAD_FAILED]
     assert set(zip(failed.conv_id, failed.filename)) == {("c1", LOCAL_1)}
@@ -86,7 +98,10 @@ def test_clear_resolved_push_errors(spark, cfg):
     tc = _tool_calls(spark)
     qc = _audio_qc(spark)
     violated = spark.createDataFrame([], "conv_id string, filename string")
-    issues = issues_set(qc, tool_call_lifecycle(tc), violated, cfg)
+    none = _no_diaries(spark)
+    issues = issues_set(
+        qc, tool_call_lifecycle(tc), violated, cfg, none, none, none
+    )
 
     # later stream state: c1's push finally succeeded and returned
     fixed = pd.DataFrame(
