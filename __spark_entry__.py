@@ -607,7 +607,7 @@ def q_text_analysis(spark, sf):
     # metrics (length/stopword ratios), whitespace + BPE-ish regex token
     # counting, content fingerprint (hash of normalized text), stopword-vote
     # language ID, the F13 encoding classification (is_ascii rlike —
-    # streaming/job.py turn_projection — over a constructed non-ASCII tail),
+    # operators/transcript.py text_stats — over a constructed non-ASCII tail),
     # and the Gopher-style repetition signals (top/dup n-gram shares; the
     # top-gram mass is a sorted-run F.aggregate fold — no explode/shuffle)
     # ... and the per-doc TF-IDF aggregates (corpus-statistics round-trip:

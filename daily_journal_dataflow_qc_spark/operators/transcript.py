@@ -19,15 +19,29 @@ Parity traps honored (SURVEY.md §7.3):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..config import PipelineConfig
 from ..functions.naming import with_language_marker
 from ..functions.redaction import redacted_line, violated_line
 from ..functions.text_metrics import normalize_text, with_sentence_metrics
 
 DIARY_KEY = ["conv_id", "session_id"]
+# the diary columns the per-turn stats and the diary rollup read
+DIARY_COLS = [
+    *DIARY_KEY,
+    "day",
+    "daily_submission_number",
+    "session_start",
+    "overall_db",
+    "filename",
+    "timeofday",
+    "weekday",
+]
 
 
 def dedup_tool_calls(tool_calls: DataFrame, kind: str) -> DataFrame:
@@ -260,9 +274,10 @@ def returned_accepted_diaries(
 def redact_projection(turns: DataFrame) -> DataFrame:
     """Stateless per-turn redaction projection over the normalized text:
     ``text`` becomes the redacted text (NULL on a violated line),
-    ``violated`` the per-line violation bit. The batch heavy pass applies
-    it after ``gap_stats``; the streaming job's turn_projection applies it,
-    then ``text_stats``, on the scan side of the stateful exchange."""
+    ``violated`` the per-line violation bit. Applied after ``gap_stats``
+    and before ``text_stats``, to the turns of returned-accepted diaries
+    only: by the batch heavy pass, and by the streaming foreachBatch over
+    its re-read slice of the closing diaries."""
     text = normalize_text(F.col("text"))
     return turns.withColumns(
         {"text": redacted_line(text), "violated": violated_line(text)}
@@ -276,17 +291,7 @@ def attach_diaries(sessioned_turns: DataFrame, diaries: DataFrame) -> DataFrame:
     (one row per accepted+returned diary) — a sort-merge join here would
     re-sort the whole turn stream. At extreme diary counts, drop the hint
     and bucket instead."""
-    diary_cols = diaries.select(
-        "conv_id",
-        "session_id",
-        "day",
-        "daily_submission_number",
-        "session_start",
-        "overall_db",
-        "filename",
-        "timeofday",
-        "weekday",
-    )
+    diary_cols = diaries.select(*DIARY_COLS)
     return sessioned_turns.join(F.broadcast(diary_cols), DIARY_KEY, "inner")
 
 
@@ -452,4 +457,52 @@ def disf_from_rollup(rollup: DataFrame) -> DataFrame:
             "restarts_per_word": F.col("restarts_count") / F.col("total_word_count"),
             "disfluencies_per_minute": total / F.col("length_minutes"),
         }
+    )
+
+
+class TranscriptSide(NamedTuple):
+    turn_stats: DataFrame
+    violated: DataFrame
+    transcript_qc: DataFrame
+    disfluencies: DataFrame
+    persisted: list[DataFrame]
+
+
+def transcript_side(stats: DataFrame) -> TranscriptSide:
+    """The transcript outputs of a per-turn stats frame (``text_stats`` over
+    ``gap_stats``-windowed, redacted turns of returned-accepted diaries):
+    diaries with any violated line are set aside (``violated``: their
+    ``DIARY_KEY`` + filename), the clean turns give the per-turn sink and
+    one combined rollup gives transcript QC and the disfluency summary.
+
+    Shared by the batch DAG (over its staged turns) and the streaming
+    foreachBatch (over the re-read slice of its closing diaries).
+    ``persisted`` holds the two diary-grain frames cached here; a caller
+    that outlives the outputs unpersists them."""
+    # diary-grain and consumed by clean, the violation row set AND two of
+    # the issues reconciliations — persist so the stats frame is scanned
+    # once for it, not once per consumer. The flag is a diary-level
+    # aggregate broadcast-joined back onto the turns: a full-width window
+    # max would sort the wide (text-bearing) rows.
+    flags = stats.groupBy(*DIARY_KEY).agg(
+        F.max("violated").alias("_any_violated"),
+        F.first("filename").alias("filename"),
+    ).persist()
+    violated = flags.filter(F.col("_any_violated")).select(*DIARY_KEY, "filename")
+    clean = (
+        stats.join(F.broadcast(flags.drop("filename")), DIARY_KEY, "left")
+        .filter(~F.col("_any_violated"))
+        .drop("_any_violated")
+    )
+    # ONE combined per-diary aggregation feeds both transcript QC and the
+    # disfluency summary (one shuffle over the turn stats instead of two)
+    rollup = diary_rollup(clean).persist()  # diary-level: small
+    return TranscriptSide(
+        # no global sort: the (conv_id, turn_idx) parity ordering is applied
+        # by consumers/tests; a range shuffle of the widest output is wasted
+        turn_stats=clean.select(*schemas.TURN_STATS.fieldNames()),
+        violated=violated,
+        transcript_qc=tqc_from_rollup(rollup),
+        disfluencies=disf_from_rollup(rollup),
+        persisted=[flags, rollup],
     )

@@ -23,9 +23,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from . import schemas
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .operators import compile as compile_ops
 from .operators import diaries as diary_ops
@@ -100,30 +98,8 @@ def _build(
     # wide column, staging it twice would double the staged bytes
     staged = stage(transcript_ops.text_stats(red).drop("text_lc"))
 
-    # diary-grain and consumed by clean, the violation row set AND two of
-    # the issues reconciliations — persist so the staged frame is scanned
-    # once for it, not once per consumer. The flag is a diary-level
-    # aggregate broadcast-joined back onto the turns: a full-width window
-    # max would sort the wide (text-bearing) rows.
-    flags = staged.groupBy(*transcript_ops.DIARY_KEY).agg(
-        F.max("violated").alias("_any_violated"),
-        F.first("filename").alias("filename"),
-    ).persist()
-    violated = flags.filter(F.col("_any_violated")).select(
-        *transcript_ops.DIARY_KEY, "filename"
-    )
-    clean = (
-        staged.join(
-            F.broadcast(flags.drop("filename")), transcript_ops.DIARY_KEY, "left"
-        )
-        .filter(~F.col("_any_violated"))
-        .drop("_any_violated")
-    )
-    # ONE combined per-diary aggregation feeds both transcript QC and the
-    # disfluency summary (one shuffle over the turn stats instead of two)
-    rollup = transcript_ops.diary_rollup(clean).persist()  # diary-level: small
-    tqc = transcript_ops.tqc_from_rollup(rollup)
-    disf = transcript_ops.disf_from_rollup(rollup)
+    side = transcript_ops.transcript_side(staged)
+    tqc, disf = side.transcript_qc, side.disfluencies
 
     accepted = compile_ops.accepted_set(qc, tqc, disf)
     rejected = compile_ops.rejected_set(qc)
@@ -133,19 +109,15 @@ def _build(
     # construction — and handing the per-turn frame here would re-read the
     # staged turns (or re-run the heavy pass) just to materialize issues.
     issues = compile_ops.issues_set(
-        qc, lifecycle, violated, cfg, transcript_qc=tqc, disfluencies=disf,
+        qc, lifecycle, side.violated, cfg, transcript_qc=tqc, disfluencies=disf,
         turn_stats=tqc.select("conv_id", "day", "daily_submission_number"),
     )
-
-    # no global sort: the (conv_id, turn_idx) parity ordering is applied by
-    # consumers/tests; a range shuffle of the widest output is wasted work
-    turn_stats_out = clean.select(*schemas.TURN_STATS.fieldNames())
 
     return PipelineOutputs(
         accepted=accepted,
         rejected=rejected,
         issues=issues,
-        turn_stats=turn_stats_out,
+        turn_stats=side.turn_stats,
         audio_qc=qc,
         transcript_qc=tqc,
         disfluencies=disf,

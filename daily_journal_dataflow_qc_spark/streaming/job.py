@@ -2,19 +2,19 @@
 
 Topology (single continuous job, checkpointed, exactly-once sinks):
 
-    transcripts stream
-      -> per-turn stateless projection (normalize, redact, metrics)
+    transcripts stream (conv_id, turn_idx, ts, tool only — no text read)
       -> watermark + dropDuplicatesWithinWatermark(conv_id, turn_idx)      [§2.10 dedup]
       -> groupBy(conv_id, session_window(ts, gap)) agg                     [diary assembly]
-         (per-diary QC sums + (ts, word_count) pairs ONLY — 16 bytes of
-          state per turn, never text/per-turn payload; gap stats are
-          computed JVM-side post-agg from the sorted pairs)
+         (the diary identity aggregates ONLY: start, end, turn count,
+          tool tag — no per-turn state)
       -> foreachBatch: day assignment + submission rank + acceptance split
          + IdempotentBatchSink commits                                     [exactly-once]
          + tool-call gating against an INCREMENTAL key store (only new
            source files are read per batch, never a full rescan)
-         + per-turn stats rebuilt from a conv/ts-pruned re-read of the
-           source slice covering just-closed sessions
+         + the batch transcript operators (dedup -> gap windows -> redact
+           -> sentence metrics -> transcript_side) over a ts-pruned re-read
+           of the admitted source slice, range-joined to the returned
+           closing diaries
 
     transcripts stream -> applyInPandasWithState(conv_id)                  [keyed validator]
          monotone turn_idx high-watermark + exact missing-gap set; emits
@@ -42,8 +42,15 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from .. import schemas
 from ..functions.naming import with_language_marker
 from ..operators import compile as compile_ops
-from ..operators.diaries import audio_qc, session_identity
-from ..operators.transcript import redact_projection, text_stats
+from ..operators.diaries import audio_qc, dedup_turns, session_identity
+from ..operators.transcript import (
+    DIARY_COLS,
+    DIARY_KEY,
+    gap_stats,
+    redact_projection,
+    text_stats,
+    transcript_side,
+)
 from ..sources.table_format import is_catalog_table, read_table
 from .keystore import IncrementalKeyStore
 from .sink import IdempotentBatchSink
@@ -92,7 +99,7 @@ def _streamed_files(checkpoint_loc: str, batch_id: int) -> list[str] | None:
     Used to scope the foreachBatch turn-stats rebuild to exactly the data the
     session aggregate could have seen: a file that landed in the input dir
     after the batch was constructed must NOT leak rows into the per-turn sink
-    (the diary's n_turns/word_count never counted them). Returns None when
+    (the diary's n_turns never counted them). Returns None when
     the log is unreadable — callers fall back to the full-dir read (the
     pre-compaction behavior).
 
@@ -183,99 +190,28 @@ def _read_admitted(
     return read_table(spark, location, schema)
 
 
-def turn_projection(turns: DataFrame) -> DataFrame:
-    """Stateless per-turn stage: redact + lower + sentence metrics — the
-    batch heavy pass's per-turn projection, without its windows."""
-    return text_stats(redact_projection(turns))
+def session_qc_aggregate(turns: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Watermarked session-window diary assembly: exactly the identity
+    aggregates of ``diaries.diary_identity``, nothing per turn.
 
-
-def session_qc_aggregate(projected: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Watermarked session-window diary assembly with full QC sums."""
+    The select before the stateful chain keeps the dedup and session-window
+    exchanges and state to four narrow columns (the dedup operator emits its
+    child's full row set and Catalyst does not prune through it). Every
+    transcript-side figure is computed in foreachBatch from a re-read of
+    the closing diaries' turns, so no text or per-turn payload ever lives in
+    aggregation state — a long hot session cannot grow a state value."""
     gap = f"{cfg.session_gap_minutes} minutes"
-    # EXPLICIT projection to the aggregate's inputs before the stateful
-    # chain (guide §2.3: project before the exchange): the dedup operator
-    # emits its child's full row set and Catalyst does not prune through
-    # it, so without this select the redacted ``text`` AND ``text_lc``
-    # (the two widest columns, ~6x the metric payload) would ride the
-    # (conv_id, turn_idx) dedup exchange and the conv_id session-window
-    # exchange — pure shuffle weight no downstream consumer reads (the
-    # per-turn sink rebuilds text from a pruned re-read of the source).
     deduped = (
-        projected.select(
-            "conv_id",
-            "turn_idx",
-            "ts",
-            "tool",
-            "violated",
-            "role",
-            "word_count",
-            "inaudible_count",
-            "questionable_count",
-            "other_bracketed_words",
-            "redactions",
-            "nonverbal_edits",
-            "verbal_edits",
-            "repeats",
-            "restarts",
-            "is_ascii",
-        )
+        turns.select("conv_id", "turn_idx", "ts", "tool")
         .withWatermark("ts", cfg.watermark_delay)
         .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     )
-    agg = deduped.groupBy("conv_id", F.session_window("ts", gap)).agg(
+    return deduped.groupBy("conv_id", F.session_window("ts", gap)).agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
         F.count("*").alias("n_turns"),
         F.max(F.col("tool").isNotNull()).alias("has_tool_tag"),
-        F.max("violated").alias("any_violated"),
-        F.size(F.collect_set("role")).alias("speakerID_count"),
-        F.sum(F.when(F.col("role") == "S1", 1).otherwise(0)).cast("int").alias("S1_sentence_count"),
-        F.sum("word_count").cast("int").alias("word_count"),
-        F.min("word_count").alias("min_words_in_sen"),
-        F.max("word_count").alias("max_words_in_sen"),
-        F.sum("inaudible_count").cast("int").alias("inaudible_count"),
-        F.sum("questionable_count").cast("int").alias("questionable_count"),
-        F.sum("other_bracketed_words").cast("int").alias("other_bracketed_notation_count"),
-        F.sum("redactions").cast("int").alias("redacted_count"),
-        F.sum("nonverbal_edits").cast("double").alias("nonverbal_edits_count"),
-        F.sum("verbal_edits").cast("double").alias("verbal_edits_count"),
-        F.sum("repeats").cast("double").alias("repeats_count"),
-        F.sum("restarts").cast("double").alias("restarts_count"),
-        F.min("is_ascii").alias("all_ascii"),
-        # SCALARS + (ts, word_count) pairs ONLY — 16 bytes/turn of state.
-        # Gap stats need adjacent-turn deltas so the pairs are unavoidable,
-        # but the full per-turn payload (especially text) must never live in
-        # aggregation state: a long hot session would grow one giant state
-        # value unboundedly. Per-turn rows for the turn-stats sink are
-        # rebuilt in foreachBatch from a FILTERED re-read of the source
-        # slice covering just-closed sessions (see write_batch).
-        F.sort_array(F.collect_list(F.struct("ts", "word_count"))).alias("_ts_wc"),
     )
-    secs = F.transform(
-        F.col("_ts_wc"), lambda p: p.getField("ts").cast("double")
-    )
-    n = F.size(F.col("_ts_wc"))
-    gaps = F.zip_with(
-        F.slice(secs, 1, n - 1), F.slice(secs, 2, n - 1), lambda a, b: b - a
-    )
-    gap_per_word = F.zip_with(
-        gaps,
-        F.transform(F.slice(F.col("_ts_wc"), 1, n - 1), lambda p: p.getField("word_count")),
-        lambda g, wc: g / wc,
-    )
-    return agg.withColumns(
-        {
-            "total_sentence_count": n.cast("int"),
-            "final_timestamp_minutes": F.round(
-                (F.col("session_end").cast("double") - F.col("session_start").cast("double")) / 60.0, 3
-            ),
-            "min_timestamp_space_seconds": F.round(F.array_min(gaps), 3),
-            "max_timestamp_space_seconds": F.round(F.array_max(gaps), 3),
-            "min_timestamp_space_per_word": F.round(F.array_min(gap_per_word), 3),
-            "max_timestamp_space_per_word": F.round(F.array_max(gap_per_word), 3),
-            "txt_encoding_type": F.when(F.col("all_ascii"), "ASCII").otherwise("UTF-8"),
-        }
-    ).drop("all_ascii")
 
 
 def _trigger_kwargs(trigger_seconds: float | None) -> dict:
@@ -284,6 +220,22 @@ def _trigger_kwargs(trigger_seconds: float | None) -> dict:
     if trigger_seconds is None:
         return {"availableNow": True}
     return {"processingTime": f"{trigger_seconds} seconds"}
+
+
+def _write_concurrently(jobs: list, batch_id: int) -> None:
+    """Run independent sink writes of one micro-batch as overlapping jobs.
+
+    Per-trigger wall at small batch sizes is dominated by a fixed per-JOB
+    term (planning + scheduling + sink commit), so overlapping the jobs
+    shaves that serial floor; the sinks are separate IdempotentBatchSink
+    instances (independent manifest files), so concurrent commits stay
+    exactly-once."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(len(jobs)) as pool:
+        futures = [pool.submit(sink.write, df, batch_id) for sink, df in jobs]
+        for f in futures:
+            f.result()
 
 
 def start_session_qc_query(
@@ -296,12 +248,15 @@ def start_session_qc_query(
     tool_calls_dir: str | None = None,
     trigger_seconds: float | None = None,
 ):
-    """Launch the diary-QC streaming query (availableNow trigger).
+    """Launch the diary-QC streaming query: availableNow by default, a
+    processing-time trigger every ``trigger_seconds`` when given.
 
-    When ``tool_calls_dir`` is given, transcript-side outputs (transcript QC
-    + per-turn stats) are gated on the diary's tool-call round trip having
-    RETURNED by batch time (reference: transcripts exist only after the SFTP
-    pull) and redaction-violated diaries are excluded + flagged.
+    When ``tool_calls_dir`` is given, transcript-side outputs (transcript QC,
+    disfluencies, per-turn stats) are gated on the diary's tool-call round
+    trip having RETURNED by batch time (reference: transcripts exist only
+    after the SFTP pull) and redaction-violated diaries are excluded +
+    flagged — by the batch transcript operators, over a re-read of the
+    returned closing diaries' turns.
 
     Returns (query, {sink_name: IdempotentBatchSink}).
     """
@@ -309,7 +264,7 @@ def start_session_qc_query(
     # on a catalog table (Iceberg in production) snapshots provide the
     # incremental admission a file stream gets from its metadata log
     turns = _read_stream(spark, input_dir, schemas.TRANSCRIPTS, max_files_per_trigger)
-    diary_stream = session_qc_aggregate(turn_projection(turns), cfg)
+    diary_stream = session_qc_aggregate(turns, cfg)
 
     sinks = {
         "audio_qc": IdempotentBatchSink(output_root, "audio_qc"),
@@ -323,27 +278,12 @@ def start_session_qc_query(
         sinks["disfluencies"] = IdempotentBatchSink(output_root, "disfluencies")
     meta = conv_meta  # captured; static dimension
 
-    tqc_cols = [
-        "conv_id", "day", "timeofday", "weekday", "daily_submission_number",
-        "speakerID_count", "S1_sentence_count", "total_sentence_count",
-        "word_count", "min_words_in_sen", "max_words_in_sen",
-        "inaudible_count", "questionable_count", "other_bracketed_notation_count",
-        "redacted_count", "final_timestamp_minutes",
-        "min_timestamp_space_seconds", "max_timestamp_space_seconds",
-        "min_timestamp_space_per_word", "max_timestamp_space_per_word",
-        "txt_encoding_type", "filename",
-        "nonverbal_edits_count", "verbal_edits_count", "repeats_count",
-        "restarts_count",
-    ]
-
     key_store = (
         IncrementalKeyStore(output_root, "_tool_call_keys") if tool_calls_dir else None
     )
     qc_checkpoint = os.path.join(output_root, "_checkpoint_qc")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         if all(s.committed(batch_id) for s in sinks.values()):
             # checkpoint replay where EVERY sink already committed this
             # batch: the writes would all no-op, leaving the micro-batch's
@@ -365,28 +305,20 @@ def start_session_qc_query(
             # serialize but still duplicate scheduling), and the state-store
             # subtree must execute exactly once per batch anyway
             qc.count()
-            # the three diary-level sinks derive independently from the
-            # persisted qc frame: run their write actions CONCURRENTLY.
-            # Per-trigger wall at small batch sizes is dominated by a fixed
-            # per-JOB term (planning + scheduling + sink commit), so
-            # overlapping the jobs shaves that serial floor; the sinks are
-            # separate IdempotentBatchSink instances (independent manifest
-            # files), so concurrent commits stay exactly-once.
             accepted = qc.filter(F.col("audio_approved_bool") == 1)
             # not compile_ops.rejected_set: its within-partition sort is
             # wasted on a per-batch sink file
             rejected = qc.filter(F.col("audio_approved_bool") != 1).select(
                 *compile_ops.REJECTED_COLS
             )
-            jobs = [
-                (sinks["audio_qc"].write, qc.drop("_ts_wc")),
-                (sinks["accepted"].write, accepted.drop("_ts_wc")),
-                (sinks["rejected"].write, rejected),
-            ]
-            with ThreadPoolExecutor(3) as pool:
-                futures = [pool.submit(fn, df, batch_id) for fn, df in jobs]
-                for f in futures:
-                    f.result()
+            _write_concurrently(
+                [
+                    (sinks["audio_qc"], qc),
+                    (sinks["accepted"], accepted),
+                    (sinks["rejected"], rejected),
+                ],
+                batch_id,
+            )
             if tool_calls_dir:
                 # returned gating: round trip complete as of this batch.
                 # INCREMENTAL: only tool-call files not yet ingested are
@@ -409,161 +341,100 @@ def start_session_qc_query(
                 # match on the marked name. No broadcast hint: the key store
                 # is usually tiny (AQE will broadcast it), but it grows with
                 # total diaries — forcing a broadcast would eventually OOM
-                # the driver at scale.
+                # the driver at scale. session_start stands in for the
+                # batch tier's session_id: unique per conv, never written.
                 marked = accepted.withColumn(
                     "_tool_key",
                     with_language_marker(F.col("filename"), F.col("language")),
                 )
-                returned = marked.join(
-                    req.join(ret, ["conv_id", "_tool_key"], "left_semi"),
-                    ["conv_id", "_tool_key"],
-                    "left_semi",
-                ).drop("_tool_key").persist()
+                returned = (
+                    marked.join(
+                        req.join(ret, ["conv_id", "_tool_key"], "left_semi"),
+                        ["conv_id", "_tool_key"],
+                        "left_semi",
+                    )
+                    .drop("_tool_key")
+                    .withColumn("session_id", F.col("session_start"))
+                    .persist()
+                )
                 persisted.append(returned)
-                returned.count()  # materialize before the concurrent writes
-                clean = returned.filter(~F.col("any_violated"))
-                # disfluency summary (phone_transcript_sentence_stats.py:97-118;
-                # length_minutes carries overall_db — the reproduced bug)
-                total = (
-                    F.col("nonverbal_edits_count") + F.col("verbal_edits_count")
-                    + F.col("repeats_count") + F.col("restarts_count")
-                )
-                disf = clean.select(
-                    "conv_id",
-                    "day",
-                    "daily_submission_number",
-                    F.concat(
-                        F.regexp_replace("filename", "\\.wav$", ""),
-                        F.lit("_REDACTED_withSentenceStats.csv"),
-                    ).alias("transcript_csv_name"),
-                    F.col("overall_db").alias("length_minutes"),
-                    F.col("word_count").cast("double").alias("total_word_count"),
-                    "nonverbal_edits_count",
-                    "verbal_edits_count",
-                    "repeats_count",
-                    "restarts_count",
-                    total.alias("total_disfluencies"),
-                    (F.col("nonverbal_edits_count") / F.col("word_count")).alias("nonverbal_edits_per_word"),
-                    (F.col("verbal_edits_count") / F.col("word_count")).alias("verbal_edits_per_word"),
-                    (F.col("repeats_count") / F.col("word_count")).alias("repeats_per_word"),
-                    (F.col("restarts_count") / F.col("word_count")).alias("restarts_per_word"),
-                    (total / F.col("overall_db")).alias("disfluencies_per_minute"),
-                )
-                # the three transcript-side sinks derive independently from
-                # the persisted returned frame: overlap their jobs (same
-                # fixed-per-job rationale as the diary-level sinks above)
-                tjobs = [
-                    (
-                        sinks["violations"].write,
-                        returned.filter(F.col("any_violated")).select(
-                            "conv_id", "day", "daily_submission_number", "filename"
-                        ),
-                    ),
-                    (sinks["transcript_qc"].write, clean.select(*tqc_cols)),
-                    (sinks["disfluencies"].write, disf),
-                ]
-                with ThreadPoolExecutor(3) as pool:
-                    futures = [pool.submit(fn, df, batch_id) for fn, df in tjobs]
-                    for f in futures:
-                        f.result()
-                # per-turn stats: REBUILT from a filtered re-read of the
-                # source slice covering exactly the clean closed diaries —
-                # per-turn payloads (especially text) never transit streaming
-                # state. The filter pushes conv_id (dictionary/stats pruning)
-                # and a ts range down to the parquet scan, so the per-batch
-                # cost is proportional to the turns of the sessions closing
-                # NOW, not to the table; at production scale the input is a
-                # time-partitioned/bucketed table and this is a pruned point
-                # read. Last turn estimates sentence seconds from
-                # overall_db*60 — the reproduced reference bug, SURVEY §7.3.2.
-                diary_keys = clean.select(
-                    "conv_id", "day", "daily_submission_number", "session_start",
-                    "session_end", "overall_db",
-                )
-                # ts bounds: 2 scalars to the driver — fine at any scale.
-                # The conv prune is a broadcast LEFT SEMI against the batch's
-                # distinct conv set (NOT collect_set -> isin: a batch closing
-                # millions of sessions would blow up the driver and burn a
-                # giant literal into the plan). The scan is additionally
-                # scoped to files the stream ADMITTED through this batch, so
-                # rows that landed after batch construction can't leak into
-                # the per-turn sink, and statically pruned by the ts range
-                # (at production scale the input is time-partitioned and this
-                # is a pruned point read).
-                bounds = diary_keys.agg(
+                # ts bounds: 2 scalars to the driver — fine at any scale —
+                # statically prune the re-read (at production scale the
+                # input is time-partitioned and this is a pruned point read)
+                bounds = returned.agg(
                     F.min("session_start").alias("lo"),
                     F.max("session_end").alias("hi"),
                 ).head()
-                if bounds and bounds["lo"] is not None:
-                    raw_src = _read_admitted(
+                if bounds["lo"] is None:
+                    raw = spark.createDataFrame([], schemas.TRANSCRIPTS)
+                else:
+                    # scoped to the files the stream ADMITTED through this
+                    # batch, so rows that landed after batch construction
+                    # cannot leak into the transcript sinks
+                    raw = _read_admitted(
                         spark, input_dir, schemas.TRANSCRIPTS, qc_checkpoint,
                         batch_id,
-                    )
-                    # renamed key columns sidestep the self-lineage ambiguity
-                    # (the semi-join side and the range-join side both derive
-                    # from diary_keys)
-                    conv_set = diary_keys.select(
-                        F.col("conv_id").alias("_prune_conv")
-                    ).distinct()
-                    raw = raw_src.filter(
-                        F.col("ts").between(bounds["lo"], bounds["hi"])
-                    ).join(
-                        F.broadcast(conv_set),
-                        F.col("conv_id") == F.col("_prune_conv"),
-                        "left_semi",
-                    )
-                    # ARRIVAL-TIME EXACTNESS (measured, see
-                    # test_turn_stats_rebuild_watermark_exact_and_replay_
-                    # converges): a sub-watermark row MERGES into its session
-                    # if the session's state had not been evicted before the
-                    # row's admission batch — including the batch OF the
-                    # eviction itself — and is silently dropped by the
-                    # aggregate afterwards. Because this rebuild runs in the
-                    # eviction batch over exactly the files admitted by then,
-                    # every row matching a closing diary's bounds was either
-                    # merged (counted by the diary — include) or not yet
-                    # admitted (excluded by the scoping); post-eviction late
-                    # rows never match a later diary's bounds (sessions are
-                    # > gap apart). No further filter is needed; a fresh
-                    # REPLAY admits everything in one batch (no watermark)
-                    # and converges to the batch tier exactly.
-                    dk = diary_keys.withColumnRenamed("conv_id", "_dk_conv")
-                    sliced = raw.join(
-                        F.broadcast(dk),
-                        on=[
-                            F.col("conv_id") == F.col("_dk_conv"),
-                            F.col("ts").between(
-                                F.col("session_start"), F.col("session_end")
+                    ).filter(F.col("ts").between(bounds["lo"], bounds["hi"]))
+                # ARRIVAL-TIME EXACTNESS (measured, see
+                # test_turn_stats_rebuild_watermark_exact_and_replay_
+                # converges): a sub-watermark row MERGES into its session
+                # if the session's state had not been evicted before the
+                # row's admission batch — including the batch OF the
+                # eviction itself — and is silently dropped by the
+                # aggregate afterwards. Because this re-read runs in the
+                # eviction batch over exactly the files admitted by then,
+                # every row matching a closing diary's bounds was either
+                # merged (counted by the diary — include) or not yet
+                # admitted (excluded by the scoping); post-eviction late
+                # rows never match a later diary's bounds (sessions are
+                # > gap apart). No further filter is needed; a fresh
+                # REPLAY admits everything in one batch (no watermark)
+                # and converges to the batch tier exactly. The renamed
+                # key leaves one conv_id column in the joined rows.
+                diary = returned.select(
+                    *DIARY_COLS, "session_end"
+                ).withColumnRenamed("conv_id", "_dk_conv")
+                sliced = raw.join(
+                    F.broadcast(diary),
+                    on=[
+                        F.col("conv_id") == F.col("_dk_conv"),
+                        F.col("ts").between(
+                            F.col("session_start"), F.col("session_end")
+                        ),
+                    ],
+                    how="inner",
+                ).drop("_dk_conv", "session_end")
+                # the batch heavy pass over the slice; persisted as the
+                # stage step (run_batch's persist_intermediates analogue)
+                stats = (
+                    text_stats(redact_projection(gap_stats(dedup_turns(sliced))))
+                    .drop("text_lc")
+                    .persist()
+                )
+                side = transcript_side(stats)
+                persisted += [stats, *side.persisted]
+                violations = returned.join(
+                    side.violated, DIARY_KEY, "left_semi"
+                ).select("conv_id", "day", "daily_submission_number", "filename")
+                _write_concurrently(
+                    [
+                        (sinks["violations"], violations),
+                        (
+                            sinks["transcript_qc"],
+                            side.transcript_qc.select(
+                                *schemas.TRANSCRIPT_QC.fieldNames()
                             ),
-                        ],
-                        how="inner",
-                    ).drop("_dk_conv")
-                    # first-arrival dedup within the slice (duplicates are
-                    # verbatim re-deliveries, so equal to the agg-side
-                    # dropDuplicatesWithinWatermark choice)
-                    w_dedup = Window.partitionBy("conv_id", "turn_idx").orderBy("ts")
-                    sliced = (
-                        sliced.withColumn("_rn", F.row_number().over(w_dedup))
-                        .filter(F.col("_rn") == 1)
-                        .drop("_rn")
-                    )
-                    t = turn_projection(sliced)
-                    w_lead = Window.partitionBy(
-                        "conv_id", "day", "daily_submission_number"
-                    ).orderBy("ts", "turn_idx")
-                    cur = F.col("ts").cast("double")
-                    sec_from_start = cur - F.col("session_start").cast("double")
-                    t = t.withColumn("_next_ts", F.lead("ts").over(w_lead)).withColumn(
-                        "estimated_sentence_seconds",
-                        F.when(
-                            F.col("_next_ts").isNotNull(),
-                            F.col("_next_ts").cast("double") - cur,
-                        ).otherwise(F.col("overall_db") * 60.0 - sec_from_start),
-                    )
-                    turn_rows = t.select(*schemas.TURN_STATS.fieldNames())
-                else:
-                    turn_rows = spark.createDataFrame([], schemas.TURN_STATS)
-                sinks["turn_stats"].write(turn_rows, batch_id)
+                        ),
+                        (
+                            sinks["disfluencies"],
+                            side.disfluencies.select(
+                                *schemas.DISFLUENCIES.fieldNames()
+                            ),
+                        ),
+                        (sinks["turn_stats"], side.turn_stats),
+                    ],
+                    batch_id,
+                )
         finally:
             for df in persisted:
                 df.unpersist()
@@ -571,7 +442,7 @@ def start_session_qc_query(
     q = (
         diary_stream.writeStream.outputMode("append")
         .foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(output_root, "_checkpoint_qc"))
+        .option("checkpointLocation", qc_checkpoint)
         .trigger(**_trigger_kwargs(trigger_seconds))
         .start()
     )

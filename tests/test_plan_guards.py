@@ -4,6 +4,8 @@ sort-merge join, or a Python pass (ARCHITECTURE.md's "one conv_id
 exchange + broadcast joins" claim, measured ~20% of heavy-pass wall when
 violated)."""
 
+import re
+
 import pytest
 
 from daily_journal_dataflow_qc_spark.operators import diaries as diary_ops
@@ -94,8 +96,9 @@ def test_session_aggregate_is_partial(spark, synth_dir, cfg):
 def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg):
     """Streaming analogue of the heavy-pass guard: the executed plan of a
     data-bearing micro-batch of the session-QC stream must hold no Python
-    boundary, no SortMergeJoin anywhere, and the expected stateful
-    operators (dedup-within-watermark + session-window aggregate)."""
+    boundary, no SortMergeJoin anywhere, the expected stateful operators
+    (dedup-within-watermark + session-window aggregate), and a scan that
+    reads no ``text``."""
     import shutil
 
     from daily_journal_dataflow_qc_spark.streaming.job import start_session_qc_query
@@ -107,8 +110,8 @@ def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg):
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     # one file per trigger widens the data-bearing window to ~7 back-to-back
     # batches so the mid-run plan capture cannot race past them (the
-    # trailing watermark-close batch reads no file and prunes the per-turn
-    # projection, so its plan is useless for this guard)
+    # trailing watermark-close batch reads no file, so its plan has no scan
+    # for this guard to check)
     q, _ = start_session_qc_query(
         spark, f"{stream_input}/transcripts", out_root, conv_meta, cfg,
         trigger_seconds=0.5, max_files_per_trigger=1,
@@ -133,6 +136,11 @@ def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg):
     assert "SortMergeJoin" not in plan, plan
     assert "SessionWindowStateStoreSave" in plan, plan
     assert "StreamingDeduplicateWithinWatermark" in plan, plan
+    # the session state holds diary identity only: the stream scan must not
+    # read the text column (redaction runs on the re-read transcript side)
+    read_schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
+    assert read_schemas, plan
+    assert not any("text:" in r for r in read_schemas), read_schemas
 
 
 def test_compile_batch_joins_broadcast(spark, synth_dir, cfg):

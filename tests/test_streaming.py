@@ -324,52 +324,36 @@ def test_streaming_transcript_side_matches_batch(spark, stream_input, synth_dir,
     want_ts = batch.turn_stats.toPandas()
     compare_frames(got_ts, want_ts, ["conv_id", "turn_idx"])
 
-    tqc_cols = [
-        "conv_id", "day", "daily_submission_number", "speakerID_count",
-        "S1_sentence_count", "total_sentence_count", "word_count",
-        "min_words_in_sen", "max_words_in_sen", "inaudible_count",
-        "questionable_count", "other_bracketed_notation_count",
-        "redacted_count", "txt_encoding_type",
-    ]
-    got_tqc = sinks["transcript_qc"].read(spark).select(*tqc_cols).toPandas()
-    want_tqc = batch.transcript_qc.select(*tqc_cols).toPandas()
-    compare_frames(got_tqc, want_tqc, ["conv_id", "day", "daily_submission_number"])
-
-    disf_cols = [
-        "conv_id", "day", "daily_submission_number", "transcript_csv_name",
-        "length_minutes", "total_word_count", "nonverbal_edits_count",
-        "verbal_edits_count", "repeats_count", "restarts_count",
-        "total_disfluencies", "disfluencies_per_minute",
-    ]
-    got_d = sinks["disfluencies"].read(spark).select(*disf_cols).toPandas()
-    want_d = batch.disfluencies.select(*disf_cols).toPandas()
-    compare_frames(got_d, want_d, ["conv_id", "day", "daily_submission_number"])
+    key = ["conv_id", "day", "daily_submission_number"]
+    for sink, want, schema in [
+        ("transcript_qc", batch.transcript_qc, schemas_mod.TRANSCRIPT_QC),
+        ("disfluencies", batch.disfluencies, schemas_mod.DISFLUENCIES),
+    ]:
+        cols = schema.fieldNames()
+        got = sinks[sink].read(spark).toPandas()
+        assert list(got.columns) == cols, (sink, list(got.columns))
+        compare_frames(got, want.select(*cols).toPandas(), key)
 
 
 def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
-    """Structural guard for the O(1)-ish state north star: the session
-    aggregate may keep scalar sums and (ts, word_count) pairs, but no text
-    or other per-turn payload may transit streaming aggregation state."""
-    from pyspark.sql.types import ArrayType, StructType
+    """Structural guard for the bounded-state north star: the session
+    aggregate holds the diary identity aggregates only — no collected array
+    and no text or other per-turn payload transits streaming state."""
+    from pyspark.sql.types import ArrayType
 
     from daily_journal_dataflow_qc_spark import schemas
-    from daily_journal_dataflow_qc_spark.streaming.job import (
-        session_qc_aggregate,
-        turn_projection,
-    )
+    from daily_journal_dataflow_qc_spark.streaming.job import session_qc_aggregate
 
     turns = spark.readStream.schema(schemas.TRANSCRIPTS).parquet(
         f"{stream_input}/transcripts"
     )
-    agg = session_qc_aggregate(turn_projection(turns), cfg)
-    for field in agg.schema.fields:
-        if isinstance(field.dataType, ArrayType) and isinstance(
-            field.dataType.elementType, StructType
-        ):
-            names = {f.name for f in field.dataType.elementType.fields}
-            assert names <= {"ts", "word_count"}, (
-                f"collected array {field.name!r} carries per-turn payload: {names}"
-            )
+    agg = session_qc_aggregate(turns, cfg)
+    arrays = [f.name for f in agg.schema.fields if isinstance(f.dataType, ArrayType)]
+    assert not arrays, f"array column(s) in session state: {arrays}"
+    assert set(agg.columns) == {
+        "conv_id", "session_window", "session_start", "session_end",
+        "n_turns", "has_tool_tag",
+    }, agg.columns
 
 
 def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
@@ -383,8 +367,9 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
        (measured Spark semantics — sessions accept late rows while their
        state lives). The diary counts it, and the foreachBatch turn-stats
        rebuild — scoped to admitted files in the eviction batch — includes
-       it identically: per-diary turn_stats row counts equal the diary's
-       total_sentence_count for EVERY diary.
+       it identically: per-diary turn_stats row counts equal the n_turns
+       the session state counted (audio_qc sink) for EVERY diary that
+       reached the transcript side.
     2. REPLAY from a fresh checkpoint (the reference's cron re-run,
        mindlamp_accounting.py:154-158): everything admits in one batch, no
        watermark exists, and the result equals the batch engine EXACTLY.
@@ -481,27 +466,24 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
     q.awaitTermination(600)
     ts_live = sinks["turn_stats"].read(spark).toPandas()
     tqc_live = sinks["transcript_qc"].read(spark).toPandas()
+    aqc_live = sinks["audio_qc"].read(spark).toPandas()
     # the sub-watermark row MERGED: counted by the diary AND rebuilt
     assert ((ts_live.conv_id == target_conv) & (ts_live.turn_idx == late_idx)).any()
-    # every diary's turn_stats row count equals its sentence count
-    got_counts = (
-        ts_live.groupby(["conv_id", "day", "daily_submission_number"])
-        .size()
-        .rename("n")
-        .reset_index()
-    )
+    # every transcript-side diary's turn_stats row count equals the turn
+    # count of the session state — independent of the re-read that builds
+    # both turn_stats and transcript_qc (timeofday tells apart diaries that
+    # share a per-batch submission number)
+    diary = ["conv_id", "day", "daily_submission_number"]
+    got_counts = ts_live.groupby(diary).size().rename("n").reset_index()
     want_counts = (
-        tqc_live.groupby(["conv_id", "day", "daily_submission_number"])[
-            "total_sentence_count"
-        ]
+        aqc_live.merge(tqc_live[diary + ["timeofday"]], on=diary + ["timeofday"])
+        .groupby(diary)["n_turns"]
         .sum()
         .reset_index()
     )
-    m = got_counts.merge(
-        want_counts, on=["conv_id", "day", "daily_submission_number"], how="outer"
-    )
-    assert not m.n.isna().any() and not m.total_sentence_count.isna().any()
-    assert (m.n == m.total_sentence_count).all(), m[m.n != m.total_sentence_count]
+    m = got_counts.merge(want_counts, on=diary, how="outer")
+    assert not m.n.isna().any() and not m.n_turns.isna().any()
+    assert (m.n == m.n_turns).all(), m[m.n != m.n_turns]
 
     # ---- replay run (fresh checkpoint, single admission batch)
     out_replay = "/tmp/djdq_late_out_replay"
