@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.naming import strip_language_marker, with_language_marker
-from .transcript import retries_exhausted
+from .transcript import pending_return, retries_exhausted
 
 # reference message strings (journal_outputs_error_check.py:76-182;
 # phone_transcript_redaction.py:70)
@@ -278,15 +278,8 @@ def issues_set(
     reached_tool = has_request & ~exhausted
     marked = F.col("request_key")
     rules = [
-        # J7: request with no return, older than the deadline (a NULL
-        # first-arrival ts has no age: the condition is NULL, no flag)
-        (
-            reached_tool & ~returned & (
-                F.datediff(F.to_date(today), F.to_date("first_request_ts"))
-                >= cfg.pending_deadline_days
-            ),
-            marked, "pre-transcript", MSG_PENDING,
-        ),
+        # J7: request with no return, older than the deadline
+        (pending_return(cfg, today), marked, "pre-transcript", MSG_PENDING),
         # J6: return with no request (orphan)
         (returned & ~has_request, marked, "pre-wav", MSG_ORPHAN_RETURN),
         # J6: request whose diary is not in the accepted audio QC set

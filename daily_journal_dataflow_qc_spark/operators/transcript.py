@@ -133,6 +133,29 @@ def retries_exhausted(cfg: PipelineConfig) -> Column:
     return (~F.col("returned")) & (F.col("n_attempts") >= cfg.max_push_attempts)
 
 
+def pending_return(cfg: PipelineConfig, today: Column) -> Column:
+    """J7 predicate over a ``tool_call_lifecycle`` row: a request that
+    reached the tool (not ``retries_exhausted``) has no return, and its
+    first arrival is at least cfg.pending_deadline_days before ``today``
+    (journal_outputs_error_check.py:116-129). A NULL lifecycle flag, as on
+    an outer-join row with no lifecycle side, reads as false; a NULL
+    ``first_request_ts`` or ``today`` has no age, so the predicate is NULL
+    and no flag is raised."""
+
+    def present(name: str) -> Column:
+        return F.coalesce(F.col(name), F.lit(False))
+
+    return (
+        present("has_request")
+        & ~F.coalesce(retries_exhausted(cfg), F.lit(False))
+        & ~present("returned")
+        & (
+            F.datediff(F.to_date(today), F.to_date("first_request_ts"))
+            >= cfg.pending_deadline_days
+        )
+    )
+
+
 def clear_resolved_push_errors(
     issues_log: DataFrame, tool_calls: DataFrame, conv_language: DataFrame
 ) -> DataFrame:

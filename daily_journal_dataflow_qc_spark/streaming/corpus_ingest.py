@@ -16,8 +16,7 @@ Dedup semantics (documented divergence from batch): streaming keeps the
 FIRST ARRIVAL of each content hash within the watermark horizon; the
 batch tier's ``exact_dedup`` keeps the MIN-ID copy. The two agree when
 arrival order follows id order (the parity test constructs exactly that),
-and a re-delivery later than the watermark re-admits the content — the
-same bounded-horizon contract as the QC tier's pending sink.
+and a re-delivery later than the watermark re-admits the content.
 
 100-TB shape: gate before state (rejected docs never enter the dedup
 store), hash-only state keys, RocksDB + changelog checkpointing via the

@@ -9,20 +9,20 @@ Topology (single continuous job, checkpointed, exactly-once sinks):
           tool tag — no per-turn state)
       -> foreachBatch: day assignment + submission rank + acceptance split
          + IdempotentBatchSink commits                                     [exactly-once]
-         + tool-call gating against an INCREMENTAL key store (only new
-           source files are read per batch, never a full rescan)
-         + the batch transcript operators (dedup -> gap windows -> redact
-           -> sentence metrics -> transcript_side) over a ts-pruned re-read
-           of the admitted source slice, range-joined to the returned
-           closing diaries
+         + with tool calls: an INCREMENTAL key store of the tool-call rows
+           (only new source files are read per batch, never a full
+           rescan), rolled up ONCE per batch by the batch tier's
+           tool_call_lifecycle, which two rules read:
+           - the returned gate: the batch transcript operators (dedup ->
+             gap windows -> redact -> sentence metrics -> transcript_side)
+             over a ts-pruned re-read of the admitted source slice,
+             range-joined to the returned closing diaries
+           - pending flags: the batch J7 rule, emitted in the batch where
+             a key first becomes pending                                   [J7/J8]
 
     transcripts stream -> applyInPandasWithState(conv_id)                  [keyed validator]
          monotone turn_idx high-watermark + exact missing-gap set; emits
          duplicate / out-of-order flag rows (O(gaps) state per conv)
-
-    tool_calls stream (requests) x (returns): watermarked left-outer
-         stream-stream join with a 14-day event-time range; requests that
-         survive unmatched past the watermark emit pending flags            [J7/J8]
 
 Submission rank inside foreachBatch is per-micro-batch — the reference's own
 semantics (mindlamp_accounting.py:145-147 numbers within the ingest batch;
@@ -34,21 +34,23 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from .. import schemas
-from ..functions.naming import with_language_marker
 from ..operators import compile as compile_ops
 from ..operators.diaries import audio_qc, dedup_turns, session_identity
 from ..operators.transcript import (
     DIARY_COLS,
     DIARY_KEY,
     gap_stats,
+    pending_return,
     redact_projection,
+    returned_accepted_diaries,
     text_stats,
+    tool_call_lifecycle,
     transcript_side,
 )
 from ..sources.table_format import is_catalog_table, read_table
@@ -238,6 +240,45 @@ def _write_concurrently(jobs: list, batch_id: int) -> None:
             f.result()
 
 
+def _newly_pending(
+    store: DataFrame, lifecycle: DataFrame, batch_id: int, cfg: PipelineConfig
+) -> DataFrame:
+    """Pending-return flags (J7) first raised in ``batch_id``: keys pending
+    over every store row and not pending over the rows ingested before
+    this batch (``_batch < batch_id``), each side with its own clock.
+
+    The rule is the batch tier's (``transcript.pending_return`` over
+    ``tool_call_lifecycle``); the stream's "today" is the newest ingested
+    tool-call ts minus cfg.watermark_delay, a scalar subquery, so building
+    the frame runs no job. The store only grows, so per key ``has_request``,
+    ``returned`` and ``n_attempts`` only turn on or rise, the clock only
+    rises and ``first_request_ts`` only falls: the batches in which a key
+    is pending are one contiguous run, and this emits each key once, with
+    no emitted-key set and no sink re-read. A replayed batch recomputes the
+    same rows, since the store ingests nothing under a committed batch id."""
+    delay = F.expr(f"INTERVAL {cfg.watermark_delay}")
+
+    def pending(rows: DataFrame, lc: DataFrame) -> DataFrame:
+        today = rows.agg(F.max("ts")).scalar() - delay
+        return lc.filter(pending_return(cfg, today))
+
+    before = store.filter(F.col("_batch") < batch_id)
+    was_pending = pending(before, tool_call_lifecycle(before)).select(
+        "conv_id", "request_key"
+    )
+    return (
+        pending(store, lifecycle)
+        .join(was_pending, ["conv_id", "request_key"], "left_anti")
+        .select(
+            "conv_id",
+            F.col("request_key").alias("filename"),
+            F.col("first_request_ts").alias("req_ts"),
+            F.lit("pre-transcript").alias("file_stage"),
+            F.lit(compile_ops.MSG_PENDING).alias("error_message"),
+        )
+    )
+
+
 def start_session_qc_query(
     spark: SparkSession,
     input_dir: str,
@@ -256,7 +297,8 @@ def start_session_qc_query(
     trip having RETURNED by batch time (reference: transcripts exist only
     after the SFTP pull) and redaction-violated diaries are excluded +
     flagged — by the batch transcript operators, over a re-read of the
-    returned closing diaries' turns.
+    returned closing diaries' turns. Pending-return flags (J7) go to the
+    ``pending_flags`` sink (see _newly_pending).
 
     Returns (query, {sink_name: IdempotentBatchSink}).
     """
@@ -276,6 +318,7 @@ def start_session_qc_query(
         sinks["turn_stats"] = IdempotentBatchSink(output_root, "turn_stats")
         sinks["violations"] = IdempotentBatchSink(output_root, "violations")
         sinks["disfluencies"] = IdempotentBatchSink(output_root, "disfluencies")
+        sinks["pending_flags"] = IdempotentBatchSink(output_root, "pending_flags")
     meta = conv_meta  # captured; static dimension
 
     key_store = (
@@ -320,40 +363,29 @@ def start_session_qc_query(
                 batch_id,
             )
             if tool_calls_dir:
-                # returned gating: round trip complete as of this batch.
                 # INCREMENTAL: only tool-call files not yet ingested are
-                # read this batch; the gate joins against the accumulated
-                # compact (conv_id, filename, kind) key store — never a
-                # per-batch full rescan of the source table.
+                # read this batch; the rules read the accumulated compact
+                # store — never a per-batch full rescan of the source table.
                 key_store.ingest(
                     spark,
                     tool_calls_dir,
                     batch_id,
                     schemas.TOOL_CALLS,
                     lambda df: df.select(
-                        "conv_id", F.col("request_key").alias("_tool_key"), "kind"
+                        "conv_id", "request_key", "kind", "ts",
+                        F.lit(batch_id).cast("long").alias("_batch"),
                     ),
                 )
-                keys = key_store.read(spark)
-                req = keys.filter(F.col("kind") == "request").drop("kind")
-                ret = keys.filter(F.col("kind") == "return").drop("kind")
-                # the tool side names files with the language marker (S10);
-                # match on the marked name. No broadcast hint: the key store
-                # is usually tiny (AQE will broadcast it), but it grows with
-                # total diaries — forcing a broadcast would eventually OOM
-                # the driver at scale. session_start stands in for the
-                # batch tier's session_id: unique per conv, never written.
-                marked = accepted.withColumn(
-                    "_tool_key",
-                    with_language_marker(F.col("filename"), F.col("language")),
-                )
+                # no broadcast hint on the store: it is usually tiny (AQE
+                # will broadcast it), but it grows with total diaries —
+                # forcing a broadcast would eventually OOM the driver
+                store = key_store.read(spark)
+                lifecycle = tool_call_lifecycle(store)
+                # returned gating: round trip complete as of this batch.
+                # session_start stands in for the batch tier's session_id:
+                # unique per conv, never written.
                 returned = (
-                    marked.join(
-                        req.join(ret, ["conv_id", "_tool_key"], "left_semi"),
-                        ["conv_id", "_tool_key"],
-                        "left_semi",
-                    )
-                    .drop("_tool_key")
+                    returned_accepted_diaries(qc, lifecycle=lifecycle)
                     .withColumn("session_id", F.col("session_start"))
                     .persist()
                 )
@@ -432,6 +464,10 @@ def start_session_qc_query(
                             ),
                         ),
                         (sinks["turn_stats"], side.turn_stats),
+                        (
+                            sinks["pending_flags"],
+                            _newly_pending(store, lifecycle, batch_id, cfg),
+                        ),
                     ],
                     batch_id,
                 )
@@ -478,127 +514,6 @@ def start_validator_query(
         flags.writeStream.outputMode("append")
         .foreachBatch(write_flags)
         .option("checkpointLocation", os.path.join(output_root, "_checkpoint_validator"))
-        .trigger(**_trigger_kwargs(trigger_seconds))
-        .start()
-    )
-    return q, sink
-
-
-def start_pending_flags_query(
-    spark: SparkSession,
-    tool_calls_dir: str,
-    output_root: str,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    trigger_seconds: float | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """J7/J8: watermarked left-outer stream-stream join of requests x returns.
-    Requests with no return within the deadline are emitted once the
-    watermark passes request_ts + deadline (event-time timeout).
-
-    Batch-tier parity (issues_set):
-
-    * requests are deduped to FIRST arrival per (conv_id, request_key)
-      before the join — S8 retries would otherwise emit one pending row per
-      attempt (the batch tier ages the min request ts),
-    * keys whose retries exhausted without a return are anti-joined out in
-      the sink: the batch tier flags them 'TranscribeMe SFTP upload failed'
-      and EXCLUDES them from pending. Attempt counts come from a batch read
-      of the already-admitted tool-call files scoped (broadcast semi-join)
-      to the handful of keys emitting this batch — by emission time the
-      watermark is 14 days past the first attempt, so every retry (5 s
-      backoff) has long been admitted and the count is exact.
-    """
-    _apply_stream_conf(spark)
-    from ..operators.transcript import push_attempt_stats, retries_exhausted
-
-    tc = _read_stream(spark, tool_calls_dir, schemas.TOOL_CALLS, max_files_per_trigger)
-    req = (
-        tc.filter(F.col("kind") == "request")
-        .select("conv_id", "request_key", F.col("ts").alias("req_ts"))
-        .withWatermark("req_ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["conv_id", "request_key"])
-    )
-    ret = (
-        tc.filter(F.col("kind") == "return")
-        .select(
-            F.col("conv_id").alias("r_conv_id"),
-            F.col("request_key").alias("r_request_key"),
-            F.col("ts").alias("ret_ts"),
-        )
-        .withWatermark("ret_ts", "1 hour")
-    )
-    deadline = f"INTERVAL {cfg.pending_deadline_days} DAYS"
-    joined = req.join(
-        ret,
-        (F.col("conv_id") == F.col("r_conv_id"))
-        & (F.col("request_key") == F.col("r_request_key"))
-        & (F.col("ret_ts") >= F.col("req_ts"))
-        & (F.col("ret_ts") <= F.col("req_ts") + F.expr(deadline)),
-        "leftOuter",
-    )
-    pending = joined.filter(F.col("ret_ts").isNull()).select(
-        "conv_id",
-        F.col("request_key").alias("filename"),
-        F.col("req_ts"),
-        F.lit("pre-transcript").alias("file_stage"),
-        F.lit(compile_ops.MSG_PENDING).alias("error_message"),
-    )
-    sink = IdempotentBatchSink(output_root, "pending_flags")
-    checkpoint = os.path.join(output_root, "_checkpoint_pending")
-
-    def write_pending(df: DataFrame, batch_id: int) -> None:
-        if sink.committed(batch_id):
-            # replayed batch: still consume every partition so the join /
-            # dedup state commits (see write_batch's replay note)
-            df.write.format("noop").mode("overwrite").save()
-            return
-        # the semi-join below scopes the scan to the keys emitting now
-        tcb = _read_admitted(
-            spark, tool_calls_dir, schemas.TOOL_CALLS, checkpoint, batch_id
-        )
-        keys = df.select(
-            F.col("conv_id").alias("_c"), F.col("filename").alias("_k")
-        ).distinct()
-        scoped = tcb.join(
-            F.broadcast(keys),
-            (tcb["conv_id"] == F.col("_c")) & (tcb["request_key"] == F.col("_k")),
-            "left_semi",
-        )
-        exhausted = (
-            push_attempt_stats(scoped)
-            .filter(retries_exhausted(cfg))
-            .select("conv_id", F.col("request_key").alias("filename"))
-        )
-        out = df.join(F.broadcast(exhausted), ["conv_id", "filename"], "left_anti")
-        # one-row-per-key guarantee beyond the dedup watermark: the
-        # pre-join dropDuplicatesWithinWatermark holds its state only for
-        # the 1-hour watermark, so a retry of the same (conv_id,
-        # request_key) arriving >1h of event time after the first request
-        # re-enters the join and would emit a SECOND pending row for the
-        # key (the batch tier's issues_set is one row per key, aged from
-        # the MIN request ts). Two-level guard: keep-earliest within the
-        # emitting batch (both emissions usually become due at the same
-        # watermark advance), then anti-join against everything this sink
-        # already committed (emissions split across batches). Pending
-        # flags are rare (weeks-overdue requests), so both sides are tiny.
-        w_first = Window.partitionBy("conv_id", "filename").orderBy("req_ts")
-        out = (
-            out.withColumn("_rn", F.row_number().over(w_first))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        try:
-            prior = sink.read(spark).select("conv_id", "filename").distinct()
-            out = out.join(prior, ["conv_id", "filename"], "left_anti")
-        except FileNotFoundError:
-            pass  # first committed batch — nothing prior to dedupe against
-        sink.write(out, batch_id)
-
-    q = (
-        pending.writeStream.outputMode("append")
-        .foreachBatch(write_pending)
-        .option("checkpointLocation", checkpoint)
         .trigger(**_trigger_kwargs(trigger_seconds))
         .start()
     )

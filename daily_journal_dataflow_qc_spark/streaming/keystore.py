@@ -3,10 +3,16 @@
 Replaces the "re-read the whole side table every micro-batch" anti-pattern
 (O(batches x table) scans) with incremental ingestion: each micro-batch reads
 ONLY files not yet ingested (tracked transactionally in the per-batch commit
-manifest), projects them to the few key columns, and appends them to a
-compact parquet store. Consumers read the accumulated key set — one row per
-logical key, orders of magnitude smaller than the source table — instead of
-the full-width source.
+manifest), projects them to the few columns its consumers need, and appends
+them to a compact parquet store. Consumers read the accumulated distinct
+rows — far narrower than the full-width source — instead of the source.
+
+The gated QC stream (streaming/job.py) keeps its tool calls here as
+``(conv_id, request_key, kind, ts, _batch)``, where ``_batch`` is the id of
+the micro-batch that ingested the row. One ``tool_call_lifecycle`` rollup of
+the store serves two rules: the returned gate of the transcript sinks and
+the pending-return flags (J7), whose "before this batch" side is the rows
+with ``_batch`` below the current id.
 
 Exactly-once: ingestion piggybacks on IdempotentBatchSink's atomic per-batch
 manifest, so a replayed batch neither re-ingests nor double-counts; files

@@ -8,7 +8,13 @@ compare: re-run the queries and require BIT-EXACT equality against the
 
 Usage:
   python scripts/golden_compare.py dump    [--sfs sf0.001,sf0.01] [--queries a,b]
+                                           [--golden-dir DIR]
   python scripts/golden_compare.py compare [--sfs ...] [--queries ...]
+                                           [--golden-dir DIR]
+
+``--golden-dir`` is where the goldens live (default: GOLDEN_ROOT). To check
+a change against its parent, dump with the parent's checkout into one
+directory, then compare with the change's checkout against it.
 
 An optimization MUST NOT change what any query computes — this is the
 empirical gate (the driver's DuckDB-oracle hash check is the final word;
@@ -35,6 +41,7 @@ def main() -> None:
     ap.add_argument("mode", choices=["dump", "compare"])
     ap.add_argument("--sfs", default="sf0.001,sf0.01")
     ap.add_argument("--queries", default=None)
+    ap.add_argument("--golden-dir", default=GOLDEN_ROOT)
     args = ap.parse_args()
 
     import pandas as pd
@@ -50,7 +57,7 @@ def main() -> None:
     for sf in args.sfs.split(","):
         sf_dir = f"/root/testdata/{sf}"
         for name in names:
-            out_dir = os.path.join(GOLDEN_ROOT, sf, name)
+            out_dir = os.path.join(args.golden_dir, sf, name)
             df = qs[name](spark, sf_dir)
             cols = sorted(df.columns)
             pdf = df.toPandas()[cols].sort_values(cols, ignore_index=True)

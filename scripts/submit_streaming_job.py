@@ -13,7 +13,7 @@ Cluster deployment (the north-rule run mode):
         --conv-meta <conv_meta parquet> \\
         [--tool-calls <tool-call dir>] \\
         [--trigger 60] \\
-        [--with-validator] [--with-pending]
+        [--with-validator]
 
 Under spark-submit the session comes from the submit-provided context
 (master/deploy-mode/executors are cluster args, not code); `--py-files`
@@ -63,15 +63,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", help="output root (sinks + checkpoints + metrics)")
     ap.add_argument("--conv-meta", help="conv_meta parquet path")
     ap.add_argument("--tool-calls", default=None,
-                    help="tool-call stream dir (enables returned-gating + transcript sinks)")
+                    help="tool-call stream dir (enables returned-gating, the "
+                         "transcript sinks and the pending-flag sink)")
     ap.add_argument("--trigger", type=float, default=None,
                     help="processing-time trigger seconds; omit for availableNow")
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--with-validator", action="store_true",
                     help="also run the keyed turn-stream validator")
-    ap.add_argument("--with-pending", action="store_true",
-                    help="also run the request x return pending-flag join "
-                         "(requires --tool-calls)")
     ap.add_argument("--local", metavar="N", default=None,
                     help="run on local[N] instead of the submit-provided master "
                          "(smoke tests)")
@@ -100,7 +98,6 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     from daily_journal_dataflow_qc_spark.streaming.job import (
-        start_pending_flags_query,
         start_session_qc_query,
         start_validator_query,
     )
@@ -127,13 +124,6 @@ def main(argv: list[str] | None = None) -> int:
             trigger_seconds=args.trigger,
         )
         queries.append(qv)
-    if args.with_pending:
-        if not args.tool_calls:
-            ap.error("--with-pending requires --tool-calls")
-        qp, _ = start_pending_flags_query(
-            spark, args.tool_calls, args.output, trigger_seconds=args.trigger
-        )
-        queries.append(qp)
 
     # availableNow queries drain and stop; processing-time queries run until
     # killed (checkpoint makes the next submit resume exactly-once)

@@ -175,58 +175,53 @@ def test_compile_batch_joins_broadcast(spark, synth_dir, cfg):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_pending_flags_topology_plan_shape(spark, stream_input, cfg):
-    """Pending-flags stream guard (the one streaming topology previously
-    unpinned): requests x returns must run as a watermarked
-    stream-stream symmetric hash join fed by the first-arrival dedup —
-    never a SortMergeJoin — and the whole plan stays JVM-side (no Python
-    boundary)."""
+def test_gated_pending_write_scans_only_key_store(
+    spark, stream_input, synth_dir, cfg, monkeypatch
+):
+    """The gated query's pending-flag write reads the compact tool-call key
+    store and nothing else: no scan of the tool-calls directory, no
+    stream-stream join, and no Python boundary."""
+    import os
     import shutil
     import time
 
-    from daily_journal_dataflow_qc_spark.streaming.job import (
-        start_pending_flags_query,
+    from daily_journal_dataflow_qc_spark.streaming.job import start_session_qc_query
+    from daily_journal_dataflow_qc_spark.streaming.sink import IdempotentBatchSink
+
+    captured = []
+    write = IdempotentBatchSink.write
+
+    def capture(self, df, batch_id, extra=None):
+        if os.path.basename(self.dir) == "pending_flags":
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            captured.append((plan, df.inputFiles()))
+        write(self, df, batch_id, extra)
+
+    monkeypatch.setattr(IdempotentBatchSink, "write", capture)
+    out_root = "/tmp/djdq_pg_pending"
+    shutil.rmtree(out_root, ignore_errors=True)
+    q, _ = start_session_qc_query(
+        spark, f"{stream_input}/transcripts", out_root,
+        spark.read.parquet(f"{synth_dir}/conv_meta.parquet"), cfg,
+        max_files_per_trigger=1, tool_calls_dir=f"{stream_input}/tool_calls",
+        trigger_seconds=0.5,
     )
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    plan = None
-    last_err = None
-    # one retry with a fresh checkpoint: the shared sandbox host occasionally
-    # kills a trigger mid-commit (transient StreamingQueryException) — the
-    # guard's job is the PLAN SHAPE, which a clean restart re-exhibits; a
-    # persistent failure still fails the test with the real cause attached
-    for attempt in range(2):
-        out_root = f"/tmp/djdq_plan_guard_pending_{attempt}"
-        shutil.rmtree(out_root, ignore_errors=True)
-        q, _ = start_pending_flags_query(
-            spark, f"{stream_input}/tool_calls", out_root, cfg, trigger_seconds=0.5
-        )
-        deadline = time.time() + 300
-        try:
-            while time.time() < deadline:
-                if q.lastProgress is not None:
-                    plan = q._jsq.explainInternal(False)
-                    if "StreamingSymmetricHashJoin" in plan:
-                        break
-                time.sleep(0.2)
-        except StreamingQueryException as e:
-            last_err = e
-            plan = None
-        finally:
-            try:
-                q.stop()
-                q.awaitTermination(120)
-            except StreamingQueryException as e:
-                last_err = e
-        if plan is not None and "StreamingSymmetricHashJoin" in plan:
-            break
-    assert plan is not None, f"no micro-batch plan observed (last error: {last_err})"
-    assert "StreamingSymmetricHashJoin" in plan, plan
-    assert "StreamingDeduplicateWithinWatermark" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "ArrowEvalPython" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
+    deadline = time.time() + 300
+    try:
+        while not captured and time.time() < deadline:
+            time.sleep(0.2)
+    finally:
+        q.stop()
+        q.awaitTermination(120)
+    assert captured, "no pending-flag write observed"
+    plan, files = captured[0]
+    store = os.path.join(out_root, "_tool_call_keys")
+    scans = [l for l in plan.splitlines() if "FileScan" in l]
+    assert scans, plan
+    assert all("_tool_call_keys" in l for l in scans), scans
+    assert files and all(store in f for f in files), files
+    assert "StreamingSymmetricHashJoin" not in plan, plan
+    assert "EvalPython" not in plan, plan
 
 
 def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):

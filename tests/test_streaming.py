@@ -1,7 +1,8 @@
 """Streaming-mode tests (SURVEY §5.2.3): availableNow end-to-end parity with
 the batch engine, exactly-once kill/resume, keyed validator flags, and the
-stream-stream pending join."""
+gated query's pending flags."""
 
+import dataclasses
 import os
 import shutil
 import time
@@ -11,11 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from daily_journal_dataflow_qc_spark import schemas as schemas_mod
+from daily_journal_dataflow_qc_spark.operators.compile import MSG_PENDING
 from daily_journal_dataflow_qc_spark.pipeline import run_batch_from_dir
-from daily_journal_dataflow_qc_spark.streaming.job import (
-    start_pending_flags_query,
-    start_session_qc_query,
-)
+from daily_journal_dataflow_qc_spark.streaming.job import start_session_qc_query
 from daily_journal_dataflow_qc_spark.streaming.state import turn_stream_validator
 
 from .compare_util import compare_frames
@@ -301,10 +300,11 @@ def test_validator_rejects_corrupt_index_jump():
         list(validate_conv(("c",), iter([pdf]), _FakeGroupState()))
 
 
-def test_streaming_transcript_side_matches_batch(spark, stream_input, synth_dir, cfg):
-    """With returned-gating on, the streaming transcript QC + per-turn stats
-    equal the batch engine's (both compute only accepted+returned diaries;
-    the batch input stream contains every return, so gating converges)."""
+@pytest.fixture(scope="module")
+def gated_sinks(spark, stream_input, synth_dir, cfg):
+    """One gated availableNow drain of the pre-landed fixture (every tool
+    call lands before the first batch), shared by the transcript-side and
+    pending-flag tests."""
     out_root = "/tmp/djdq_stream_tside"
     shutil.rmtree(out_root, ignore_errors=True)
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
@@ -317,7 +317,14 @@ def test_streaming_transcript_side_matches_batch(spark, stream_input, synth_dir,
         tool_calls_dir=f"{stream_input}/tool_calls",
     )
     q.awaitTermination(600)
+    return sinks
 
+
+def test_streaming_transcript_side_matches_batch(spark, gated_sinks, synth_dir, cfg):
+    """With returned-gating on, the streaming transcript QC + per-turn stats
+    equal the batch engine's (both compute only accepted+returned diaries;
+    the batch input stream contains every return, so gating converges)."""
+    sinks = gated_sinks
     batch = run_batch_from_dir(spark, synth_dir, cfg)
 
     got_ts = sinks["turn_stats"].read(spark).toPandas()
@@ -677,58 +684,41 @@ def test_streaming_metrics_listener(spark, stream_input, cfg):
     assert m.state_rows_total.dropna().max() > 0
 
 
-def test_streaming_pending_flags_match_batch(spark, stream_input, synth_dir, cfg):
-    """Stream-stream left-outer join: requests unmatched within the deadline
-    == EXACTLY the batch engine's pending-flag key set (first-arrival dedup,
-    exhausted-retry keys excluded) for requests old enough that the final
-    watermark passed their deadline."""
-    out_root = "/tmp/djdq_stream_pending"
-    shutil.rmtree(out_root, ignore_errors=True)
-    q, sink = start_pending_flags_query(spark, f"{stream_input}/tool_calls", out_root, cfg)
-    q.awaitTermination(600)
-    got = sink.read(spark).toPandas()
+def _batch_pending_keys(spark, synth_dir, cfg, tool_calls):
+    """The batch tier's pending family (``issues_set``) at the stream's
+    clock: compute_date = to_date(max tool-call ts - cfg.watermark_delay)."""
+    clock = tool_calls.agg(
+        F.to_date(F.max("ts") - F.expr(f"INTERVAL {cfg.watermark_delay}"))
+    ).head()[0]
+    issues = run_batch_from_dir(
+        spark, synth_dir, dataclasses.replace(cfg, compute_date=clock)
+    ).issues
+    pend = issues.filter(F.col("error_message") == MSG_PENDING).toPandas()
+    return set(zip(pend.conv_id, pend.filename))
 
-    tc = pd.read_parquet(f"{synth_dir}/tool_calls.parquet")
-    req = tc[tc.kind == "request"]
-    ret = tc[tc.kind == "return"]
-    ret_keys = set(zip(ret.conv_id, ret.request_key))
-    # batch issues_set semantics: attempts = distinct request ts per key;
-    # >= max_push_attempts with no return -> upload-failed, NOT pending
-    att = (
-        req.drop_duplicates(["conv_id", "request_key", "ts"])
-        .groupby(["conv_id", "request_key"])
-        .size()
+
+def test_streaming_pending_flags_match_batch(spark, gated_sinks, stream_input, synth_dir, cfg):
+    """The gated query's pending_flags sink == EXACTLY the batch engine's
+    pending family at the stream's clock, one row per key, aged from the
+    first arrival (exhausted-retry keys are upload-failed, not pending)."""
+    got = gated_sinks["pending_flags"].read(spark).toPandas()
+    expect = _batch_pending_keys(
+        spark, synth_dir, cfg, spark.read.parquet(f"{stream_input}/tool_calls")
     )
-    exhausted = {
-        k for k, n in att.items()
-        if n >= cfg.max_push_attempts and k not in ret_keys
-    }
-    # the global watermark is the MIN across both inputs' watermarks
-    # (each = max event time seen - 1h delay); ages use the FIRST arrival.
-    # A key whose return arrived AFTER the deadline is still flagged — the
-    # reference raises the pending flag at the 2-week cron and the issues
-    # log never forgets it (that is what transcribeme_return_error_clear
-    # exists to clean up); only within-deadline returns suppress the flag.
-    first_ts = req.groupby(["conv_id", "request_key"]).ts.min()
-    ret_first = ret.groupby(["conv_id", "request_key"]).ts.min()
-    wm = min(req.ts.max(), ret.ts.max()) - pd.Timedelta(hours=1)
-    deadline = pd.Timedelta(days=14)
-    expect = {
-        k
-        for k, t in first_ts.items()
-        if k not in exhausted
-        and (k not in ret_first.index or ret_first[k] > t + deadline)
-        and t + deadline < wm
-    }
     got_keys = set(zip(got.conv_id, got.filename))
     assert expect, "fixture produced no pending candidates"
-    assert exhausted, "fixture produced no exhausted-retry keys (S8 datagen)"
     assert got_keys == expect, (
         f"pending set mismatch: missing={sorted(expect - got_keys)[:5]} "
         f"extra={sorted(got_keys - expect)[:5]}"
     )
-    # first-arrival dedup: exactly one row per pending key
-    assert len(got) == len(got_keys), "duplicate pending rows for a retried key"
+    assert len(got) == len(got_keys), "duplicate pending rows for a key"
+    assert list(got.columns) == [
+        "conv_id", "filename", "req_ts", "file_stage", "error_message"
+    ]
+    tc = pd.read_parquet(f"{synth_dir}/tool_calls.parquet")
+    first = tc[tc.kind == "request"].groupby(["conv_id", "request_key"]).ts.min()
+    for r in got.itertuples():
+        assert pd.Timestamp(r.req_ts, tz="UTC") == first[(r.conv_id, r.filename)]
 
 
 def test_submit_entrypoint_local(spark, stream_input, synth_dir):
@@ -807,23 +797,13 @@ def test_catalog_table_streaming_e2e(spark, stream_input, synth_dir, cfg):
     got_tqc = sinks["transcript_qc"].read(spark).toPandas()
     assert len(got_tqc) == batch.transcript_qc.count()
 
-    # pending-flags query from the same catalog table: key set == batch tier
-    pend_root = "/tmp/djdq_stream_catalog_pending"
-    shutil.rmtree(pend_root, ignore_errors=True)
-    q2, psink = start_pending_flags_query(spark, "cat_e2e.tool_calls", pend_root, cfg)
-    q2.awaitTermination(600)
-    got_pending = set(
-        zip(*(lambda p: (p.conv_id, p.filename))(psink.read(spark).toPandas()))
-    )
-    file_root = "/tmp/djdq_stream_catalog_pending_files"
-    shutil.rmtree(file_root, ignore_errors=True)
-    q3, fsink = start_pending_flags_query(
-        spark, f"{stream_input}/tool_calls", file_root, cfg
-    )
-    q3.awaitTermination(600)
-    fp = fsink.read(spark).toPandas()
-    assert got_pending == set(zip(fp.conv_id, fp.filename))
+    # the gated query's pending flags from the catalog table == batch tier
+    pend = sinks["pending_flags"].read(spark).toPandas()
+    got_pending = set(zip(pend.conv_id, pend.filename))
     assert got_pending, "fixture produced no pending keys"
+    assert got_pending == _batch_pending_keys(
+        spark, synth_dir, cfg, spark.table("cat_e2e.tool_calls")
+    )
     for name in ("transcripts", "tool_calls"):
         spark.sql(f"DROP TABLE cat_e2e.{name}")
 
@@ -871,76 +851,101 @@ def test_streamed_files_incremental_parse(tmp_path, monkeypatch):
     assert got == ["/data/other.parquet"]
 
 
-def test_pending_flag_single_row_for_late_retry(spark, cfg):
-    """ADVICE r04: a retry of the same (conv_id, request_key) arriving >1h
-    of EVENT time after the first request outlives the
-    dropDuplicatesWithinWatermark state and re-enters the stream-stream
-    join — the sink must still emit exactly ONE pending row per key (the
-    batch tier ages the min request ts), via in-batch keep-earliest +
-    the committed-keys anti-join."""
+def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
+    """Tool calls and transcripts land in event-time lockstep, one
+    availableNow drain per 7-day slice on one checkpoint. Each pending key
+    is emitted exactly once, in the drain whose tool calls move the clock
+    (max tool-call ts - watermark delay) past its deadline: a retry or a
+    return that lands after the flag neither re-emits nor retracts it, the
+    row keeps the first-arrival request ts, and a replayed batch recomputes
+    the same rows."""
     from daily_journal_dataflow_qc_spark import schemas
 
-    root = "/tmp/djdq_pending_late_retry"
+    root = "/tmp/djdq_pending_lockstep"
     shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/tool_calls"
-    os.makedirs(src)
-
+    conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
+    conv = conv_meta.select("conv_id").orderBy("conv_id").head()[0]
     t0 = pd.Timestamp("2023-03-01 10:00:00", tz="UTC")
+    D, S = pd.Timedelta(days=1), pd.Timedelta(seconds=1)
 
-    def tc(rows):
-        return pd.DataFrame(
-            {
-                "conv_id": [r[0] for r in rows],
-                "request_key": [r[1] for r in rows],
-                "kind": [r[3] if len(r) > 3 else "request" for r in rows],
-                "tool": ["transcribeme"] * len(rows),
-                "ts": [r[2] for r in rows],
-                "payload": [None] * len(rows),
-            }
-        )
+    def req(key, t, kind="request"):
+        return ("c_" + key, f"{key}.wav", kind, t)
 
-    # Shape MEASURED against the raw join (which emits k.wav TWICE for it —
-    # the guard is what collapses them): every pusher batch carries a RETURN
-    # row too (the global watermark is the MIN over both join inputs', and a
-    # returns side that never sees a row never advances — the join would
-    # never emit), and TWO pusher batches precede the retry (state cleanup
-    # runs against the PREVIOUS batch's watermark, so eviction of the t0
-    # dedup entry lands one batch after the watermark first passes t0+1h).
-    H = pd.Timedelta
-    batches = [
-        tc([("c1", "k.wav", t0), ("c2", "x.wav", t0)]),
-        tc([
-            ("c9", "wm1.wav", t0 + H(hours=6)),
-            ("c9", "wm1.wav", t0 + H(hours=6), "return"),
-        ]),
-        tc([
-            ("c9", "wm2.wav", t0 + H(hours=9)),
-            ("c9", "wm2.wav", t0 + H(hours=9), "return"),
-        ]),
-        # the late RETRY: 10h after the first request, well past the 1h
-        # dedup watermark and above the current global watermark (t0+8h)
-        tc([("c1", "k.wav", t0 + H(hours=10))]),
-        # final pusher: watermark sails past every deadline at once
-        tc([
-            ("c9", "wm3.wav", t0 + H(days=40)),
-            ("c9", "wm3.wav", t0 + H(days=40), "return"),
-        ]),
+    # clock after drain i = t0 + (7i + 6)d - 2d: every drain carries a
+    # round-tripped filler key at the end of its slice
+    tool_calls = [req(f"wm{i}", t0 + (7 * i + 6) * D) for i in range(4)]
+    tool_calls += [req(f"wm{i}", t0 + (7 * i + 6) * D, "return") for i in range(4)]
+    tool_calls += [
+        req("a", t0), req("a", t0 + 8 * D),          # retry before the flag
+        req("b", t0), req("b", t0 + 22 * D),         # retry after the flag
+        req("late", t0), req("late", t0 + 23 * D, "return"),  # late return
+        req("ok", t0 + D), req("ok", t0 + 8 * D, "return"),   # in time
+        req("later", t0 + 5 * D),                    # flagged in drain 3
+        *[req("exh", t0 + 5 * j * S) for j in range(cfg.max_push_attempts)],
     ]
-    for pdf in batches:
-        spark.createDataFrame(pdf, schema=schemas.TOOL_CALLS).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.2)
+    tc = pd.DataFrame(tool_calls, columns=["conv_id", "request_key", "kind", "ts"])
+    tc["tool"], tc["payload"] = "transcribeme", None
+    os.makedirs(f"{root}/tool_calls")
+    os.makedirs(f"{root}/transcripts")
 
-    out_root = f"{root}/out"
-    q, sink = start_pending_flags_query(
-        spark, src, out_root, cfg, max_files_per_trigger=1
+    def drain():
+        q, sinks = start_session_qc_query(
+            spark, f"{root}/transcripts", f"{root}/out", conv_meta, cfg,
+            tool_calls_dir=f"{root}/tool_calls",
+        )
+        q.awaitTermination(300)
+        return sinks
+
+    flagged_at = {}
+    for i in range(4):
+        lo, hi = t0 + 7 * i * D, t0 + 7 * (i + 1) * D
+        part = tc[(tc.ts >= lo) & (tc.ts < hi)][list(schemas.TOOL_CALLS.names)]
+        spark.createDataFrame(part, schemas.TOOL_CALLS).coalesce(1).write.mode(
+            "append"
+        ).parquet(f"{root}/tool_calls")
+        turns = pd.DataFrame({
+            "conv_id": conv, "turn_idx": [3 * i + j for j in range(1, 4)],
+            "role": "S1", "text": "a turn", "tool": None,
+            "ts": [lo + 4 * D + j * 10 * S for j in range(3)],
+        })
+        spark.createDataFrame(turns, schemas.TRANSCRIPTS).coalesce(1).write.mode(
+            "append"
+        ).parquet(f"{root}/transcripts")
+        time.sleep(1.2)
+        sinks = drain()
+        for k in sinks["pending_flags"].read(spark).toPandas().filename:
+            flagged_at.setdefault(k, i)
+
+    got = sinks["pending_flags"].read(spark).toPandas()
+    assert got.groupby(["conv_id", "filename"]).size().eq(1).all(), got.to_string()
+    assert flagged_at == {"a.wav": 2, "b.wav": 2, "late.wav": 2, "later.wav": 3}
+    req_ts = {r.filename: pd.Timestamp(r.req_ts, tz="UTC") for r in got.itertuples()}
+    assert req_ts == {
+        "a.wav": t0, "b.wav": t0, "late.wav": t0, "later.wav": t0 + 5 * D
+    }
+
+    # replay: drop the pending sink's manifest of the last batch that
+    # emitted rows, and the checkpoint's record of that batch and the
+    # no-data batch after it, so Spark re-runs both on the next drain
+    pending = sinks["pending_flags"]
+    last = max(
+        int(r[0].rsplit("batch_id=", 1)[1].split("/", 1)[0])
+        for r in pending.read(spark).select(F.input_file_name()).collect()
     )
-    q.awaitTermination(300)
-    got = sink.read(spark).toPandas()
-    per_key = got.groupby(["conv_id", "filename"]).size()
-    assert per_key.get(("c1", "k.wav"), 0) == 1, got.to_string()
-    assert per_key.get(("c2", "x.wav"), 0) == 1
-    # the retry must not have displaced the first-request age
-    k_rows = got[(got.conv_id == "c1") & (got.filename == "k.wav")]
-    assert pd.Timestamp(k_rows.iloc[0]["req_ts"], tz="UTC") == t0
+    cp = f"{root}/out/_checkpoint_qc"
+    for b in range(last, last + 2):
+        stale = [f"{pending.manifest_dir}/batch-{b}.json"]
+        stale += [f"{cp}/commits/{b}", f"{cp}/commits/.{b}.crc"]
+        if b > last:
+            stale += [f"{cp}/offsets/{b}", f"{cp}/offsets/.{b}.crc"]
+        for f in stale:
+            if os.path.exists(f):
+                os.remove(f)
+    assert not pending.committed(last)
+    replayed = drain()["pending_flags"].read(spark).toPandas()
+    assert pending.committed(last)
+    key = ["conv_id", "filename"]
+    pd.testing.assert_frame_equal(
+        replayed.sort_values(key, ignore_index=True),
+        got.sort_values(key, ignore_index=True),
+    )
