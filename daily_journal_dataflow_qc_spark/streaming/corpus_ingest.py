@@ -40,8 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.textanalysis import with_text_analysis
-from ..sources.table_format import read_table
-from .job import _apply_stream_conf
+from .job import _apply_stream_conf, _read_stream
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -84,14 +83,7 @@ def start_corpus_ingest_stream(
     micro-batch size (file sources only) — production backpressure knob and
     the kill/resume test's lever for multi-batch replay."""
     _apply_stream_conf(spark)
-    options = (
-        {"maxFilesPerTrigger": str(max_files_per_trigger)}
-        if max_files_per_trigger
-        else None
-    )
-    docs = read_table(
-        spark, input_loc, DOC_STREAM_SCHEMA, streaming=True, options=options
-    )
+    docs = _read_stream(spark, input_loc, DOC_STREAM_SCHEMA, max_files_per_trigger)
     scored = with_text_analysis(docs)
     admitted = (
         scored.filter(
@@ -218,14 +210,7 @@ def start_budget_admission_stream(
     _apply_stream_conf(spark)
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    options = (
-        {"maxFilesPerTrigger": str(max_files_per_trigger)}
-        if max_files_per_trigger
-        else None
-    )
-    docs = read_table(
-        spark, admitted_loc, ADMITTED_SCHEMA, streaming=True, options=options
-    )
+    docs = _read_stream(spark, admitted_loc, ADMITTED_SCHEMA, max_files_per_trigger)
     admitted = docs.groupBy("source").applyInPandasWithState(
         _budget_admit_fn(source_budgets or {}, default_budget),
         outputStructType=BUDGET_OUT_SCHEMA,
@@ -336,14 +321,7 @@ def start_distinct_count_stream(
 
     from ..operators.sketches import hll_bucket_rho
 
-    options = (
-        {"maxFilesPerTrigger": str(max_files_per_trigger)}
-        if max_files_per_trigger
-        else None
-    )
-    docs = read_table(
-        spark, admitted_loc, ADMITTED_SCHEMA, streaming=True, options=options
-    )
+    docs = _read_stream(spark, admitted_loc, ADMITTED_SCHEMA, max_files_per_trigger)
     bucket, rho = hll_bucket_rho(F.col("text"), p)
     proj = docs.filter(F.col("text").isNotNull()).select(
         "source", bucket.alias("bucket"), rho.alias("rho")

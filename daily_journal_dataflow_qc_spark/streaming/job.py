@@ -7,12 +7,15 @@ Topology (single continuous job, checkpointed, exactly-once sinks):
       -> groupBy(conv_id, session_window(ts, gap)) agg                     [diary assembly]
          (the diary identity aggregates ONLY: start, end, turn count,
           tool tag — no per-turn state)
+      [with tool calls: unioned with the tool-call stream (conv_id,
+       request_key, kind, ts), the query's second source]
       -> foreachBatch: day assignment + submission rank + acceptance split
          + IdempotentBatchSink commits                                     [exactly-once]
-         + with tool calls: an INCREMENTAL key store of the tool-call rows
-           (only new source files are read per batch, never a full
-           rescan), rolled up ONCE per batch by the batch tier's
-           tool_call_lifecycle, which two rules read:
+         + with tool calls: the batch's admitted tool-call rows appended
+           to an incremental key store (the source's offset log is the
+           one admission mechanism, never a full rescan), rolled up ONCE
+           per batch by the batch tier's tool_call_lifecycle, which two
+           rules read:
            - the returned gate: the batch transcript operators (dedup ->
              gap windows -> redact -> sentence metrics -> transcript_side)
              over a ts-pruned re-read of the admitted source slice,
@@ -56,6 +59,9 @@ from ..operators.transcript import (
 from ..sources.table_format import is_catalog_table, read_table
 from .keystore import IncrementalKeyStore
 from .sink import IdempotentBatchSink
+
+#: the tool-call columns the gated query admits and its key store keeps
+TOOL_CALL_COLS = ["conv_id", "request_key", "kind", "ts"]
 
 STREAM_CONF = {
     # RocksDB-backed keyed state (north star): state lives off-heap in a
@@ -244,18 +250,19 @@ def _newly_pending(
     store: DataFrame, lifecycle: DataFrame, batch_id: int, cfg: PipelineConfig
 ) -> DataFrame:
     """Pending-return flags (J7) first raised in ``batch_id``: keys pending
-    over every store row and not pending over the rows ingested before
+    over every store row and not pending over the rows admitted before
     this batch (``_batch < batch_id``), each side with its own clock.
 
     The rule is the batch tier's (``transcript.pending_return`` over
-    ``tool_call_lifecycle``); the stream's "today" is the newest ingested
+    ``tool_call_lifecycle``); the stream's "today" is the newest admitted
     tool-call ts minus cfg.watermark_delay, a scalar subquery, so building
     the frame runs no job. The store only grows, so per key ``has_request``,
     ``returned`` and ``n_attempts`` only turn on or rise, the clock only
     rises and ``first_request_ts`` only falls: the batches in which a key
     is pending are one contiguous run, and this emits each key once, with
     no emitted-key set and no sink re-read. A replayed batch recomputes the
-    same rows, since the store ingests nothing under a committed batch id."""
+    same rows, since the store appends nothing under a committed batch id
+    and otherwise exactly the rows the offset log admitted in the batch."""
     delay = F.expr(f"INTERVAL {cfg.watermark_delay}")
 
     def pending(rows: DataFrame, lc: DataFrame) -> DataFrame:
@@ -298,7 +305,11 @@ def start_session_qc_query(
     after the SFTP pull) and redaction-violated diaries are excluded +
     flagged — by the batch transcript operators, over a re-read of the
     returned closing diaries' turns. Pending-return flags (J7) go to the
-    ``pending_flags`` sink (see _newly_pending).
+    ``pending_flags`` sink (see _newly_pending). The tool calls are the
+    query's second streaming source, so a batch also runs when only tool
+    calls land; a checkpoint of the query without them cannot be resumed
+    with them, nor the other way round (Spark refuses a changed source
+    count).
 
     Returns (query, {sink_name: IdempotentBatchSink}).
     """
@@ -307,6 +318,19 @@ def start_session_qc_query(
     # incremental admission a file stream gets from its metadata log
     turns = _read_stream(spark, input_dir, schemas.TRANSCRIPTS, max_files_per_trigger)
     diary_stream = session_qc_aggregate(turns, cfg)
+    diary_cols = diary_stream.columns
+    stream = diary_stream
+    if tool_calls_dir:
+        # the second source, unioned after the session aggregate: its rows
+        # carry the _tool_call tag, the diary rows a NULL there. The
+        # transcripts stay sources/0 of the checkpoint (_streamed_files
+        # reads that log). No maxFilesPerTrigger: each batch admits every
+        # tool-call file present.
+        tool_calls = _read_stream(spark, tool_calls_dir, schemas.TOOL_CALLS, None)
+        stream = diary_stream.unionByName(
+            tool_calls.select(*TOOL_CALL_COLS, F.lit(True).alias("_tool_call")),
+            allowMissingColumns=True,
+        )
 
     sinks = {
         "audio_qc": IdempotentBatchSink(output_root, "audio_qc"),
@@ -337,11 +361,27 @@ def start_session_qc_query(
             # the stateful lineage processes every partition, then return.
             batch_df.write.format("noop").mode("overwrite").save()
             return
-        # the batch identity tail + acceptance predicate over this batch's
-        # closed sessions (per-batch submission rank = reference semantics)
-        qc = audio_qc(session_identity(batch_df, meta, cfg), cfg).persist()
-        persisted = [qc]
+        persisted = []
+        diaries = batch_df
         try:
+            if tool_calls_dir:
+                batch = batch_df.persist()
+                persisted.append(batch)
+                # one action materializes the union batch (the stateful
+                # subtree must run exactly once per batch, also on a
+                # replay) and counts the tool-call rows it admitted
+                n_calls = batch.agg(F.count("_tool_call")).head()[0]
+                diaries = batch.filter(F.col("_tool_call").isNull()).select(
+                    *diary_cols
+                )
+                calls = batch.filter(F.col("_tool_call")).select(
+                    *TOOL_CALL_COLS, F.lit(batch_id).cast("long").alias("_batch")
+                )
+            # the batch identity tail + acceptance predicate over this
+            # batch's closed sessions (per-batch submission rank =
+            # reference semantics)
+            qc = audio_qc(session_identity(diaries, meta, cfg), cfg).persist()
+            persisted.append(qc)
             # materialize the cache ONCE before fanning out: concurrent
             # first actions on an unmaterialized persisted frame race to
             # compute the stateful upstream (per-partition cache locks
@@ -363,23 +403,18 @@ def start_session_qc_query(
                 batch_id,
             )
             if tool_calls_dir:
-                # INCREMENTAL: only tool-call files not yet ingested are
-                # read this batch; the rules read the accumulated compact
-                # store — never a per-batch full rescan of the source table.
-                key_store.ingest(
-                    spark,
-                    tool_calls_dir,
-                    batch_id,
-                    schemas.TOOL_CALLS,
-                    lambda df: df.select(
-                        "conv_id", "request_key", "kind", "ts",
-                        F.lit(batch_id).cast("long").alias("_batch"),
-                    ),
-                )
+                # INCREMENTAL: the store gains exactly the tool-call rows
+                # this batch admitted; the rules read the accumulated
+                # compact store — never a per-batch rescan of the source.
+                if n_calls:
+                    key_store.append(calls, batch_id)
                 # no broadcast hint on the store: it is usually tiny (AQE
                 # will broadcast it), but it grows with total diaries —
                 # forcing a broadcast would eventually OOM the driver
-                store = key_store.read(spark)
+                try:
+                    store = key_store.read(spark)
+                except FileNotFoundError:
+                    store = calls  # no tool call admitted yet: empty
                 lifecycle = tool_call_lifecycle(store)
                 # returned gating: round trip complete as of this batch.
                 # session_start stands in for the batch tier's session_id:
@@ -448,35 +483,39 @@ def start_session_qc_query(
                 violations = returned.join(
                     side.violated, DIARY_KEY, "left_semi"
                 ).select("conv_id", "day", "daily_submission_number", "filename")
-                _write_concurrently(
-                    [
-                        (sinks["violations"], violations),
-                        (
-                            sinks["transcript_qc"],
-                            side.transcript_qc.select(
-                                *schemas.TRANSCRIPT_QC.fieldNames()
-                            ),
+                transcript_jobs = [
+                    (sinks["violations"], violations),
+                    (
+                        sinks["transcript_qc"],
+                        side.transcript_qc.select(
+                            *schemas.TRANSCRIPT_QC.fieldNames()
                         ),
-                        (
-                            sinks["disfluencies"],
-                            side.disfluencies.select(
-                                *schemas.DISFLUENCIES.fieldNames()
-                            ),
+                    ),
+                    (
+                        sinks["disfluencies"],
+                        side.disfluencies.select(
+                            *schemas.DISFLUENCIES.fieldNames()
                         ),
-                        (sinks["turn_stats"], side.turn_stats),
+                    ),
+                    (sinks["turn_stats"], side.turn_stats),
+                ]
+                # with no tool-call row admitted, the store and the clock
+                # are those of the previous batch, so no key can become
+                # pending (this covers Spark's no-data eviction batch)
+                if n_calls:
+                    transcript_jobs.append(
                         (
                             sinks["pending_flags"],
                             _newly_pending(store, lifecycle, batch_id, cfg),
-                        ),
-                    ],
-                    batch_id,
-                )
+                        )
+                    )
+                _write_concurrently(transcript_jobs, batch_id)
         finally:
             for df in persisted:
                 df.unpersist()
 
     q = (
-        diary_stream.writeStream.outputMode("append")
+        stream.writeStream.outputMode("append")
         .foreachBatch(write_batch)
         .option("checkpointLocation", qc_checkpoint)
         .trigger(**_trigger_kwargs(trigger_seconds))

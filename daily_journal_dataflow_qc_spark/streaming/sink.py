@@ -41,7 +41,7 @@ class IdempotentBatchSink:
         except (json.JSONDecodeError, OSError):
             return False
 
-    def write(self, df: DataFrame, batch_id: int, extra: dict | None = None) -> None:
+    def write(self, df: DataFrame, batch_id: int) -> None:
         if self.committed(batch_id):
             return  # replayed batch after restart — exactly-once no-op
         out = os.path.join(self.dir, f"batch_id={batch_id}")
@@ -50,7 +50,7 @@ class IdempotentBatchSink:
         # never leave a truncated manifest that reads as committed
         tmp = self._manifest(batch_id) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "path": out, **(extra or {})}, f)
+            json.dump({"batch_id": batch_id, "path": out}, f)
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, self._manifest(batch_id))

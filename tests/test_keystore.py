@@ -1,50 +1,31 @@
-"""IncrementalKeyStore: incremental ingest, exactly-once replay, periodic
-compaction (bounded file count), and the unstable-file deferral window."""
+"""IncrementalKeyStore: append, exactly-once replay and periodic
+compaction (bounded file count)."""
 
 import glob
 import os
 import shutil
-import time
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from daily_journal_dataflow_qc_spark import schemas
 from daily_journal_dataflow_qc_spark.streaming.keystore import IncrementalKeyStore
 
 ROOT = "/tmp/djdq_keystore_test"
-SRC = f"{ROOT}/src"
 
 
-def _write_src(spark, i: int) -> None:
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [f"c{i}"],
-            "request_key": [f"k{i}"],
-            "kind": ["request"],
-            "tool": ["transcribeme"],
-            "ts": pd.to_datetime(["2023-03-01"]).tz_localize("UTC"),
-            "payload": [None],
-        }
+def _rows(spark, i: int):
+    """The rows a micro-batch admits: one key per batch."""
+    return spark.createDataFrame(
+        [(f"c{i}", f"k{i}", "request")], "conv_id string, _tool_key string, kind string"
     )
-    spark.createDataFrame(pdf, schema=schemas.TOOL_CALLS).coalesce(1).write.mode(
-        "append"
-    ).parquet(SRC)
-
-
-def _project(df):
-    return df.select("conv_id", F.col("request_key").alias("_tool_key"), "kind")
 
 
 def test_keystore_compaction_bounds_files_and_keeps_keys(spark):
     shutil.rmtree(ROOT, ignore_errors=True)
-    store = IncrementalKeyStore(ROOT, "_keys", compact_every=8, stability_window_s=0.0)
+    store = IncrementalKeyStore(ROOT, "_keys", compact_every=8)
 
     n_batches = 40
     for b in range(n_batches):
-        _write_src(spark, b)
-        store.ingest(spark, SRC, b, schemas.TOOL_CALLS, _project)
+        store.append(_rows(spark, b), b)
 
     got = store.read(spark).toPandas()
     assert sorted(got["_tool_key"]) == sorted(f"k{i}" for i in range(n_batches))
@@ -67,115 +48,14 @@ def test_keystore_compaction_bounds_files_and_keeps_keys(spark):
 
     # exactly-once: replaying an already-committed batch is a no-op
     before = store.read(spark).count()
-    store.ingest(spark, SRC, n_batches - 1, schemas.TOOL_CALLS, _project)
+    store.append(_rows(spark, 998), n_batches - 1)
     assert store.read(spark).count() == before
 
-    # a replay of a COMPACTED-AWAY batch id must be a FULL no-op: a new
-    # source file arriving just before the replay may NOT be ingested under
-    # a covered id (read() filters covered ids -> its keys would be lost
-    # forever while marked ingested)
-    _write_src(spark, 999)
-    store.ingest(spark, SRC, 3, schemas.TOOL_CALLS, _project)
+    # a replay of a COMPACTED-AWAY batch id must be a FULL no-op: rows
+    # appended under a covered id would be filtered by read() and lost
+    store.append(_rows(spark, 999), 3)
     assert store.read(spark).count() == before
-    # ...the next LIVE batch picks the file up instead
-    store.ingest(spark, SRC, n_batches, schemas.TOOL_CALLS, _project)
+    # ...the next LIVE batch appends
+    store.append(_rows(spark, 999), n_batches)
     got3 = store.read(spark).toPandas()
     assert "k999" in set(got3["_tool_key"]) and len(got3) == before + 1
-
-
-def test_keystore_defers_unstable_files(spark):
-    root = "/tmp/djdq_keystore_unstable"
-    shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/src"
-    store = IncrementalKeyStore(root, "_keys", stability_window_s=3600.0)
-
-    os.makedirs(src, exist_ok=True)
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["cX"],
-            "request_key": ["kX"],
-            "kind": ["request"],
-            "tool": ["transcribeme"],
-            "ts": pd.to_datetime(["2023-03-01"]).tz_localize("UTC"),
-            "payload": [None],
-        }
-    )
-    spark.createDataFrame(pdf, schema=schemas.TOOL_CALLS).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    # file is younger than the window -> deferred AND not marked ingested
-    store.ingest(spark, src, 0, schemas.TOOL_CALLS, _project)
-    assert store.read(spark).count() == 0
-    assert store._ingested_files() == set()
-
-    # age the file past the window -> picked up by the NEXT batch
-    old = time.time() - 7200
-    for f in glob.glob(f"{src}/*.parquet"):
-        os.utime(f, (old, old))
-    store.ingest(spark, src, 1, schemas.TOOL_CALLS, _project)
-    assert store.read(spark).toPandas()["_tool_key"].tolist() == ["kX"]
-
-
-def _tc_pdf(keys, ts_list):
-    return pd.DataFrame(
-        {
-            "conv_id": [f"c_{k}" for k in keys],
-            "request_key": list(keys),
-            "kind": ["request"] * len(keys),
-            "tool": ["transcribeme"] * len(keys),
-            "ts": pd.to_datetime(ts_list).tz_localize("UTC"),
-            "payload": [None] * len(keys),
-        }
-    )
-
-
-def test_keystore_catalog_hwm_ingest(spark):
-    """Catalog-table sources (the Iceberg path) have no file listing to diff:
-    ingestion switches to an event-time high-watermark — each batch reads
-    only rows newer than hwm - lateness, the HWM is recorded in the batch
-    manifest, survives compaction, and bounded-late rows inside the overlap
-    are still picked up (dedup at read())."""
-    root = "/tmp/djdq_keystore_catalog"
-    shutil.rmtree(root, ignore_errors=True)
-    spark.sql("CREATE DATABASE IF NOT EXISTS kscat")
-    spark.sql("DROP TABLE IF EXISTS kscat.tool_calls")
-    table = "kscat.tool_calls"
-    store = IncrementalKeyStore(root, "_keys", compact_every=2)
-
-    spark.createDataFrame(
-        _tc_pdf(["k0", "k1"], ["2023-03-01 10:00:00", "2023-03-01 11:00:00"]),
-        schema=schemas.TOOL_CALLS,
-    ).write.mode("overwrite").saveAsTable(table)
-    store.ingest(spark, table, 0, schemas.TOOL_CALLS, _project)
-    assert sorted(store.read(spark).toPandas()["_tool_key"]) == ["k0", "k1"]
-    assert store._latest_hwm() == int(
-        pd.Timestamp("2023-03-01 11:00:00", tz="UTC").value // 1000
-    )
-
-    # new rows: one past the HWM, one 30min LATE (inside the 1h overlap)
-    spark.createDataFrame(
-        _tc_pdf(["k2", "k_late"], ["2023-03-01 12:00:00", "2023-03-01 10:30:00"]),
-        schema=schemas.TOOL_CALLS,
-    ).write.mode("append").saveAsTable(table)
-    store.ingest(spark, table, 1, schemas.TOOL_CALLS, _project)
-    got = sorted(store.read(spark).toPandas()["_tool_key"])
-    assert got == ["k0", "k1", "k2", "k_late"]
-
-    # compaction (compact_every=2) folded both batches: HWM carried forward,
-    # replay of a covered batch no-ops, and the next batch continues from it
-    comp = store._latest_compaction()
-    assert comp is not None and int(comp["hwm"]) == int(
-        pd.Timestamp("2023-03-01 12:00:00", tz="UTC").value // 1000
-    )
-    store.ingest(spark, table, 0, schemas.TOOL_CALLS, _project)  # covered replay
-    assert sorted(store.read(spark).toPandas()["_tool_key"]) == got
-
-    spark.createDataFrame(
-        _tc_pdf(["k3"], ["2023-03-01 13:00:00"]), schema=schemas.TOOL_CALLS
-    ).write.mode("append").saveAsTable(table)
-    store.ingest(spark, table, 2, schemas.TOOL_CALLS, _project)
-    assert "k3" in set(store.read(spark).toPandas()["_tool_key"])
-    # a duplicate re-delivery of an old key inside the overlap dedupes
-    assert store.read(spark).count() == 5
-    spark.sql("DROP TABLE kscat.tool_calls")

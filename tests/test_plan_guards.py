@@ -191,11 +191,11 @@ def test_gated_pending_write_scans_only_key_store(
     captured = []
     write = IdempotentBatchSink.write
 
-    def capture(self, df, batch_id, extra=None):
+    def capture(self, df, batch_id):
         if os.path.basename(self.dir) == "pending_flags":
             plan = df._jdf.queryExecution().executedPlan().toString()
             captured.append((plan, df.inputFiles()))
-        write(self, df, batch_id, extra)
+        write(self, df, batch_id)
 
     monkeypatch.setattr(IdempotentBatchSink, "write", capture)
     out_root = "/tmp/djdq_pg_pending"

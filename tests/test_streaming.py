@@ -759,8 +759,8 @@ def test_submit_entrypoint_local(spark, stream_input, synth_dir):
 
 def test_catalog_table_streaming_e2e(spark, stream_input, synth_dir, cfg):
     """North-star addressing end-to-end: BOTH streaming sources given as
-    catalog tables (the Iceberg path — readStream.table admission, batch
-    re-reads + key-store ingestion dispatched through read_table). Guards
+    catalog tables (the Iceberg path — readStream.table admission of both,
+    batch re-reads dispatched through read_table). Guards
     the ADVICE r04 regression: the foreachBatch fallbacks used to call
     spark.read.parquet(<dotted name>) (AnalysisException) and the key store
     silently ingested nothing from a table source (empty returned-gate ->
@@ -853,13 +853,19 @@ def test_streamed_files_incremental_parse(tmp_path, monkeypatch):
 
 def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
     """Tool calls and transcripts land in event-time lockstep, one
-    availableNow drain per 7-day slice on one checkpoint. Each pending key
-    is emitted exactly once, in the drain whose tool calls move the clock
-    (max tool-call ts - watermark delay) past its deadline: a retry or a
-    return that lands after the flag neither re-emits nor retracts it, the
-    row keeps the first-arrival request ts, and a replayed batch recomputes
-    the same rows."""
+    availableNow drain per 7-day slice on one checkpoint; the last drain
+    lands tool calls only. Each pending key is emitted exactly once, in the
+    drain whose tool calls move the clock (max tool-call ts - watermark
+    delay) past its deadline: a retry or a return that lands after the flag
+    neither re-emits nor retracts it, the row keeps the first-arrival
+    request ts, and a replayed batch recomputes the same rows from exactly
+    the tool-call rows its offset log admitted."""
+    import json
+
     from daily_journal_dataflow_qc_spark import schemas
+    from daily_journal_dataflow_qc_spark.streaming.keystore import (
+        IncrementalKeyStore,
+    )
 
     root = "/tmp/djdq_pending_lockstep"
     shutil.rmtree(root, ignore_errors=True)
@@ -873,14 +879,15 @@ def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
 
     # clock after drain i = t0 + (7i + 6)d - 2d: every drain carries a
     # round-tripped filler key at the end of its slice
-    tool_calls = [req(f"wm{i}", t0 + (7 * i + 6) * D) for i in range(4)]
-    tool_calls += [req(f"wm{i}", t0 + (7 * i + 6) * D, "return") for i in range(4)]
+    tool_calls = [req(f"wm{i}", t0 + (7 * i + 6) * D) for i in range(5)]
+    tool_calls += [req(f"wm{i}", t0 + (7 * i + 6) * D, "return") for i in range(5)]
     tool_calls += [
         req("a", t0), req("a", t0 + 8 * D),          # retry before the flag
         req("b", t0), req("b", t0 + 22 * D),         # retry after the flag
         req("late", t0), req("late", t0 + 23 * D, "return"),  # late return
         req("ok", t0 + D), req("ok", t0 + 8 * D, "return"),   # in time
         req("later", t0 + 5 * D),                    # flagged in drain 3
+        req("tonly", t0 + 17 * D),                   # flagged in drain 4
         *[req("exh", t0 + 5 * j * S) for j in range(cfg.max_push_attempts)],
     ]
     tc = pd.DataFrame(tool_calls, columns=["conv_id", "request_key", "kind", "ts"])
@@ -896,21 +903,24 @@ def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
         q.awaitTermination(300)
         return sinks
 
+    def land_tool_calls(part):
+        spark.createDataFrame(
+            part[list(schemas.TOOL_CALLS.names)], schemas.TOOL_CALLS
+        ).coalesce(1).write.mode("append").parquet(f"{root}/tool_calls")
+
     flagged_at = {}
-    for i in range(4):
+    for i in range(5):
         lo, hi = t0 + 7 * i * D, t0 + 7 * (i + 1) * D
-        part = tc[(tc.ts >= lo) & (tc.ts < hi)][list(schemas.TOOL_CALLS.names)]
-        spark.createDataFrame(part, schemas.TOOL_CALLS).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{root}/tool_calls")
-        turns = pd.DataFrame({
-            "conv_id": conv, "turn_idx": [3 * i + j for j in range(1, 4)],
-            "role": "S1", "text": "a turn", "tool": None,
-            "ts": [lo + 4 * D + j * 10 * S for j in range(3)],
-        })
-        spark.createDataFrame(turns, schemas.TRANSCRIPTS).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{root}/transcripts")
+        land_tool_calls(tc[(tc.ts >= lo) & (tc.ts < hi)])
+        if i < 4:  # the last drain lands tool calls only
+            turns = pd.DataFrame({
+                "conv_id": conv, "turn_idx": [3 * i + j for j in range(1, 4)],
+                "role": "S1", "text": "a turn", "tool": None,
+                "ts": [lo + 4 * D + j * 10 * S for j in range(3)],
+            })
+            spark.createDataFrame(turns, schemas.TRANSCRIPTS).coalesce(
+                1
+            ).write.mode("append").parquet(f"{root}/transcripts")
         time.sleep(1.2)
         sinks = drain()
         for k in sinks["pending_flags"].read(spark).toPandas().filename:
@@ -918,23 +928,52 @@ def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
 
     got = sinks["pending_flags"].read(spark).toPandas()
     assert got.groupby(["conv_id", "filename"]).size().eq(1).all(), got.to_string()
-    assert flagged_at == {"a.wav": 2, "b.wav": 2, "late.wav": 2, "later.wav": 3}
+    assert flagged_at == {
+        "a.wav": 2, "b.wav": 2, "late.wav": 2, "later.wav": 3, "tonly.wav": 4
+    }
     req_ts = {r.filename: pd.Timestamp(r.req_ts, tz="UTC") for r in got.itertuples()}
     assert req_ts == {
-        "a.wav": t0, "b.wav": t0, "late.wav": t0, "later.wav": t0 + 5 * D
+        "a.wav": t0, "b.wav": t0, "late.wav": t0, "later.wav": t0 + 5 * D,
+        "tonly.wav": t0 + 17 * D,
     }
 
-    # replay: drop the pending sink's manifest of the last batch that
-    # emitted rows, and the checkpoint's record of that batch and the
-    # no-data batch after it, so Spark re-runs both on the next drain
+    # source order: the transcripts are sources/0 (the log _streamed_files
+    # reads), the tool calls sources/1
+    cp = f"{root}/out/_checkpoint_qc"
+
+    def logged_dirs(n):
+        src = f"{cp}/sources/{n}"
+        return {
+            os.path.basename(os.path.dirname(json.loads(line)["path"]))
+            for name in os.listdir(src) if name[0].isdigit()
+            for line in open(f"{src}/{name}") if line.startswith("{")
+        }
+
+    assert logged_dirs(0) == {"transcripts"}
+    assert logged_dirs(1) == {"tool_calls"}
+
+    # replay: drop the pending sink's and the key store's manifests of the
+    # last batch that emitted rows, and the checkpoint's record of that
+    # batch and of any no-data batch after it, so Spark re-runs them on the
+    # next drain; a tool-call file landing before that drain must go to a
+    # later batch, not into the replayed one
     pending = sinks["pending_flags"]
+    store = IncrementalKeyStore(f"{root}/out", "_tool_call_keys")
     last = max(
         int(r[0].rsplit("batch_id=", 1)[1].split("/", 1)[0])
         for r in pending.read(spark).select(F.input_file_name()).collect()
     )
-    cp = f"{root}/out/_checkpoint_qc"
+    key = ["conv_id", "request_key", "kind", "ts"]
+    stored_last = (
+        store.read(spark).filter(F.col("_batch") == last).toPandas()
+        .sort_values(key, ignore_index=True)
+    )
+    assert len(stored_last)
     for b in range(last, last + 2):
-        stale = [f"{pending.manifest_dir}/batch-{b}.json"]
+        stale = [
+            f"{pending.manifest_dir}/batch-{b}.json",
+            f"{store.sink.manifest_dir}/batch-{b}.json",
+        ]
         stale += [f"{cp}/commits/{b}", f"{cp}/commits/.{b}.crc"]
         if b > last:
             stale += [f"{cp}/offsets/{b}", f"{cp}/offsets/.{b}.crc"]
@@ -942,10 +981,21 @@ def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
             if os.path.exists(f):
                 os.remove(f)
     assert not pending.committed(last)
+    new = pd.DataFrame(
+        [req("new", t0 + 20 * D), req("new", t0 + 20 * D + S, "return")],
+        columns=["conv_id", "request_key", "kind", "ts"],
+    )
+    new["tool"], new["payload"] = "transcribeme", None
+    land_tool_calls(new)
     replayed = drain()["pending_flags"].read(spark).toPandas()
     assert pending.committed(last)
-    key = ["conv_id", "filename"]
     pd.testing.assert_frame_equal(
-        replayed.sort_values(key, ignore_index=True),
-        got.sort_values(key, ignore_index=True),
+        replayed.sort_values(["conv_id", "filename"], ignore_index=True),
+        got.sort_values(["conv_id", "filename"], ignore_index=True),
     )
+    rows = store.read(spark).toPandas()
+    pd.testing.assert_frame_equal(
+        rows[rows._batch == last].sort_values(key, ignore_index=True), stored_last
+    )
+    assert (rows[rows.request_key == "new.wav"]._batch > last).all()
+    assert len(rows[rows.request_key == "new.wav"]) == 2
