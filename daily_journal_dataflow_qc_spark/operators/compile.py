@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..config import PipelineConfig
 from ..functions.naming import strip_language_marker, with_language_marker
 from .transcript import pending_return, retries_exhausted
@@ -42,76 +43,11 @@ MSG_COMPLETED_NO_TRANSCRIPT = (
     "Audio marked as completed but pulled transcript not found"
 )
 
-REJECTED_COLS = [
-    "conv_id",
-    "day",
-    "daily_submission_number",
-    "overall_db",
-    "length_minutes",
-    "submit_hour_int",
-    "subject_consent_month",
-]
-
-# column order of the merged accepted set (graft of README.md:595-611 /
-# diary_qc_compilation.py:136-185)
-ACCEPTED_COLS = [
-    "conv_id",
-    "day",
-    "timeofday",
-    "weekday",
-    "daily_submission_number",
-    "submit_hour_int",
-    "length_minutes",
-    "overall_db",
-    "mean_flatness",
-    "subject_consent_month",
-    "audio_approved_bool",
-    # transcript QC block
-    "speakerID_count",
-    "S1_sentence_count",
-    "total_sentence_count",
-    "word_count",
-    "min_words_in_sen",
-    "max_words_in_sen",
-    "inaudible_count",
-    "questionable_count",
-    "other_bracketed_notation_count",
-    "redacted_count",
-    "final_timestamp_minutes",
-    "min_timestamp_space_seconds",
-    "max_timestamp_space_seconds",
-    "min_timestamp_space_per_word",
-    "max_timestamp_space_per_word",
-    "txt_encoding_type",
-    "redacted_csv_filename",
-    # disfluency block
-    "transcript_csv_name",
-    "nonverbal_edits_count",
-    "verbal_edits_count",
-    "repeats_count",
-    "restarts_count",
-    "total_disfluencies",
-    "nonverbal_edits_per_word",
-    "verbal_edits_per_word",
-    "repeats_per_word",
-    "restarts_per_word",
-    "disfluencies_per_minute",
-    # metadata block (carried on the diary row; reference re-joins it, J3/J4)
-    "submit_minute_int",
-    "local_time_converted",
-    "timezone_used",
-    "consent_date_at_accounting",
-    "expected_language",
-    "proposed_processed_name",
-    "date_mp3_first_detected",
-]
-
-
 def rejected_set(audio_qc_df: DataFrame) -> DataFrame:
     """diary_qc_compilation.py:110-120 — the rejected-audio data log."""
     return (
         audio_qc_df.filter(F.col("audio_approved_bool") != 1)
-        .select(*REJECTED_COLS)
+        .select(*schemas.REJECTED.fieldNames())
         # within-partition sort only: a global orderBy would range-shuffle the
         # whole output with no semantic need (files stay sorted; consumers
         # needing total order sort the final small CSV)
@@ -155,7 +91,7 @@ def accepted_set(
     ).filter(F.col("daily_submission_number") == 1)
     w = Window.partitionBy("conv_id", "day").orderBy("daily_submission_number", "local_time")
     merged = merged.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    return merged.select(*ACCEPTED_COLS).sortWithinPartitions("conv_id", "day")
+    return merged.select(*schemas.ACCEPTED.fieldNames()).sortWithinPartitions("conv_id", "day")
 
 
 def issues_set(

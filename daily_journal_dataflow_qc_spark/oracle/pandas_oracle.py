@@ -16,6 +16,7 @@ from zoneinfo import ZoneInfo
 import numpy as np
 import pandas as pd
 
+from .. import schemas
 from ..config import PipelineConfig
 
 _NONVERBAL_RE = re.compile(r"[^a-z]u+[hm]+[^a-z]")
@@ -426,23 +427,15 @@ def compute(
     merged = merged.sort_values(["conv_id", "day", "daily_submission_number"]).drop_duplicates(
         ["conv_id", "day"], keep="first"
     )
-    from ..operators.compile import ACCEPTED_COLS
-
-    accepted = merged[ACCEPTED_COLS].sort_values(["conv_id", "day"]).reset_index(drop=True)
+    accepted = (
+        merged[schemas.ACCEPTED.fieldNames()]
+        .sort_values(["conv_id", "day"])
+        .reset_index(drop=True)
+    )
 
     # rejected set
     rejected = (
-        dqc[dqc["audio_approved_bool"] != 1][
-            [
-                "conv_id",
-                "day",
-                "daily_submission_number",
-                "overall_db",
-                "length_minutes",
-                "submit_hour_int",
-                "subject_consent_month",
-            ]
-        ]
+        dqc[dqc["audio_approved_bool"] != 1][schemas.REJECTED.fieldNames()]
         .sort_values(["conv_id", "day", "daily_submission_number"])
         .reset_index(drop=True)
     )

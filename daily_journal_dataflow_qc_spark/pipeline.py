@@ -24,6 +24,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import schemas
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .operators import compile as compile_ops
 from .operators import diaries as diary_ops
@@ -113,14 +114,15 @@ def _build(
         turn_stats=tqc.select("conv_id", "day", "daily_submission_number"),
     )
 
+    # qc, tqc and disf stay wide above; every output is in its schemas layout
     return PipelineOutputs(
         accepted=accepted,
         rejected=rejected,
         issues=issues,
         turn_stats=side.turn_stats,
-        audio_qc=qc,
-        transcript_qc=tqc,
-        disfluencies=disf,
+        audio_qc=qc.select(*schemas.AUDIO_QC.fieldNames()),
+        transcript_qc=tqc.select(*schemas.TRANSCRIPT_QC.fieldNames()),
+        disfluencies=disf.select(*schemas.DISFLUENCIES.fieldNames()),
     )
 
 

@@ -1,8 +1,11 @@
-"""Explicit StructType schemas for every table the engine reads or writes.
+"""Explicit StructType schemas for the engine's input tables and QC outputs.
 
 Input shapes follow BASELINE.json's ``input_hint`` (transcripts) and
 FIXTURES.md (tool_calls, conv_meta). Output shapes re-express the reference's
-CSV catalog (SURVEY.md §1.2) keyed by conv_id instead of site+subject.
+CSV catalog (SURVEY.md §1.2) keyed by conv_id instead of site+subject, and
+are decided here alone: every batch ``PipelineOutputs`` field and every
+session-QC stream sink selects its layout's columns, in order. Internal state
+(the tool-call key store) and the validator's ``FLAG_SCHEMA`` are not outputs.
 """
 
 from __future__ import annotations
@@ -48,19 +51,27 @@ CONV_META = T.StructType(
 # ---------------------------------------------------------------- outputs
 
 # graft of *_diaryAudioQC.csv (reference audio_diary_qc.py:25)
+_AUDIO_QC_CSV = [
+    T.StructField("conv_id", T.StringType(), False),
+    T.StructField("day", T.IntegerType(), True),
+    T.StructField("timeofday", T.StringType(), True),
+    T.StructField("weekday", T.IntegerType(), True),
+    T.StructField("daily_submission_number", T.IntegerType(), True),
+    T.StructField("submit_hour_int", T.IntegerType(), True),
+    T.StructField("length_minutes", T.DoubleType(), True),
+    T.StructField("overall_db", T.DoubleType(), True),
+    T.StructField("mean_flatness", T.DoubleType(), True),
+    T.StructField("subject_consent_month", T.StringType(), True),
+    T.StructField("audio_approved_bool", T.IntegerType(), True),
+]
+# ... plus the diary keys readers use: the canonical filename, the session
+# start (a diary's identity across micro-batches) and the turn count
 AUDIO_QC = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("day", T.IntegerType(), True),
-        T.StructField("timeofday", T.StringType(), True),
-        T.StructField("weekday", T.IntegerType(), True),
-        T.StructField("daily_submission_number", T.IntegerType(), True),
-        T.StructField("submit_hour_int", T.IntegerType(), True),
-        T.StructField("length_minutes", T.DoubleType(), True),
-        T.StructField("overall_db", T.DoubleType(), True),
-        T.StructField("mean_flatness", T.DoubleType(), True),
-        T.StructField("subject_consent_month", T.StringType(), True),
-        T.StructField("audio_approved_bool", T.IntegerType(), True),
+    _AUDIO_QC_CSV
+    + [
+        T.StructField("filename", T.StringType(), True),
+        T.StructField("session_start", T.TimestampType(), True),
+        T.StructField("n_turns", T.LongType(), True),
     ]
 )
 
@@ -159,5 +170,58 @@ REJECTED = T.StructType(
         T.StructField("length_minutes", T.DoubleType(), True),
         T.StructField("submit_hour_int", T.IntegerType(), True),
         T.StructField("subject_consent_month", T.StringType(), True),
+    ]
+)
+
+
+def _without(schema: T.StructType, *names: str) -> list[T.StructField]:
+    return [f for f in schema.fields if f.name not in names]
+
+
+# the merged accepted set (graft of README.md:595-611 /
+# diary_qc_compilation.py:136-185): the audio QC row, the transcript QC and
+# disfluency blocks less their join keys, then the metadata block (carried
+# on the diary row; the reference re-joins it, J3/J4)
+ACCEPTED = T.StructType(
+    _AUDIO_QC_CSV
+    + _without(
+        TRANSCRIPT_QC, "conv_id", "day", "timeofday", "weekday",
+        "daily_submission_number",
+    )
+    + _without(
+        DISFLUENCIES, "conv_id", "day", "daily_submission_number",
+        "length_minutes", "total_word_count",
+    )
+    + [
+        T.StructField("submit_minute_int", T.IntegerType(), True),
+        T.StructField("local_time_converted", T.StringType(), True),
+        T.StructField("timezone_used", T.StringType(), True),
+        T.StructField("consent_date_at_accounting", T.StringType(), True),
+        T.StructField("expected_language", T.StringType(), True),
+        T.StructField("proposed_processed_name", T.StringType(), True),
+        T.StructField("date_mp3_first_detected", T.StringType(), True),
+    ]
+)
+
+# the gated stream's redaction-violation sink: the diaries the batch issues
+# log flags 'pre-redaction' (phone_transcript_redaction.py:69-72)
+VIOLATIONS = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("day", T.IntegerType(), True),
+        T.StructField("daily_submission_number", T.IntegerType(), True),
+        T.StructField("filename", T.StringType(), True),
+    ]
+)
+
+# the gated stream's pending-return sink (J7): the batch pending family, one
+# row per key, with the first request ts in place of the detection date
+PENDING_FLAGS = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("filename", T.StringType(), True),
+        T.StructField("req_ts", T.TimestampType(), True),
+        T.StructField("file_stage", T.StringType(), True),
+        T.StructField("error_message", T.StringType(), True),
     ]
 )

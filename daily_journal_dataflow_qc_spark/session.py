@@ -9,6 +9,8 @@ shuffle partitions sized to cores locally (callers override on a real cluster).
 from __future__ import annotations
 
 import os
+import pathlib
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -51,14 +53,19 @@ def get_spark(
     return spark
 
 
+def build_package_zip(out_path: str) -> str:
+    """Zip this package's ``.py`` files for ``--py-files`` deployment."""
+    pkg = pathlib.Path(__file__).resolve().parent
+    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
+        for path in sorted(pkg.rglob("*.py")):
+            z.write(path, path.relative_to(pkg.parent))
+    return out_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors (the --py-files deployment model), so
     pandas UDFs defined in the package resolve on workers regardless of cwd."""
-    import shutil
     import tempfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    base = os.path.join(tempfile.gettempdir(), f"djdq_pkg_{os.getpid()}")
-    zip_path = shutil.make_archive(base, "zip", root_dir=root, base_dir=os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(zip_path)
+    zip_path = os.path.join(tempfile.gettempdir(), f"djdq_pkg_{os.getpid()}.zip")
+    spark.sparkContext.addPyFile(build_package_zip(zip_path))

@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.textanalysis import with_text_analysis
-from .job import _apply_stream_conf, _read_stream
+from .job import _apply_stream_conf, _read_stream, _trigger_kwargs
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -74,14 +74,16 @@ def start_corpus_ingest_stream(
     min_quality: float = 0.66,
     max_top_2gram: float = 0.5,
     dedup_watermark: str = "1 hour",
-    available_now: bool = False,
+    trigger_seconds: float | None = None,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Start the ingest stream: parquet-dir or catalog-table source ->
     quality/repetition gate -> first-arrival content dedup -> exactly-once
     parquet append of the admitted docs. ``max_files_per_trigger`` caps the
     micro-batch size (file sources only) — production backpressure knob and
-    the kill/resume test's lever for multi-batch replay."""
+    the kill/resume test's lever for multi-batch replay. Like every stream
+    launcher it drains availableNow by default and runs a processing-time
+    trigger every ``trigger_seconds`` when given."""
     _apply_stream_conf(spark)
     docs = _read_stream(spark, input_loc, DOC_STREAM_SCHEMA, max_files_per_trigger)
     scored = with_text_analysis(docs)
@@ -96,15 +98,14 @@ def start_corpus_ingest_stream(
         .dropDuplicatesWithinWatermark(["content_hash"])
         .select(*_OUT_COLS)
     )
-    writer = (
+    return (
         admitted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(**_trigger_kwargs(trigger_seconds))
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------ budgeted admission stage
@@ -178,7 +179,7 @@ def start_budget_admission_stream(
     checkpoint_dir: str,
     source_budgets: dict[str, int] | None = None,
     default_budget: int = 0,
-    available_now: bool = False,
+    trigger_seconds: float | None = None,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Continuous per-source token-budget admission — the streaming
@@ -218,15 +219,14 @@ def start_budget_admission_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    return (
         admitted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(**_trigger_kwargs(trigger_seconds))
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------- streaming cardinality stage
@@ -300,7 +300,7 @@ def start_distinct_count_stream(
     output_dir: str,
     checkpoint_dir: str,
     p: int = 12,
-    available_now: bool = False,
+    trigger_seconds: float | None = None,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Continuous distinct-content cardinality per source — the HLL sketch
@@ -333,12 +333,11 @@ def start_distinct_count_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    return (
         counted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(**_trigger_kwargs(trigger_seconds))
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

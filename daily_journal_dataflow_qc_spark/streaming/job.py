@@ -10,7 +10,7 @@ Topology (single continuous job, checkpointed, exactly-once sinks):
       [with tool calls: unioned with the tool-call stream (conv_id,
        request_key, kind, ts), the query's second source]
       -> foreachBatch: day assignment + submission rank + acceptance split
-         + IdempotentBatchSink commits                                     [exactly-once]
+         + IdempotentBatchSink commits, each sink in its schemas.py layout [exactly-once]
          + with tool calls: the batch's admitted tool-call rows appended
            to an incremental key store (the source's offset log is the
            one admission mechanism, never a full rescan), rolled up ONCE
@@ -62,6 +62,25 @@ from .sink import IdempotentBatchSink
 
 #: the tool-call columns the gated query admits and its key store keeps
 TOOL_CALL_COLS = ["conv_id", "request_key", "kind", "ts"]
+
+#: the declared layout of every sink of the session-QC query. ``accepted``
+#: is the audio-accepted subset of ``audio_qc``, not the batch tier's merged
+#: accepted set (``compile.accepted_set``): that set carries the transcript
+#: side, which the ungated query lacks and the gated one does not yet give
+#: every returned diary (a return landing after its session closed)
+AUDIO_SINKS = {
+    "audio_qc": schemas.AUDIO_QC,
+    "accepted": schemas.AUDIO_QC,
+    "rejected": schemas.REJECTED,
+}
+#: the gated query's further sinks (with ``tool_calls_dir``)
+TRANSCRIPT_SINKS = {
+    "transcript_qc": schemas.TRANSCRIPT_QC,
+    "turn_stats": schemas.TURN_STATS,
+    "violations": schemas.VIOLATIONS,
+    "disfluencies": schemas.DISFLUENCIES,
+    "pending_flags": schemas.PENDING_FLAGS,
+}
 
 STREAM_CONF = {
     # RocksDB-backed keyed state (north star): state lives off-heap in a
@@ -230,8 +249,9 @@ def _trigger_kwargs(trigger_seconds: float | None) -> dict:
     return {"processingTime": f"{trigger_seconds} seconds"}
 
 
-def _write_concurrently(jobs: list, batch_id: int) -> None:
-    """Run independent sink writes of one micro-batch as overlapping jobs.
+def _write_concurrently(sinks: dict, layouts: dict, jobs: dict, batch_id: int) -> None:
+    """Write each ``{sink name: frame}`` of one micro-batch in its sink's
+    declared layout, the writes running as overlapping jobs.
 
     Per-trigger wall at small batch sizes is dominated by a fixed per-JOB
     term (planning + scheduling + sink commit), so overlapping the jobs
@@ -241,7 +261,10 @@ def _write_concurrently(jobs: list, batch_id: int) -> None:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(len(jobs)) as pool:
-        futures = [pool.submit(sink.write, df, batch_id) for sink, df in jobs]
+        futures = [
+            pool.submit(sinks[n].write, df.select(*layouts[n].fieldNames()), batch_id)
+            for n, df in jobs.items()
+        ]
         for f in futures:
             f.result()
 
@@ -332,17 +355,8 @@ def start_session_qc_query(
             allowMissingColumns=True,
         )
 
-    sinks = {
-        "audio_qc": IdempotentBatchSink(output_root, "audio_qc"),
-        "accepted": IdempotentBatchSink(output_root, "accepted"),
-        "rejected": IdempotentBatchSink(output_root, "rejected"),
-    }
-    if tool_calls_dir:
-        sinks["transcript_qc"] = IdempotentBatchSink(output_root, "transcript_qc")
-        sinks["turn_stats"] = IdempotentBatchSink(output_root, "turn_stats")
-        sinks["violations"] = IdempotentBatchSink(output_root, "violations")
-        sinks["disfluencies"] = IdempotentBatchSink(output_root, "disfluencies")
-        sinks["pending_flags"] = IdempotentBatchSink(output_root, "pending_flags")
+    layouts = {**AUDIO_SINKS, **(TRANSCRIPT_SINKS if tool_calls_dir else {})}
+    sinks = {name: IdempotentBatchSink(output_root, name) for name in layouts}
     meta = conv_meta  # captured; static dimension
 
     key_store = (
@@ -388,18 +402,14 @@ def start_session_qc_query(
             # serialize but still duplicate scheduling), and the state-store
             # subtree must execute exactly once per batch anyway
             qc.count()
-            accepted = qc.filter(F.col("audio_approved_bool") == 1)
-            # not compile_ops.rejected_set: its within-partition sort is
-            # wasted on a per-batch sink file
-            rejected = qc.filter(F.col("audio_approved_bool") != 1).select(
-                *compile_ops.REJECTED_COLS
-            )
             _write_concurrently(
-                [
-                    (sinks["audio_qc"], qc),
-                    (sinks["accepted"], accepted),
-                    (sinks["rejected"], rejected),
-                ],
+                sinks,
+                layouts,
+                {
+                    "audio_qc": qc,
+                    "accepted": qc.filter(F.col("audio_approved_bool") == 1),
+                    "rejected": compile_ops.rejected_set(qc),
+                },
                 batch_id,
             )
             if tool_calls_dir:
@@ -480,36 +490,22 @@ def start_session_qc_query(
                 )
                 side = transcript_side(stats)
                 persisted += [stats, *side.persisted]
-                violations = returned.join(
-                    side.violated, DIARY_KEY, "left_semi"
-                ).select("conv_id", "day", "daily_submission_number", "filename")
-                transcript_jobs = [
-                    (sinks["violations"], violations),
-                    (
-                        sinks["transcript_qc"],
-                        side.transcript_qc.select(
-                            *schemas.TRANSCRIPT_QC.fieldNames()
-                        ),
+                transcript_jobs = {
+                    "violations": returned.join(
+                        side.violated, DIARY_KEY, "left_semi"
                     ),
-                    (
-                        sinks["disfluencies"],
-                        side.disfluencies.select(
-                            *schemas.DISFLUENCIES.fieldNames()
-                        ),
-                    ),
-                    (sinks["turn_stats"], side.turn_stats),
-                ]
+                    "transcript_qc": side.transcript_qc,
+                    "disfluencies": side.disfluencies,
+                    "turn_stats": side.turn_stats,
+                }
                 # with no tool-call row admitted, the store and the clock
                 # are those of the previous batch, so no key can become
                 # pending (this covers Spark's no-data eviction batch)
                 if n_calls:
-                    transcript_jobs.append(
-                        (
-                            sinks["pending_flags"],
-                            _newly_pending(store, lifecycle, batch_id, cfg),
-                        )
+                    transcript_jobs["pending_flags"] = _newly_pending(
+                        store, lifecycle, batch_id, cfg
                     )
-                _write_concurrently(transcript_jobs, batch_id)
+                _write_concurrently(sinks, layouts, transcript_jobs, batch_id)
         finally:
             for df in persisted:
                 df.unpersist()

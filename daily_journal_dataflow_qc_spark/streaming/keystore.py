@@ -57,7 +57,8 @@ class IncrementalKeyStore:
             if not (m.startswith(prefix) and m.endswith(".json")):
                 continue
             try:
-                out.append(json.load(open(os.path.join(self.sink.manifest_dir, m))))
+                with open(os.path.join(self.sink.manifest_dir, m)) as f:
+                    out.append(json.load(f))
             except (json.JSONDecodeError, OSError):
                 continue  # uncommitted/truncated manifest: ignored
         return out

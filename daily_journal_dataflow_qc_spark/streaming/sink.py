@@ -36,7 +36,8 @@ class IdempotentBatchSink:
         if not os.path.isfile(path):
             return False
         try:
-            json.load(open(path))
+            with open(path) as f:
+                json.load(f)
             return True
         except (json.JSONDecodeError, OSError):
             return False
@@ -56,11 +57,11 @@ class IdempotentBatchSink:
         os.rename(tmp, self._manifest(batch_id))
 
     def read(self, spark) -> DataFrame:
-        committed = [
-            json.load(open(os.path.join(self.manifest_dir, m)))["path"]
-            for m in sorted(os.listdir(self.manifest_dir))
-            if m.startswith("batch-") and m.endswith(".json")
-        ]
+        committed = []
+        for m in sorted(os.listdir(self.manifest_dir)):
+            if m.startswith("batch-") and m.endswith(".json"):
+                with open(os.path.join(self.manifest_dir, m)) as f:
+                    committed.append(json.load(f)["path"])
         if not committed:
             raise FileNotFoundError(f"no committed batches in {self.dir}")
         return spark.read.parquet(*committed)

@@ -33,26 +33,8 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import zipfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def build_pyfiles_zip(out_path: str) -> str:
-    """Package the engine for --py-files deployment."""
-    pkg_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "daily_journal_dataflow_qc_spark",
-    )
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _, files in os.walk(pkg_root):
-            for f in files:
-                if not f.endswith(".py"):
-                    continue
-                full = os.path.join(root, f)
-                rel = os.path.relpath(full, os.path.dirname(pkg_root))
-                z.write(full, rel)
-    return out_path
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -76,7 +58,9 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.build_zip:
-        print(build_pyfiles_zip(args.build_zip))
+        from daily_journal_dataflow_qc_spark.session import build_package_zip
+
+        print(build_package_zip(args.build_zip))
         return 0
     if not (args.input and args.output and args.conv_meta):
         ap.error("--input, --output and --conv-meta are required (or --build-zip)")

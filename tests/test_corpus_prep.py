@@ -167,18 +167,14 @@ def test_streaming_corpus_ingest(spark, tmp_path):
     )
 
     out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = start_corpus_ingest_stream(
-        spark, str(in_dir), out_dir, ck, available_now=True
-    )
+    q = start_corpus_ingest_stream(spark, str(in_dir), out_dir, ck)
     q.awaitTermination(180)
     got = spark.read.parquet(out_dir).toPandas()
     assert sorted(got.doc_id) == [0, 1, 2], got
     assert (got.n_tokens > 0).all() and got.quality_score.min() >= 0.66
 
     # exactly-once: a restart with no new input appends nothing
-    q2 = start_corpus_ingest_stream(
-        spark, str(in_dir), out_dir, ck, available_now=True
-    )
+    q2 = start_corpus_ingest_stream(spark, str(in_dir), out_dir, ck)
     q2.awaitTermination(180)
     again = spark.read.parquet(out_dir).toPandas()
     assert sorted(again.doc_id) == [0, 1, 2]
@@ -246,7 +242,7 @@ def test_streaming_corpus_ingest_kill_resume(spark, tmp_path):
     base_out, base_ck = str(tmp_path / "base_out"), str(tmp_path / "base_ck")
     q = start_corpus_ingest_stream(
         spark, str(in_dir), base_out, base_ck,
-        available_now=True, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     assert q.awaitTermination(300)
     baseline = spark.read.parquet(base_out).toPandas()
@@ -256,7 +252,7 @@ def test_streaming_corpus_ingest_kill_resume(spark, tmp_path):
     out2, ck2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
     q2 = start_corpus_ingest_stream(
         spark, str(in_dir), out2, ck2,
-        available_now=True, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     deadline = time.time() + 300
     while time.time() < deadline:
@@ -273,7 +269,7 @@ def test_streaming_corpus_ingest_kill_resume(spark, tmp_path):
     # resume from the same checkpoint to completion
     q3 = start_corpus_ingest_stream(
         spark, str(in_dir), out2, ck2,
-        available_now=True, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     assert q3.awaitTermination(300)
     resumed = spark.read.parquet(out2).toPandas()
@@ -424,7 +420,7 @@ def test_streaming_budget_admission(spark, tmp_path):
     out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
     q = start_budget_admission_stream(
         spark, str(in_dir), out_dir, ck,
-        source_budgets={"s0": 25}, available_now=True,
+        source_budgets={"s0": 25},
         max_files_per_trigger=1,
     )
     assert q.awaitTermination(300)
@@ -437,7 +433,7 @@ def test_streaming_budget_admission(spark, tmp_path):
     mk([(4, "s0", 1, 3)], "b3.parquet")
     q2 = start_budget_admission_stream(
         spark, str(in_dir), out_dir, ck,
-        source_budgets={"s0": 25}, available_now=True,
+        source_budgets={"s0": 25},
         max_files_per_trigger=1,
     )
     assert q2.awaitTermination(300)

@@ -4,6 +4,7 @@ compaction (bounded file count)."""
 import glob
 import os
 import shutil
+import warnings
 
 import pandas as pd
 
@@ -59,3 +60,12 @@ def test_keystore_compaction_bounds_files_and_keeps_keys(spark):
     store.append(_rows(spark, 999), n_batches)
     got3 = store.read(spark).toPandas()
     assert "k999" in set(got3["_tool_key"]) and len(got3) == before + 1
+
+    # every manifest read closes its file
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert store.sink.committed(n_batches)
+        store.read(spark)
+        store.sink.read(spark)
+    leaked = [w for w in caught if issubclass(w.category, ResourceWarning)]
+    assert not leaked, [str(w.message) for w in leaked]

@@ -133,7 +133,7 @@ def test_streaming_distinct_count(spark, tmp_path):
     out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
     q = start_distinct_count_stream(
         spark, str(in_dir), out_dir, ck, p=6,
-        available_now=True, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     assert q.awaitTermination(300)
     got = spark.read.parquet(out_dir).toPandas().sort_values("n_seen")
@@ -152,7 +152,7 @@ def test_streaming_distinct_count(spark, tmp_path):
     mk(range(80, 100), "b2.parquet")
     q2 = start_distinct_count_stream(
         spark, str(in_dir), out_dir, ck, p=6,
-        available_now=True, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     assert q2.awaitTermination(300)
     final = spark.read.parquet(out_dir).toPandas().sort_values("n_seen").iloc[-1]

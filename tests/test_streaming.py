@@ -35,7 +35,10 @@ QC_COMPARE_COLS = [
 ]
 
 
-def test_streaming_qc_matches_batch(spark, stream_input, synth_dir, cfg):
+@pytest.fixture(scope="module")
+def ungated_sinks(spark, stream_input, synth_dir, cfg):
+    """One ungated availableNow drain of the 6-file fixture, shared by the
+    batch-parity and the layout tests."""
     out_root = "/tmp/djdq_stream_out1"
     shutil.rmtree(out_root, ignore_errors=True)
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
@@ -43,18 +46,29 @@ def test_streaming_qc_matches_batch(spark, stream_input, synth_dir, cfg):
         spark, f"{stream_input}/transcripts", out_root, conv_meta, cfg
     )
     q.awaitTermination(600)
-    got = sinks["audio_qc"].read(spark).select(*QC_COMPARE_COLS).toPandas()
-    want = (
-        run_batch_from_dir(spark, synth_dir, cfg)
-        .audio_qc.select(*QC_COMPARE_COLS)
-        .toPandas()
-    )
-    compare_frames(
-        got,
-        want,
-        ["conv_id", "day", "daily_submission_number"],
-        rounded_atol_cols={"length_minutes": 2e-3},
-    )
+    return sinks
+
+
+def test_streaming_qc_matches_batch(spark, ungated_sinks, synth_dir, cfg):
+    """Each conversation lands in one file, so the per-batch submission rank
+    equals the batch rank: the audio_qc sink equals the batch audio_qc, the
+    accepted sink its audio-accepted rows and the rejected sink the batch
+    rejected set."""
+    batch = run_batch_from_dir(spark, synth_dir, cfg)
+    want_qc = batch.audio_qc.select(*QC_COMPARE_COLS)
+    for sink, want in [
+        ("audio_qc", want_qc),
+        ("accepted", want_qc.filter(F.col("audio_approved_bool") == 1)),
+        ("rejected", batch.rejected),
+    ]:
+        want = want.toPandas()
+        assert len(want), sink
+        compare_frames(
+            ungated_sinks[sink].read(spark).select(*want.columns).toPandas(),
+            want,
+            ["conv_id", "day", "daily_submission_number"],
+            rounded_atol_cols={"length_minutes": 2e-3},
+        )
 
 
 def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg):
@@ -332,14 +346,64 @@ def test_streaming_transcript_side_matches_batch(spark, gated_sinks, synth_dir, 
     compare_frames(got_ts, want_ts, ["conv_id", "turn_idx"])
 
     key = ["conv_id", "day", "daily_submission_number"]
-    for sink, want, schema in [
-        ("transcript_qc", batch.transcript_qc, schemas_mod.TRANSCRIPT_QC),
-        ("disfluencies", batch.disfluencies, schemas_mod.DISFLUENCIES),
+    for sink, want in [
+        ("transcript_qc", batch.transcript_qc),
+        ("disfluencies", batch.disfluencies),
     ]:
-        cols = schema.fieldNames()
-        got = sinks[sink].read(spark).toPandas()
-        assert list(got.columns) == cols, (sink, list(got.columns))
-        compare_frames(got, want.select(*cols).toPandas(), key)
+        compare_frames(sinks[sink].read(spark).toPandas(), want.toPandas(), key)
+
+
+#: the declared layout of each sink of the ungated and of the gated query
+SINK_LAYOUTS = {
+    "audio_qc": schemas_mod.AUDIO_QC,
+    "accepted": schemas_mod.AUDIO_QC,  # the audio-accepted subset
+    "rejected": schemas_mod.REJECTED,
+}
+GATED_SINK_LAYOUTS = {
+    **SINK_LAYOUTS,
+    "transcript_qc": schemas_mod.TRANSCRIPT_QC,
+    "turn_stats": schemas_mod.TURN_STATS,
+    "violations": schemas_mod.VIOLATIONS,
+    "disfluencies": schemas_mod.DISFLUENCIES,
+    "pending_flags": schemas_mod.PENDING_FLAGS,
+}
+
+
+def test_outputs_write_declared_layouts(
+    spark, ungated_sinks, gated_sinks, synth_dir, cfg
+):
+    """Every batch output and every sink of the ungated and the gated query
+    is written in its schemas.py layout: the same column names, in the same
+    order, with the same data types."""
+
+    def layout(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    batch = run_batch_from_dir(spark, synth_dir, cfg)
+    want = {
+        f"batch.{name}": layout(schema)
+        for name, schema in [
+            ("accepted", schemas_mod.ACCEPTED),
+            ("rejected", schemas_mod.REJECTED),
+            ("issues", schemas_mod.ISSUES),
+            ("turn_stats", schemas_mod.TURN_STATS),
+            ("audio_qc", schemas_mod.AUDIO_QC),
+            ("transcript_qc", schemas_mod.TRANSCRIPT_QC),
+            ("disfluencies", schemas_mod.DISFLUENCIES),
+        ]
+    }
+    got = {
+        f"batch.{f.name}": layout(getattr(batch, f.name).schema)
+        for f in dataclasses.fields(batch)
+    }
+    for tier, sinks, layouts in [
+        ("ungated", ungated_sinks, SINK_LAYOUTS),
+        ("gated", gated_sinks, GATED_SINK_LAYOUTS),
+    ]:
+        want |= {f"{tier}.{n}": layout(s) for n, s in layouts.items()}
+        got |= {f"{tier}.{n}": layout(s.read(spark).schema) for n, s in sinks.items()}
+    bad = {k: got.get(k) for k in want.keys() | got.keys() if got.get(k) != want.get(k)}
+    assert not bad, bad
 
 
 def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
