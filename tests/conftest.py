@@ -47,7 +47,7 @@ def synth_dir(synth_pdfs):
 
 
 @pytest.fixture(scope="session")
-def stream_input(spark, synth_dir):
+def stream_input(spark, synth_dir, tmp_path_factory):
     """Multi-file copy of the synthetic transcripts so the file source can
     form several micro-batches; each conv stays in ONE file so per-batch
     submission ranking matches the reference/batch semantics (§7.3.1).
@@ -58,8 +58,7 @@ def stream_input(spark, synth_dir):
 
     from pyspark.sql import functions as F
 
-    root = "/tmp/djdq_stream_input"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path_factory.mktemp("stream_input"))
     os.makedirs(f"{root}/transcripts")
     os.makedirs(f"{root}/tool_calls")
     tr = spark.read.parquet(f"{synth_dir}/transcripts.parquet")

@@ -3,15 +3,11 @@ compaction (bounded file count)."""
 
 import glob
 import os
-import shutil
 import warnings
 
 import pandas as pd
 
 from daily_journal_dataflow_qc_spark.streaming.keystore import IncrementalKeyStore
-
-ROOT = "/tmp/djdq_keystore_test"
-
 
 def _rows(spark, i: int):
     """The rows a micro-batch admits: one key per batch."""
@@ -20,8 +16,8 @@ def _rows(spark, i: int):
     )
 
 
-def test_keystore_compaction_bounds_files_and_keeps_keys(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
+def test_keystore_compaction_bounds_files_and_keeps_keys(spark, tmp_path):
+    ROOT = str(tmp_path)
     store = IncrementalKeyStore(ROOT, "_keys", compact_every=8)
 
     n_batches = 40

@@ -93,20 +93,17 @@ def test_session_aggregate_is_partial(spark, synth_dir, cfg):
     assert n_shuffles <= 1, plan
 
 
-def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg):
+def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg, tmp_path):
     """Streaming analogue of the heavy-pass guard: the executed plan of a
     data-bearing micro-batch of the session-QC stream must hold no Python
     boundary, no SortMergeJoin anywhere, the expected stateful operators
     (dedup-within-watermark + session-window aggregate), and a scan that
     reads no ``text``."""
-    import shutil
+    import time
 
     from daily_journal_dataflow_qc_spark.streaming.job import start_session_qc_query
 
-    import time
-
-    out_root = "/tmp/djdq_plan_guard_stream"
-    shutil.rmtree(out_root, ignore_errors=True)
+    out_root = str(tmp_path / "out")
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     # one file per trigger widens the data-bearing window to ~7 back-to-back
     # batches so the mid-run plan capture cannot race past them (the
@@ -176,13 +173,12 @@ def test_compile_batch_joins_broadcast(spark, synth_dir, cfg):
 
 
 def test_gated_pending_write_scans_only_key_store(
-    spark, stream_input, synth_dir, cfg, monkeypatch
+    spark, stream_input, synth_dir, cfg, monkeypatch, tmp_path_factory
 ):
     """The gated query's pending-flag write reads the compact tool-call key
     store and nothing else: no scan of the tool-calls directory, no
     stream-stream join, and no Python boundary."""
     import os
-    import shutil
     import time
 
     from daily_journal_dataflow_qc_spark.streaming.job import start_session_qc_query
@@ -198,8 +194,8 @@ def test_gated_pending_write_scans_only_key_store(
         write(self, df, batch_id)
 
     monkeypatch.setattr(IdempotentBatchSink, "write", capture)
-    out_root = "/tmp/djdq_pg_pending"
-    shutil.rmtree(out_root, ignore_errors=True)
+    # a short root: the plan abbreviates a scan's location to 100 characters
+    out_root = str(tmp_path_factory.mktemp("pg"))
     q, _ = start_session_qc_query(
         spark, f"{stream_input}/transcripts", out_root,
         spark.read.parquet(f"{synth_dir}/conv_meta.parquet"), cfg,
@@ -224,7 +220,7 @@ def test_gated_pending_write_scans_only_key_store(
     assert "EvalPython" not in plan, plan
 
 
-def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):
+def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg, tmp_path):
     """Scale pins for the one-pass issues log, asserted on the FINAL
     adaptive plan. SortMergeJoin is EXPECTED for the diary-grain x
     diary-grain reconciliations (lifecycle x accepted keys, transcript-QC
@@ -234,8 +230,6 @@ def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):
     never appear: a cartesian/nested-loop join (an equi-condition fell
     off), a Python boundary (the issues log is pure JVM relational work),
     or a missing broadcast on the conv_meta dimension."""
-    import shutil
-
     from daily_journal_dataflow_qc_spark.pipeline import (
         load_inputs,
         run_batch_from_dir,
@@ -244,8 +238,7 @@ def test_issues_set_runtime_plan_shape(spark, synth_dir, cfg):
 
     spark.catalog.clearCache()
     tr, tc, cm = load_inputs(spark, synth_dir)
-    staging = "/tmp/djdq_plan_guard_issues_staging"
-    shutil.rmtree(staging, ignore_errors=True)
+    staging = str(tmp_path / "staging")
     st = run_batch_staged(spark, tr, tc, cm, staging, cfg)
     df = st.issues
     df.collect()  # drive THIS DataFrame's query execution to the final plan

@@ -1,6 +1,5 @@
 """Salted-aggregate correctness + the launchable validator query."""
 
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -31,9 +30,8 @@ def test_salted_agg_matches_plain(spark, synth_dir):
     assert plan.count("HashAggregate") >= 4  # partial/final x 2 phases
 
 
-def test_validator_query_runs(spark, stream_input):
-    out_root = "/tmp/djdq_validator_query"
-    shutil.rmtree(out_root, ignore_errors=True)
+def test_validator_query_runs(spark, stream_input, tmp_path):
+    out_root = str(tmp_path)
     q, sink = start_validator_query(spark, f"{stream_input}/transcripts", out_root)
     q.awaitTermination(600)
     flags = sink.read(spark).toPandas()

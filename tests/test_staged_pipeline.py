@@ -1,8 +1,6 @@
 """The single-pass staged runner must produce row sets identical to the
 reference batch runner (same operators, different materialization plan)."""
 
-import shutil
-
 from daily_journal_dataflow_qc_spark.pipeline import (
     load_inputs,
     run_batch_from_dir,
@@ -12,9 +10,8 @@ from daily_journal_dataflow_qc_spark.pipeline import (
 from .compare_util import compare_frames
 
 
-def test_staged_matches_unstaged(spark, synth_dir, cfg):
-    staging = "/tmp/djdq_staged_test"
-    shutil.rmtree(staging, ignore_errors=True)
+def test_staged_matches_unstaged(spark, synth_dir, cfg, tmp_path):
+    staging = str(tmp_path)
     transcripts, tool_calls, conv_meta = load_inputs(spark, synth_dir)
     staged = run_batch_staged(spark, transcripts, tool_calls, conv_meta, staging, cfg)
     plain = run_batch_from_dir(spark, synth_dir, cfg)

@@ -4,7 +4,6 @@ gated query's pending flags."""
 
 import dataclasses
 import os
-import shutil
 import time
 
 import pandas as pd
@@ -36,11 +35,10 @@ QC_COMPARE_COLS = [
 
 
 @pytest.fixture(scope="module")
-def ungated_sinks(spark, stream_input, synth_dir, cfg):
+def ungated_sinks(spark, stream_input, synth_dir, cfg, tmp_path_factory):
     """One ungated availableNow drain of the 6-file fixture, shared by the
     batch-parity and the layout tests."""
-    out_root = "/tmp/djdq_stream_out1"
-    shutil.rmtree(out_root, ignore_errors=True)
+    out_root = str(tmp_path_factory.mktemp("ungated"))
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     q, sinks = start_session_qc_query(
         spark, f"{stream_input}/transcripts", out_root, conv_meta, cfg
@@ -71,7 +69,7 @@ def test_streaming_qc_matches_batch(spark, ungated_sinks, synth_dir, cfg):
         )
 
 
-def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg):
+def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg, tmp_path):
     """Kill after the first micro-batches, restart from the checkpoint.
 
     Exactly-once contract asserted on the final committed row set vs an
@@ -90,8 +88,7 @@ def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg)
         "subject_consent_month", "daily_submission_number",
     ]
 
-    base_root = "/tmp/djdq_stream_base"
-    shutil.rmtree(base_root, ignore_errors=True)
+    base_root = str(tmp_path / "base")
     q, base_sinks = start_session_qc_query(
         spark, f"{stream_input}/transcripts_timed", base_root, conv_meta, cfg,
         max_files_per_trigger=1,
@@ -99,8 +96,7 @@ def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg)
     q.awaitTermination(600)
     baseline = base_sinks["audio_qc"].read(spark).select(*cols).toPandas()
 
-    kill_root = "/tmp/djdq_stream_kill"
-    shutil.rmtree(kill_root, ignore_errors=True)
+    kill_root = str(tmp_path / "kill")
     q2, sinks2 = start_session_qc_query(
         spark, f"{stream_input}/transcripts_timed", kill_root, conv_meta, cfg,
         max_files_per_trigger=1,
@@ -155,15 +151,13 @@ def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg)
         assert (first.daily_submission_number == 1).all()
 
 
-def _run_validator_stream(spark, batches):
+def _run_validator_stream(spark, batches, tmp_path):
     """Drive turn_stream_validator as a real streaming query over parquet
     files written in mtime order (one file per micro-batch)."""
     from daily_journal_dataflow_qc_spark import schemas
 
-    root = "/tmp/djdq_validator_in"
+    root = str(tmp_path / "in")
     out: list[pd.DataFrame] = []
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
     for pdf in batches:
         sdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
         sdf.coalesce(1).write.mode("append").parquet(root)
@@ -174,8 +168,7 @@ def _run_validator_stream(spark, batches):
         .parquet(root)
     )
     flags = turn_stream_validator(turns)
-    ckpt = "/tmp/djdq_validator_ckpt"
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = str(tmp_path / "ckpt")
     q = (
         flags.writeStream.outputMode("append")
         .foreachBatch(lambda df, bid: out.append(df.toPandas()))
@@ -187,7 +180,7 @@ def _run_validator_stream(spark, batches):
     return pd.concat(out, ignore_index=True) if out else pd.DataFrame(columns=["conv_id", "turn_idx", "kind"])
 
 
-def test_stateful_validator_flags(spark):
+def test_stateful_validator_flags(spark, tmp_path):
     """Duplicate and out-of-order turn_idx arrivals produce exactly the
     expected flag rows, with HWM + exact missing-gap state surviving
     micro-batch boundaries; monotone advance stays silent."""
@@ -209,7 +202,7 @@ def test_stateful_validator_flags(spark):
     # sketch state from batch 1) and novel 4 (out_of_order, below hwm=5)
     b1 = pd.concat([rows("c1", [1, 2, 3, 2, 5], "10"), rows("c2", [1, 2], "11")])
     b2 = rows("c1", [1, 4, 6], "12")
-    flags = _run_validator_stream(spark, [b1, b2])
+    flags = _run_validator_stream(spark, [b1, b2], tmp_path)
     c1 = flags[flags.conv_id == "c1"]
     assert set(zip(c1.turn_idx, c1.kind)) == {
         (2, "duplicate"),
@@ -315,12 +308,11 @@ def test_validator_rejects_corrupt_index_jump():
 
 
 @pytest.fixture(scope="module")
-def gated_sinks(spark, stream_input, synth_dir, cfg):
+def gated_sinks(spark, stream_input, synth_dir, cfg, tmp_path_factory):
     """One gated availableNow drain of the pre-landed fixture (every tool
     call lands before the first batch), shared by the transcript-side and
     pending-flag tests."""
-    out_root = "/tmp/djdq_stream_tside"
-    shutil.rmtree(out_root, ignore_errors=True)
+    out_root = str(tmp_path_factory.mktemp("gated"))
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     q, sinks = start_session_qc_query(
         spark,
@@ -428,7 +420,7 @@ def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
 
 
 def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
-    spark, synth_dir, cfg
+    spark, synth_dir, cfg, tmp_path
 ):
     """Arrival-time-exact late handling (round-3's documented divergence,
     investigated and closed):
@@ -452,8 +444,7 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
 
     from daily_journal_dataflow_qc_spark.pipeline import run_batch
 
-    root = "/tmp/djdq_late_input"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path / "input")
     os.makedirs(f"{root}/transcripts")
     tr = spark.read.parquet(f"{synth_dir}/transcripts.parquet")
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
@@ -528,8 +519,7 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
     ).write.mode("overwrite").parquet(f"{root}/tool_calls")
 
     # ---- live run: 6 main files in batch 0, then late file, then sentinel
-    out_live = "/tmp/djdq_late_out_live"
-    shutil.rmtree(out_live, ignore_errors=True)
+    out_live = str(tmp_path / "out_live")
     q, sinks = start_session_qc_query(
         spark, f"{root}/transcripts", out_live, conv_meta, cfg,
         max_files_per_trigger=6, tool_calls_dir=f"{root}/tool_calls",
@@ -557,8 +547,7 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
     assert (m.n == m.n_turns).all(), m[m.n != m.n_turns]
 
     # ---- replay run (fresh checkpoint, single admission batch)
-    out_replay = "/tmp/djdq_late_out_replay"
-    shutil.rmtree(out_replay, ignore_errors=True)
+    out_replay = str(tmp_path / "out_replay")
     q2, sinks2 = start_session_qc_query(
         spark, f"{root}/transcripts", out_replay, conv_meta, cfg,
         tool_calls_dir=f"{root}/tool_calls",
@@ -586,7 +575,7 @@ def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
 
 
 @pytest.mark.parametrize("backend", ["session_window"])
-def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
+def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend, tmp_path):
     """A sub-watermark row arriving AFTER its session's state was evicted
     is silently dropped by the declarative session aggregate — and the
     turn-stats rebuild never resurrects it: the live tier stays internally
@@ -598,8 +587,7 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
     from daily_journal_dataflow_qc_spark import schemas
     from daily_journal_dataflow_qc_spark.pipeline import run_batch
 
-    root = f"/tmp/djdq_postevict_{backend}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path / "input")
     os.makedirs(f"{root}/transcripts")
     os.makedirs(f"{root}/tool_calls")
 
@@ -672,8 +660,7 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
         "overwrite"
     ).parquet(f"{root}/tool_calls")
 
-    out_live = f"/tmp/djdq_postevict_live_{backend}"
-    shutil.rmtree(out_live, ignore_errors=True)
+    out_live = str(tmp_path / "out_live")
     q, sinks = start_session_qc_query(
         spark, f"{root}/transcripts", out_live, conv_meta, cfg,
         max_files_per_trigger=1, tool_calls_dir=f"{root}/tool_calls",
@@ -695,8 +682,7 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
     bt = batch.transcript_qc.toPandas()
     assert int(bt[bt.conv_id == "convZ"].total_sentence_count.iloc[0]) == 3
     # replay (fresh checkpoint, one admission batch) converges to batch
-    out_replay = f"/tmp/djdq_postevict_replay_{backend}"
-    shutil.rmtree(out_replay, ignore_errors=True)
+    out_replay = str(tmp_path / "out_replay")
     q2, sinks2 = start_session_qc_query(
         spark, f"{root}/transcripts", out_replay, conv_meta, cfg,
         tool_calls_dir=f"{root}/tool_calls",
@@ -709,7 +695,7 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend):
     )
 
 
-def test_streaming_metrics_listener(spark, stream_input, cfg):
+def test_streaming_metrics_listener(spark, stream_input, cfg, tmp_path):
     """§2.10 per-batch lineage/metrics: every micro-batch of a streaming
     query lands a metrics row (rows in, latency, state size) in the log."""
     from daily_journal_dataflow_qc_spark.streaming.job import start_validator_query
@@ -719,10 +705,8 @@ def test_streaming_metrics_listener(spark, stream_input, cfg):
         read_metrics,
     )
 
-    log = "/tmp/djdq_metrics/metrics.jsonl"
-    shutil.rmtree("/tmp/djdq_metrics", ignore_errors=True)
-    out_root = "/tmp/djdq_metrics_out"
-    shutil.rmtree(out_root, ignore_errors=True)
+    log = str(tmp_path / "metrics" / "metrics.jsonl")
+    out_root = str(tmp_path / "out")
     listener = attach_metrics(spark, log)
     try:
         q, _ = start_validator_query(
@@ -785,7 +769,7 @@ def test_streaming_pending_flags_match_batch(spark, gated_sinks, stream_input, s
         assert pd.Timestamp(r.req_ts, tz="UTC") == first[(r.conv_id, r.filename)]
 
 
-def test_submit_entrypoint_local(spark, stream_input, synth_dir):
+def test_submit_entrypoint_local(spark, stream_input, synth_dir, tmp_path):
     """The spark-submit entrypoint (scripts/submit_streaming_job.py) drives
     the full job in --local mode: zip builds, sinks + checkpoint + metrics
     land under the output root, and a second invocation resumes from the
@@ -796,9 +780,8 @@ def test_submit_entrypoint_local(spark, stream_input, synth_dir):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = os.path.join(repo, "scripts", "submit_streaming_job.py")
 
-    zip_path = "/tmp/djdq_submit_test.zip"
-    out_root = "/tmp/djdq_submit_test_out"
-    shutil.rmtree(out_root, ignore_errors=True)
+    zip_path = str(tmp_path / "pkg.zip")
+    out_root = str(tmp_path / "out")
     r = subprocess.run(
         [sys.executable, script, "--build-zip", zip_path],
         capture_output=True, text=True, check=True,
@@ -821,7 +804,7 @@ def test_submit_entrypoint_local(spark, stream_input, synth_dir):
     assert len(os.listdir(f"{out_root}/audio_qc")) == n1
 
 
-def test_catalog_table_streaming_e2e(spark, stream_input, synth_dir, cfg):
+def test_catalog_table_streaming_e2e(spark, stream_input, synth_dir, cfg, tmp_path):
     """North-star addressing end-to-end: BOTH streaming sources given as
     catalog tables (the Iceberg path — readStream.table admission of both,
     batch re-reads dispatched through read_table). Guards
@@ -837,8 +820,7 @@ def test_catalog_table_streaming_e2e(spark, stream_input, synth_dir, cfg):
         spark.sql(f"DROP TABLE IF EXISTS cat_e2e.{name}")
         spark.read.schema(schema).parquet(src).write.saveAsTable(f"cat_e2e.{name}")
 
-    out_root = "/tmp/djdq_stream_catalog"
-    shutil.rmtree(out_root, ignore_errors=True)
+    out_root = str(tmp_path)
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     q, sinks = start_session_qc_query(
         spark, "cat_e2e.transcripts", out_root, conv_meta, cfg,
@@ -915,7 +897,7 @@ def test_streamed_files_incremental_parse(tmp_path, monkeypatch):
     assert got == ["/data/other.parquet"]
 
 
-def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
+def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg, tmp_path):
     """Tool calls and transcripts land in event-time lockstep, one
     availableNow drain per 7-day slice on one checkpoint; the last drain
     lands tool calls only. Each pending key is emitted exactly once, in the
@@ -931,8 +913,7 @@ def test_pending_flags_emit_once_lockstep(spark, synth_dir, cfg):
         IncrementalKeyStore,
     )
 
-    root = "/tmp/djdq_pending_lockstep"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path)
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     conv = conv_meta.select("conv_id").orderBy("conv_id").head()[0]
     t0 = pd.Timestamp("2023-03-01 10:00:00", tz="UTC")
