@@ -212,7 +212,7 @@ def main() -> None:
             timings[name] = round(best, 3)
 
     # ---- streaming tier: the SAME flagship semantics as a Structured
-    # Streaming job (projection -> watermarked dedup -> session_window agg ->
+    # Streaming job (projection -> watermarked session_window agg ->
     # foreachBatch identity/acceptance -> exactly-once sinks), driven
     # availableNow over a multi-file copy of the bench input plus a
     # far-future sentinel (closes every real session under the watermark).

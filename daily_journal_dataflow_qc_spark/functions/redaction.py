@@ -28,21 +28,22 @@ from pyspark.sql import functions as F
 
 from .text_metrics import substr_count
 
-#: structural brace-convention well-formedness: any prefix without '{' is
-#: unchecked (may hold stray '}'), then each inner '{' group must contain
-#: exactly one '}' before the next '{', and a trailing lone '{' (empty tail)
-#: violates. The FINAL group is laxer — the reference accepts any tail that
-#: simply ends with '}' without counting its braces. Anchored with \z, not
-#: $: Java's $ also matches before a final line terminator, so a raw line
-#: ending in "}}\r" would pass.
-_WELLFORMED_RE = "^[^{]*(\\{[^{}]*\\}[^{}]*)*(\\{[^{]*\\})?\\z"
+#: the brace-convention violations, found anywhere in the line: an inner
+#: ``{`` group (one followed by another ``{``) holding no ``}`` or two or
+#: more, and a final group not ending in ``}`` that holds no ``}`` (a
+#: trailing lone ``{`` included) or two or more — the reference accepts any
+#: final group ending in ``}``. A prefix before the first ``{`` is unchecked.
+#: Quantifiers sit only on character classes, which Java matches in a loop:
+#: a repeated group recurses per iteration and overflows the thread stack
+#: on a line of a few thousand groups. \z, not $, which also matches before
+#: a final line terminator (a raw line ending in "}}\r" would pass).
+_VIOLATION_RE = "\\{[^{}]*(\\{|\\z|\\}[^{}]*\\}[^{]*(\\{|[^{}]\\z))"
 
 
 def violated_line(col: Column) -> Column:
-    """F11 violation flag as a pure JVM predicate (whole-stage codegen)."""
-    return F.coalesce(
-        col.contains("{") & ~col.rlike(_WELLFORMED_RE), F.lit(False)
-    )
+    """F11 violation flag as a pure JVM predicate (whole-stage codegen);
+    a line without ``{`` never reaches the regex."""
+    return F.coalesce(col.contains("{") & col.rlike(_VIOLATION_RE), F.lit(False))
 
 
 def redacted_line(col: Column) -> Column:

@@ -44,22 +44,6 @@ DIARY_COLS = [
 ]
 
 
-def dedup_tool_calls(tool_calls: DataFrame, kind: str) -> DataFrame:
-    """First-arrival per (conv_id, request_key) for one kind (request|return).
-
-    Retried push attempts (S8: the reference re-tries the SFTP push up to 10
-    times, journal_transcribeme_sftp_push.py:166-191) are re-deliveries of
-    the same key and collapse here; the attempt-count lifecycle itself is
-    modeled by ``push_attempt_stats``."""
-    w = Window.partitionBy("conv_id", "request_key").orderBy("ts")
-    return (
-        tool_calls.filter(F.col("kind") == kind)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def push_attempt_stats(tool_calls: DataFrame) -> DataFrame:
     """S8 push-lifecycle rollup per (conv_id, request_key): attempt count,
     first/last attempt time, and whether the round trip ever returned.
@@ -92,15 +76,15 @@ def tool_call_lifecycle(tool_calls: DataFrame) -> DataFrame:
     * ``n_attempts``        — distinct request timestamps (push_attempt_stats
       semantics: verbatim re-deliveries share a ts and count once),
     * ``first_request_ts``  — the first-ARRIVAL request ts, i.e. the ts of
-      the row ``dedup_tool_calls(.., "request")`` keeps: a row_number window
-      ordered by ts ascending puts NULL ts first, so the struct-min below
-      ranks (ts IS NOT NULL, ts) — a null-ts request row yields NULL here,
+      the row a first-arrival row_number window per key keeps: ordered by ts
+      ascending it puts NULL ts first, so the struct-min below ranks
+      (ts IS NOT NULL, ts) — a null-ts request row yields NULL here,
       exactly like the window pick (a plain min(ts) would skip the null and
       silently substitute a later real timestamp),
     * ``has_request`` / ``returned`` — kind existence flags.
 
-    Replaces the per-family ``dedup_tool_calls`` window derivations in the
-    batch pipeline: the un-restructured issues plan re-derived the
+    Replaces the per-family first-arrival window derivations in the batch
+    pipeline: the un-restructured issues plan re-derived the
     (conv_id, request_key) window dedup up to 15x (56 parquet scans, 45
     exchanges, ZERO ReusedExchange — constraint pushdown and per-consumer
     column pruning break canonical equality, the same failure mode as

@@ -1,8 +1,9 @@
 """SparkSession factory with the engine's standard configuration.
 
 Tuned for correctness-on-local + scale-on-cluster: AQE on (runtime re-plan,
-skew-join splitting), Arrow on (all custom logic is pandas/Arrow UDFs per the
-north rule — never per-row Python), UTC session timezone (oracle comparisons),
+skew-join splitting), Arrow on (the few Python steps left, such as the keyed
+stream validator, are pandas/Arrow UDFs — never per-row Python; the QC logic
+itself is Spark built-ins), UTC session timezone (oracle comparisons),
 shuffle partitions sized to cores locally (callers override on a real cluster).
 
 Cold start: every run is a fresh process, and the driver JVM spends most of
@@ -190,7 +191,9 @@ def _await_jvm(proc: subprocess.Popen, dump: tuple[str, str, str, str] | None) -
     probe JVM maps it, since JDK 17 exits 0 whether or not its dump worked
     and dies of SIGBUS on a truncated archive."""
     sc = SparkContext._active_spark_context
-    if sc is not None and sc._gateway.proc is proc:
+    # a JVM that has died (an executor thread's StackOverflowError ends it
+    # in local mode) cannot be asked to stop: the call would be refused
+    if sc is not None and sc._gateway.proc is proc and proc.poll() is None:
         sc.stop()  # its accumulator server would report the JVM's EOF as an error
     try:
         proc.stdin.close()

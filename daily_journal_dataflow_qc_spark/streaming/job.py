@@ -3,10 +3,9 @@
 Topology (single continuous job, checkpointed, exactly-once sinks):
 
     transcripts stream (conv_id, turn_idx, ts, tool only — no text read)
-      -> watermark + dropDuplicatesWithinWatermark(conv_id, turn_idx)      [§2.10 dedup]
-      -> groupBy(conv_id, session_window(ts, gap)) agg                     [diary assembly]
-         (the diary identity aggregates ONLY: start, end, turn count,
-          tool tag — no per-turn state)
+      -> watermark + groupBy(conv_id, session_window(ts, gap)) agg         [diary assembly]
+         (the ONE stateful operator: start, end, tool tag, and n_turns as
+          the size of the turn-index set [§2.10 dedup] — no text in state)
       [with tool calls: unioned with the tool-call stream (conv_id,
        request_key, kind, ts), the query's second source]
       -> foreachBatch: day assignment + submission rank + acceptance split
@@ -218,26 +217,30 @@ def _read_admitted(
 
 
 def session_qc_aggregate(turns: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Watermarked session-window diary assembly: exactly the identity
-    aggregates of ``diaries.diary_identity``, nothing per turn.
+    """Watermarked session-window diary assembly, the stream's one stateful
+    operator: the identity aggregates of ``diaries.diary_identity``, with
+    ``n_turns`` the size of the session's turn-index set, so a re-delivered
+    turn counts once. A verbatim re-delivery lands in its first copy's
+    session (``min``/``max`` take it idempotently) or, after the session's
+    eviction, is dropped by the watermark as any late row is; for a
+    duplicate with another ``ts`` see ARCHITECTURE's stream/batch note.
 
-    The select before the stateful chain keeps the dedup and session-window
-    exchanges and state to four narrow columns (the dedup operator emits its
-    child's full row set and Catalyst does not prune through it). Every
-    transcript-side figure is computed in foreachBatch from a re-read of
-    the closing diaries' turns, so no text or per-turn payload ever lives in
-    aggregation state — a long hot session cannot grow a state value."""
+    The select keeps the exchange and state to four narrow columns, and no
+    text enters state (foreachBatch re-reads the closing diaries' turns for
+    every transcript-side figure): a session's state grows by one int per
+    distinct turn."""
     gap = f"{cfg.session_gap_minutes} minutes"
-    deduped = (
+    return (
         turns.select("conv_id", "turn_idx", "ts", "tool")
         .withWatermark("ts", cfg.watermark_delay)
-        .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    )
-    return deduped.groupBy("conv_id", F.session_window("ts", gap)).agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_turns"),
-        F.max(F.col("tool").isNotNull()).alias("has_tool_tag"),
+        .groupBy("conv_id", F.session_window("ts", gap))
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.collect_set("turn_idx").alias("n_turns"),
+            F.max(F.col("tool").isNotNull()).alias("has_tool_tag"),
+        )
+        .withColumn("n_turns", F.size("n_turns").cast("long"))
     )
 
 
@@ -368,11 +371,11 @@ def start_session_qc_query(
         if all(s.committed(batch_id) for s in sinks.values()):
             # checkpoint replay where EVERY sink already committed this
             # batch: the writes would all no-op, leaving the micro-batch's
-            # DataFrame unconsumed — and the upstream stateful operators
-            # (dedup + session window) would then never commit their state
-            # for this batch (Spark 4's state-store commit validation fails
-            # the query exactly for this). Materialize once (noop sink) so
-            # the stateful lineage processes every partition, then return.
+            # DataFrame unconsumed — and the upstream session-window state
+            # would then never commit for this batch (Spark 4's state-store
+            # commit validation fails the query exactly for this).
+            # Materialize once (noop sink) so the stateful lineage processes
+            # every partition, then return.
             batch_df.write.format("noop").mode("overwrite").save()
             return
         persisted = []

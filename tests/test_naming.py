@@ -97,15 +97,20 @@ def test_redact_projection_matches_oracle_spec(spark):
     """``redact_projection``'s (text, violated) must agree with the pandas
     oracle's redaction spec on the normalized line: every string of up to
     7 characters over a brace-heavy alphabet, seeded random strings with
-    tabs, CR and non-ASCII, NULL, and the named quirks (empty tokens, the
-    lax final group, a trailing '{')."""
+    tabs, CR and non-ASCII, NULL, the named quirks (empty tokens, the lax
+    final group, a trailing '{') and lines of up to 10^5 brace groups."""
     rng = random.Random(20261017)
     samples = [
         "".join(p) for n in range(8) for p in itertools.product("{}a ", repeat=n)
     ] + [
         "".join(rng.choices("{}ab é\t\r", k=rng.randint(1, 40)))
         for _ in range(4000)
-    ] + [None, "{a  b}", "x {a}b}", "a {x", "{}", "hello {john smith} bye"]
+    ] + [None, "{a  b}", "x {a}b}", "a {x", "{}", "hello {john smith} bye"] + [
+        # lines of thousands of brace groups: a regex that recurses once
+        # per group overflows the executor thread's stack on these
+        "a " + " ".join(["{x y} b"] * n) + tail
+        for n, tail in ((3_000, ""), (100_000, ""), (100_000, " {"))
+    ]
 
     def spec(line):
         if line is None:

@@ -96,9 +96,9 @@ def test_session_aggregate_is_partial(spark, synth_dir, cfg):
 def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg, tmp_path):
     """Streaming analogue of the heavy-pass guard: the executed plan of a
     data-bearing micro-batch of the session-QC stream must hold no Python
-    boundary, no SortMergeJoin anywhere, the expected stateful operators
-    (dedup-within-watermark + session-window aggregate), and a scan that
-    reads no ``text``."""
+    boundary, no SortMergeJoin anywhere, exactly one stateful operator (the
+    session-window aggregate, which also dedups re-delivered turns: no
+    separate dedup state store), and a scan that reads no ``text``."""
     import time
 
     from daily_journal_dataflow_qc_spark.streaming.job import start_session_qc_query
@@ -122,6 +122,7 @@ def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg, tmp_
                 candidate = q._jsq.explainInternal(False)
                 if "FileScan parquet" in candidate:
                     plan = candidate
+                    state_ops = [op["operatorName"] for op in p["stateOperators"]]
                     break
             time.sleep(0.2)
     finally:
@@ -131,10 +132,16 @@ def test_streaming_topology_plan_shape(spark, stream_input, synth_dir, cfg, tmp_
 
     assert "EvalPython" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    assert "SessionWindowStateStoreSave" in plan, plan
-    assert "StreamingDeduplicateWithinWatermark" in plan, plan
-    # the session state holds diary identity only: the stream scan must not
-    # read the text column (redaction runs on the re-read transcript side)
+    assert "StreamingDeduplicate" not in plan, plan
+    stateful = re.findall(
+        r"\b(\w*StateStoreSave|StreamingDeduplicate\w*|\w*GroupsWithState\w*"
+        r"|TransformWithState\w*|StreamingSymmetricHashJoin|StreamingGlobalLimit)\b",
+        plan,
+    )
+    assert stateful == ["SessionWindowStateStoreSave"], (stateful, plan)
+    assert len(state_ops) == 1 and "session" in state_ops[0].lower(), state_ops
+    # no text enters the session state: the stream scan must not read the
+    # text column (redaction runs on the re-read transcript side)
     read_schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
     assert read_schemas, plan
     assert not any("text:" in r for r in read_schemas), read_schemas

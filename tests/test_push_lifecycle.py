@@ -6,6 +6,9 @@ journal_transcribeme_sftp_push.py:166-191 + subject_summaries_update.sh:
 import pandas as pd
 import pytest
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
 from daily_journal_dataflow_qc_spark import schemas
 from daily_journal_dataflow_qc_spark.operators.compile import (
     MSG_PENDING,
@@ -14,11 +17,23 @@ from daily_journal_dataflow_qc_spark.operators.compile import (
 )
 from daily_journal_dataflow_qc_spark.operators.transcript import (
     clear_resolved_push_errors,
-    dedup_tool_calls,
     push_attempt_stats,
     returned_accepted_diaries,
     tool_call_lifecycle,
 )
+
+def dedup_tool_calls(tool_calls, kind):
+    """First arrival per (conv_id, request_key) for one kind (request|return):
+    the window derivation the issues families used before the one
+    ``tool_call_lifecycle`` rollup, kept as that rollup's reference."""
+    w = Window.partitionBy("conv_id", "request_key").orderBy("ts")
+    return (
+        tool_calls.filter(F.col("kind") == kind)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
 
 LOCAL_1 = "c1_audioJournal_day0001_submission1.wav"
 MARKED_1 = "c1_audioJournal_day0001_ENGLISH_submission1.wav"
@@ -172,7 +187,6 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
 
     life = {(r["conv_id"], r["request_key"]): r
             for r in tool_call_lifecycle(tc).collect()}
-    from pyspark.sql import functions as F
 
     # request existence + first-arrival ts == the window dedup's kept row
     req_win = {(r["conv_id"], r["request_key"]): r["ts"]

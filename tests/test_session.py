@@ -110,6 +110,29 @@ def test_truncated_dump_is_not_promoted(trained, tmp_path):
     assert list(tmp_path.iterdir()) == []  # no crash log either
 
 
+def test_exit_after_the_jvm_died_is_quiet(trained, tmp_path):
+    """A driver JVM that died (as an executor thread's StackOverflowError
+    ends it in local mode) is not asked to stop at the interpreter's exit:
+    the exit raises nothing, not even an ignored error."""
+    cache, _ = trained
+    child = f"""
+import sys
+sys.path.insert(0, {REPO_ROOT!r})
+from pyspark import SparkContext
+from daily_journal_dataflow_qc_spark.session import get_spark
+get_spark(master="local[1]", shuffle_partitions=1)
+SparkContext._gateway.proc.kill()
+SparkContext._gateway.proc.wait()
+"""
+    r = subprocess.run(
+        [sys.executable, "-c", child], cwd=tmp_path, capture_output=True, text=True,
+        env={**os.environ, "XDG_CACHE_HOME": str(cache), "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    assert "Exception ignored" not in r.stderr, r.stderr[-4000:]
+
+
 def test_truncated_archive_falls_back_and_is_removed(trained, tmp_path):
     """Runs last: it deletes the module's archive."""
     cache, _ = trained

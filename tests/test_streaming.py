@@ -399,11 +399,11 @@ def test_outputs_write_declared_layouts(
 
 
 def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
-    """Structural guard for the bounded-state north star: the session
-    aggregate holds the diary identity aggregates only — no collected array
-    and no text or other per-turn payload transits streaming state."""
-    from pyspark.sql.types import ArrayType
-
+    """Structural guard for the bounded-state north star, read off the
+    analyzed plan's one Aggregate: its state holds the diary identity
+    aggregates and one collection, the set of the session's integer turn
+    indices (the in-state turn dedup). No text and no other per-turn
+    column reaches it; ``n_turns`` is the set's size, taken after it."""
     from daily_journal_dataflow_qc_spark import schemas
     from daily_journal_dataflow_qc_spark.streaming.job import session_qc_aggregate
 
@@ -411,12 +411,47 @@ def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
         f"{stream_input}/transcripts"
     )
     agg = session_qc_aggregate(turns, cfg)
-    arrays = [f.name for f in agg.schema.fields if isinstance(f.dataType, ArrayType)]
-    assert not arrays, f"array column(s) in session state: {arrays}"
-    assert set(agg.columns) == {
+    assert agg.columns == [
         "conv_id", "session_window", "session_start", "session_end",
         "n_turns", "has_tool_tag",
-    }, agg.columns
+    ], agg.columns
+    assert agg.schema["n_turns"].dataType.simpleString() == "bigint"
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node):
+        yield node
+        for c in seq(node.children()):
+            yield from walk(c)
+
+    def attrs(node):
+        return [
+            (x.name(), x.dataType().simpleString())
+            for x in walk(node)
+            if x.nodeName() == "AttributeReference"
+        ]
+
+    plan = agg._jdf.queryExecution().analyzed()
+    (aggregate,) = [n for n in walk(plan) if n.nodeName() == "Aggregate"]
+    funcs = sorted(
+        (e.aggregateFunction().prettyName(),
+         e.aggregateFunction().dataType().simpleString(),
+         attrs(e.aggregateFunction()))
+        for ne in seq(aggregate.aggregateExpressions())
+        for e in walk(ne)
+        if e.nodeName() == "AggregateExpression"
+    )
+    assert funcs == [
+        ("collect_set", "array<int>", [("turn_idx", "int")]),
+        ("max", "boolean", [("tool", "string")]),
+        ("max", "timestamp", [("ts", "timestamp")]),
+        ("min", "timestamp", [("ts", "timestamp")]),
+    ], funcs
+    grouping = [a for g in seq(aggregate.groupingExpressions()) for a in attrs(g)]
+    assert [n for n, _ in grouping] == ["conv_id", "session_window"], grouping
+    fed = {x.name() for x in seq(aggregate.child().output())}
+    assert fed == {"conv_id", "session_window", "turn_idx", "ts", "tool"}, fed
 
 
 def test_turn_stats_rebuild_watermark_exact_and_replay_converges(
@@ -581,7 +616,9 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend, tmp_pa
     turn-stats rebuild never resurrects it: the live tier stays internally
     exact (turn counts == diary counts), the batch tier counts the row,
     and a fresh REPLAY converges to the batch tier (the reference's cron
-    re-run model)."""
+    re-run model). A verbatim re-delivery of a counted turn arriving after
+    the eviction is dropped the same way: ``n_turns`` stays put, and the
+    batch tier and the replay count that turn once."""
     import time as _time
 
     from daily_journal_dataflow_qc_spark import schemas
@@ -617,10 +654,12 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend, tmp_pa
         [("convW", 2, "S1", "w2", None,
           pd.Timestamp("2023-03-05 10:01:00").to_pydatetime())]
     )
-    # b2: the POST-EVICTION late row inside convZ's already-emitted session
+    # b2: the POST-EVICTION late row inside convZ's already-emitted session,
+    # and a verbatim re-delivery of its turn 1
     write_rows(
         [("convZ", 99, "S1", "late arrival", None,
-          (T + pd.Timedelta(seconds=30)).to_pydatetime())]
+          (T + pd.Timedelta(seconds=30)).to_pydatetime()),
+         ("convZ", 1, "S1", "hello there world", None, T.to_pydatetime())]
     )
     # b3: far-future sentinel closes everything
     write_rows(
@@ -672,6 +711,11 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend, tmp_pa
     assert len(z) == 1 and int(z.total_sentence_count.iloc[0]) == 2
     zt = ts_live[ts_live.conv_id == "convZ"]
     assert sorted(zt.turn_idx) == [1, 2], zt  # late idx 99 nowhere
+    def n_turns(sinks_):
+        z_qc = sinks_["audio_qc"].read(spark).filter(F.col("conv_id") == "convZ")
+        return [r["n_turns"] for r in z_qc.collect()]
+
+    assert n_turns(sinks) == [2]  # the re-delivered turn 1 not counted again
     # batch tier counts the late row — the divergence is exactly that row
     batch = run_batch(
         spark.read.parquet(f"{root}/transcripts"),
@@ -681,6 +725,7 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend, tmp_pa
     )
     bt = batch.transcript_qc.toPandas()
     assert int(bt[bt.conv_id == "convZ"].total_sentence_count.iloc[0]) == 3
+    assert batch.audio_qc.filter(F.col("conv_id") == "convZ").head()["n_turns"] == 3
     # replay (fresh checkpoint, one admission batch) converges to batch
     out_replay = str(tmp_path / "out_replay")
     q2, sinks2 = start_session_qc_query(
@@ -690,9 +735,123 @@ def test_post_eviction_late_row_dropped_consistently(spark, cfg, backend, tmp_pa
     q2.awaitTermination(600)
     ts_replay = sinks2["turn_stats"].read(spark).toPandas()
     assert sorted(ts_replay[ts_replay.conv_id == "convZ"].turn_idx) == [1, 2, 99]
+    assert n_turns(sinks2) == [3]
     compare_frames(
         ts_replay, batch.turn_stats.toPandas(), ["conv_id", "turn_idx"]
     )
+
+
+T0 = pd.Timestamp("2023-01-01 10:00:00")
+SENTINEL = ("__sentinel__", 1, "S1", "end", None, pd.Timestamp("2090-01-01"))
+
+
+def _turn(conv, idx, second):
+    """A transcript row ``second`` seconds after T0, its text fixed by idx."""
+    return (conv, idx, "S1", f"turn {idx}", None, T0 + pd.Timedelta(seconds=second))
+
+
+def _redelivery_run(spark, cfg, tmp_path, batches):
+    """Run the ungated query over ``batches`` (one parquet file, so one
+    micro-batch, each; a far-future sentinel closes every session), the
+    batch tier and the pandas oracle over the same rows. Returns the
+    audio_qc sink, the batch audio_qc and the oracle's, as pandas."""
+    from daily_journal_dataflow_qc_spark import schemas
+    from daily_journal_dataflow_qc_spark.oracle import pandas_oracle
+    from daily_journal_dataflow_qc_spark.pipeline import run_batch
+
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    root = str(tmp_path / "transcripts")
+    for rows in [*batches, [SENTINEL]]:
+        spark.createDataFrame(
+            pd.DataFrame(rows, columns=cols), schema=schemas.TRANSCRIPTS
+        ).coalesce(1).write.mode("append").parquet(root)
+        time.sleep(1.2)
+    turns = pd.DataFrame([r for rows in batches for r in rows], columns=cols)
+    convs = sorted(turns.conv_id.unique())
+    meta = pd.DataFrame(
+        {
+            "conv_id": convs,
+            "consent_date": [T0.date()] * len(convs),
+            "timezone": ["UTC"] * len(convs),
+            "language": ["ENGLISH"] * len(convs),
+            "db_level": [60.0] * len(convs),
+            "duration_sec": [120.0] * len(convs),
+            "flatness": [0.1] * len(convs),
+        }
+    )
+    conv_meta = spark.createDataFrame(meta)
+    q, sinks = start_session_qc_query(
+        spark, root, str(tmp_path / "out"), conv_meta, cfg, max_files_per_trigger=1
+    )
+    q.awaitTermination(600)
+    # each conv's first diary makes its round trip (the oracle's transcript
+    # side needs one)
+    tc = pd.DataFrame(
+        [
+            (c, f"{c}_audioJournal_day0001_ENGLISH_submission1.wav", kind,
+             "transcribeme", T0 + pd.Timedelta(hours=h), None)
+            for c in convs
+            for kind, h in (("request", 1), ("return", 2))
+        ],
+        columns=["conv_id", "request_key", "kind", "tool", "ts", "payload"],
+    )
+    tool_calls = spark.createDataFrame(tc, schema=schemas.TOOL_CALLS)
+    batch = run_batch(spark.read.parquet(root), tool_calls, conv_meta, cfg)
+    oracle = pandas_oracle.compute(turns, tc, meta, cfg)
+    return (
+        sinks["audio_qc"].read(spark).toPandas(),
+        batch.audio_qc.toPandas(),
+        oracle["audio_qc"],
+    )
+
+
+def _compare_diaries(got, batch_qc, oracle_qc):
+    keys = ["conv_id", "day", "daily_submission_number"]
+    cols = [*QC_COMPARE_COLS, "session_start"]
+    compare_frames(got, batch_qc[[*cols, "n_turns"]], keys)
+    compare_frames(got, oracle_qc[cols], keys)
+
+
+def test_live_redelivery_counts_once(spark, cfg, tmp_path):
+    """A verbatim re-delivery admitted in a later micro-batch, while its
+    session's state is live, merges into that session and counts once:
+    the diary and its ``n_turns`` equal the batch tier's and the
+    oracle's, whose dedup keeps one copy."""
+    got, batch_qc, oracle_qc = _redelivery_run(
+        spark, cfg, tmp_path,
+        [
+            [_turn("convA", 1, 0), _turn("convA", 2, 60), _turn("convB", 1, 0)],
+            [_turn("convA", 2, 60), _turn("convA", 3, 120)],
+            [_turn("convA", 1, 0), _turn("convB", 1, 0)],
+        ],
+    )
+    _compare_diaries(got, batch_qc, oracle_qc)
+    assert dict(zip(got.conv_id, got.n_turns)) == {"convA": 3, "convB": 1}
+
+
+def test_non_verbatim_duplicate_rule(spark, cfg, tmp_path):
+    """The stream's rule for a duplicate key with another ``ts`` (not a
+    verbatim re-delivery; datagen never makes one): every copy's ``ts``
+    bounds its session and the turn counts once per session. The batch
+    tier and the oracle keep the min-``ts`` copy only. A copy within the
+    session gap of its session (convN) changes no diary; a copy past the
+    gap (convF) opens a second, one-turn diary on the stream alone."""
+    late = 5 * 3600
+    got, batch_qc, oracle_qc = _redelivery_run(
+        spark, cfg, tmp_path,
+        [
+            [_turn("convN", 1, 0), _turn("convN", 2, 60),
+             _turn("convF", 1, 0), _turn("convF", 2, 60)],
+            [_turn("convN", 2, 600), _turn("convF", 1, late)],
+        ],
+    )
+    first = got[(got.conv_id != "convF") | (got.daily_submission_number == 1)]
+    _compare_diaries(first, batch_qc, oracle_qc)
+    assert len(batch_qc) == len(oracle_qc) == 2
+    f = got[got.conv_id == "convF"].sort_values("session_start")
+    assert f.n_turns.tolist() == [2, 1]
+    assert f.session_start.tolist() == [T0, T0 + pd.Timedelta(seconds=late)]
+    assert got[got.conv_id == "convN"].n_turns.tolist() == [2]
 
 
 def test_streaming_metrics_listener(spark, stream_input, cfg, tmp_path):
@@ -794,13 +953,16 @@ def test_submit_entrypoint_local(spark, stream_input, synth_dir, tmp_path):
         "--output", out_root,
         "--conv-meta", f"{synth_dir}/conv_meta.parquet",
     ]
-    subprocess.run(cmd, capture_output=True, text=True, check=True, timeout=420)
+    # the child's driver heap is fixed and small (its heap after a
+    # collection peaked at 0.22 GB); the suite's session JVM runs beside it
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    subprocess.run(cmd, capture_output=True, text=True, check=True, timeout=420, env=env)
     assert os.path.isdir(f"{out_root}/_checkpoint_qc")
     n1 = len(os.listdir(f"{out_root}/audio_qc"))
     assert n1 > 0
     assert os.path.isfile(f"{out_root}/metrics.jsonl")
     # resume: availableNow over an unchanged input is an exactly-once no-op
-    subprocess.run(cmd, capture_output=True, text=True, check=True, timeout=420)
+    subprocess.run(cmd, capture_output=True, text=True, check=True, timeout=420, env=env)
     assert len(os.listdir(f"{out_root}/audio_qc")) == n1
 
 
