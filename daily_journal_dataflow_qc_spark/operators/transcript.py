@@ -77,10 +77,9 @@ def tool_call_lifecycle(tool_calls: DataFrame) -> DataFrame:
       semantics: verbatim re-deliveries share a ts and count once),
     * ``first_request_ts``  — the first-ARRIVAL request ts, i.e. the ts of
       the row a first-arrival row_number window per key keeps: ordered by ts
-      ascending it puts NULL ts first, so the struct-min below ranks
-      (ts IS NOT NULL, ts) — a null-ts request row yields NULL here,
-      exactly like the window pick (a plain min(ts) would skip the null and
-      silently substitute a later real timestamp),
+      ascending it puts NULL ts first, so a null-ts request row yields NULL
+      here, exactly like the window pick (a plain min(ts) would skip the
+      null and silently substitute a later real timestamp),
     * ``has_request`` / ``returned`` — kind existence flags.
 
     Replaces the per-family first-arrival window derivations in the batch
@@ -88,22 +87,20 @@ def tool_call_lifecycle(tool_calls: DataFrame) -> DataFrame:
     (conv_id, request_key) window dedup up to 15x (56 parquet scans, 45
     exchanges, ZERO ReusedExchange — constraint pushdown and per-consumer
     column pruning break canonical equality, the same failure mode as
-    dsir_logweights' diamond). One map-side-combined aggregation has no
-    such reuse problem, no sort, and bounded groups (retries per key are
+    dsir_logweights' diamond). One map-side-combined hash aggregation has
+    no such reuse problem, no sort, and bounded groups (retries per key are
     capped by the reference's 10-attempt loop), so it is the 100-TB shape
-    as well as the local one."""
+    as well as the local one. The distinct count is the size of a
+    ``collect_set``, not a ``countDistinct``, whose planning adds a second
+    exchange (on the counted value too), three sorts and four sort-based
+    aggregates."""
     is_req = F.col("kind") == "request"
-    first_arrival = F.min(
-        F.when(
-            is_req,
-            F.struct(
-                F.col("ts").isNotNull().alias("nn"), F.col("ts").alias("v")
-            ),
-        )
-    )
+    req_ts = F.when(is_req, F.col("ts"))
     return tool_calls.groupBy("conv_id", "request_key").agg(
-        F.countDistinct(F.when(is_req, F.col("ts"))).cast("int").alias("n_attempts"),
-        first_arrival["v"].alias("first_request_ts"),
+        F.size(F.collect_set(req_ts)).alias("n_attempts"),
+        F.when(~F.max(is_req & F.col("ts").isNull()), F.min(req_ts)).alias(
+            "first_request_ts"
+        ),
         F.max(is_req).alias("has_request"),
         F.max(F.col("kind") == "return").alias("returned"),
     )

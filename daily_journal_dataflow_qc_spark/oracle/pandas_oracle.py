@@ -243,9 +243,13 @@ def compute(
     )
     norm = turns["text"].map(_normalize)
     turns["violated"] = norm.map(_redaction_violated)
-    turns["text"] = [
-        None if v else _redact_valid_line(s) for s, v in zip(norm, turns["violated"])
-    ]
+    # object dtype also when no diary returned: an empty list would give
+    # the column a float dtype, which has no ``.str``
+    turns["text"] = pd.Series(
+        [None if v else _redact_valid_line(s) for s, v in zip(norm, turns["violated"])],
+        index=turns.index,
+        dtype=object,
+    )
     bad = turns.groupby(["conv_id", "session_id"])["violated"].transform("any")
     violated_diaries = (
         turns[bad][["conv_id", "session_id", "filename"]].drop_duplicates()
@@ -368,7 +372,9 @@ def compute(
             ".wav", "_REDACTED.csv", regex=False
         )
     else:
-        tqc = pd.DataFrame(columns=group_cols + ["redacted_csv_filename"])
+        tqc = pd.DataFrame(
+            columns=list(dict.fromkeys(group_cols + schemas.TRANSCRIPT_QC.fieldNames()))
+        )
 
     # disfluency summary (phone_transcript_sentence_stats.py:97-118)
     if len(clean) > 0:

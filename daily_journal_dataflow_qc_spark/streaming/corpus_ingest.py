@@ -84,7 +84,7 @@ def start_corpus_ingest_stream(
     the kill/resume test's lever for multi-batch replay. Like every stream
     launcher it drains availableNow by default and runs a processing-time
     trigger every ``trigger_seconds`` when given."""
-    _apply_stream_conf(spark)
+    _apply_stream_conf(spark, checkpoint_dir)
     docs = _read_stream(spark, input_loc, DOC_STREAM_SCHEMA, max_files_per_trigger)
     scored = with_text_analysis(docs)
     admitted = (
@@ -208,7 +208,7 @@ def start_budget_admission_stream(
     trigger, which is the price of a STRICT global budget for that source
     (shard the source name upstream if approximate budgeting is
     acceptable)."""
-    _apply_stream_conf(spark)
+    _apply_stream_conf(spark, checkpoint_dir)
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     docs = _read_stream(spark, admitted_loc, ADMITTED_SCHEMA, max_files_per_trigger)
@@ -316,7 +316,7 @@ def start_distinct_count_stream(
     checkpoint, so the count continues rather than resets — the same
     storage-chained single-stateful-query pattern as the budget stage.
     Rows with NULL text are ignored (no content to count)."""
-    _apply_stream_conf(spark)
+    _apply_stream_conf(spark, checkpoint_dir)
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..operators.sketches import hll_bucket_rho

@@ -10,6 +10,7 @@ Topology (single continuous job, checkpointed, exactly-once sinks):
        request_key, kind, ts), the query's second source]
       -> foreachBatch: day assignment + submission rank + acceptance split
          + IdempotentBatchSink commits, each sink in its schemas.py layout [exactly-once]
+           and one file per ROWS_PER_FILE rows, sized from the batch's counts
          + with tool calls: the batch's admitted tool-call rows appended
            to an incremental key store (the source's offset log is the
            one admission mechanism, never a full rescan), rolled up ONCE
@@ -35,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,9 +104,40 @@ STREAM_CONF = {
 }
 
 
-def _apply_stream_conf(spark: SparkSession) -> None:
+#: the conf that picks the class writing a query's offset and commit logs
+#: and its RocksDB state files, and Spark's FileSystem-based class. On a
+#: local disk its ``FileSystem.rename`` is the same atomic rename(2) as the
+#: default FileContext manager's, but Hadoop's local FileContext rename
+#: starts a ``readlink`` child process per file (``FileUtil.readLink``; pip
+#: PySpark ships no libhadoop), i.e. one per checkpoint file written
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _is_local_fs(spark: SparkSession, path: str) -> bool:
+    """True when Hadoop resolves ``path`` to the local filesystem: a
+    ``file:`` URI, or a path with no scheme under a local default FS."""
+    scheme = urlparse(path).scheme
+    if not scheme:
+        default = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        scheme = urlparse(default or "file:///").scheme
+    return scheme == "file"
+
+
+def _apply_stream_conf(spark: SparkSession, checkpoint_root: str) -> None:
+    """Set STREAM_CONF, and the checkpoint manager for ``checkpoint_root``:
+    the FileSystem-based one on the local filesystem, Spark's default on
+    any other (whose renames may not be atomic through ``FileSystem``).
+    Read when the query starts, so call it right before ``start()``."""
     for k, v in STREAM_CONF.items():
         spark.conf.set(k, v)
+    if _is_local_fs(spark, checkpoint_root):
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER)
+    else:
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
 
 
 # per-checkpoint cache of parsed FileStreamSource log files:
@@ -252,6 +285,42 @@ def _trigger_kwargs(trigger_seconds: float | None) -> dict:
     return {"processingTime": f"{trigger_seconds} seconds"}
 
 
+#: rows per parquet file of a sink write: every write is coalesced to
+#: ceil(rows / ROWS_PER_FILE) files, at least one, counted from a figure the
+#: batch takes anyway. A trigger's diaries otherwise land as one small file
+#: per state partition, each a task, an output commit and a footer to read.
+ROWS_PER_FILE = 1_000_000
+
+
+def _sized(df: DataFrame, n_rows: int | None) -> DataFrame:
+    """``df`` coalesced to one partition, so one written file, per
+    ROWS_PER_FILE of its ``n_rows`` rows (a NULL sum reads as none)."""
+    return df.coalesce(max(1, -(-(n_rows or 0) // ROWS_PER_FILE)))
+
+
+def _off_stream_thread(write):
+    """A foreachBatch function that runs ``write`` on a thread of its own.
+
+    ``q.stop()`` interrupts the stream thread. A Spark call the batch makes
+    on that thread then fails with an ``InterruptedException``, and Spark
+    decides whether that was the stop by a regex that recurses once per
+    character of the Python traceback it gets back; on a traceback that
+    carries a Java stack trace the regex overflows the thread's stack, and
+    the query dies with a ``StackOverflowError`` instead of stopping. On a
+    thread of its own (pinned to a JVM thread of its own, outside the
+    query's job group) the batch is not interrupted: a stop waits for it to
+    finish and commit, and the stream thread, blocked in the callback until
+    then, stops cleanly."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(1) as pool:
+            pool.submit(write, batch_df, batch_id).result()
+
+    return run
+
+
 def _write_concurrently(sinks: dict, layouts: dict, jobs: dict, batch_id: int) -> None:
     """Write each ``{sink name: frame}`` of one micro-batch in its sink's
     declared layout, the writes running as overlapping jobs.
@@ -339,7 +408,8 @@ def start_session_qc_query(
 
     Returns (query, {sink_name: IdempotentBatchSink}).
     """
-    _apply_stream_conf(spark)
+    qc_checkpoint = os.path.join(output_root, "_checkpoint_qc")
+    _apply_stream_conf(spark, qc_checkpoint)
     # on a catalog table (Iceberg in production) snapshots provide the
     # incremental admission a file stream gets from its metadata log
     turns = _read_stream(spark, input_dir, schemas.TRANSCRIPTS, max_files_per_trigger)
@@ -365,7 +435,6 @@ def start_session_qc_query(
     key_store = (
         IncrementalKeyStore(output_root, "_tool_call_keys") if tool_calls_dir else None
     )
-    qc_checkpoint = os.path.join(output_root, "_checkpoint_qc")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if all(s.committed(batch_id) for s in sinks.values()):
@@ -403,15 +472,16 @@ def start_session_qc_query(
             # first actions on an unmaterialized persisted frame race to
             # compute the stateful upstream (per-partition cache locks
             # serialize but still duplicate scheduling), and the state-store
-            # subtree must execute exactly once per batch anyway
-            qc.count()
+            # subtree must execute exactly once per batch anyway. Its count
+            # sizes the three sinks.
+            out = _sized(qc, qc.count())
             _write_concurrently(
                 sinks,
                 layouts,
                 {
-                    "audio_qc": qc,
-                    "accepted": qc.filter(F.col("audio_approved_bool") == 1),
-                    "rejected": compile_ops.rejected_set(qc),
+                    "audio_qc": out,
+                    "accepted": out.filter(F.col("audio_approved_bool") == 1),
+                    "rejected": compile_ops.rejected_set(out),
                 },
                 batch_id,
             )
@@ -420,7 +490,7 @@ def start_session_qc_query(
                 # this batch admitted; the rules read the accumulated
                 # compact store — never a per-batch rescan of the source.
                 if n_calls:
-                    key_store.append(calls, batch_id)
+                    key_store.append(_sized(calls, n_calls), batch_id)
                 # no broadcast hint on the store: it is usually tiny (AQE
                 # will broadcast it), but it grows with total diaries —
                 # forcing a broadcast would eventually OOM the driver
@@ -438,12 +508,16 @@ def start_session_qc_query(
                     .persist()
                 )
                 persisted.append(returned)
-                # ts bounds: 2 scalars to the driver — fine at any scale —
-                # statically prune the re-read (at production scale the
-                # input is time-partitioned and this is a pruned point read)
+                # ts bounds and sizes: 4 scalars to the driver — fine at any
+                # scale. The bounds statically prune the re-read (at
+                # production scale the input is time-partitioned and this is
+                # a pruned point read); the counts size the diary-grain and
+                # the per-turn sinks.
                 bounds = returned.agg(
                     F.min("session_start").alias("lo"),
                     F.max("session_end").alias("hi"),
+                    F.count("*").alias("diaries"),
+                    F.sum("n_turns").alias("turns"),
                 ).head()
                 if bounds["lo"] is None:
                     raw = spark.createDataFrame([], schemas.TRANSCRIPTS)
@@ -493,20 +567,22 @@ def start_session_qc_query(
                 )
                 side = transcript_side(stats)
                 persisted += [stats, *side.persisted]
+                n_diaries = bounds["diaries"]
                 transcript_jobs = {
-                    "violations": returned.join(
-                        side.violated, DIARY_KEY, "left_semi"
+                    "violations": _sized(
+                        returned.join(side.violated, DIARY_KEY, "left_semi"),
+                        n_diaries,
                     ),
-                    "transcript_qc": side.transcript_qc,
-                    "disfluencies": side.disfluencies,
-                    "turn_stats": side.turn_stats,
+                    "transcript_qc": _sized(side.transcript_qc, n_diaries),
+                    "disfluencies": _sized(side.disfluencies, n_diaries),
+                    "turn_stats": _sized(side.turn_stats, bounds["turns"]),
                 }
                 # with no tool-call row admitted, the store and the clock
                 # are those of the previous batch, so no key can become
                 # pending (this covers Spark's no-data eviction batch)
                 if n_calls:
-                    transcript_jobs["pending_flags"] = _newly_pending(
-                        store, lifecycle, batch_id, cfg
+                    transcript_jobs["pending_flags"] = _sized(
+                        _newly_pending(store, lifecycle, batch_id, cfg), n_calls
                     )
                 _write_concurrently(sinks, layouts, transcript_jobs, batch_id)
         finally:
@@ -515,7 +591,7 @@ def start_session_qc_query(
 
     q = (
         stream.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
+        .foreachBatch(_off_stream_thread(write_batch))
         .option("checkpointLocation", qc_checkpoint)
         .trigger(**_trigger_kwargs(trigger_seconds))
         .start()
@@ -533,7 +609,8 @@ def start_validator_query(
     """Launch the keyed per-conv stream validator (turn_idx HWM + exact
     missing-gap set; see streaming.state) writing duplicate/out-of-order
     flags to an exactly-once sink."""
-    _apply_stream_conf(spark)
+    checkpoint = os.path.join(output_root, "_checkpoint_validator")
+    _apply_stream_conf(spark, checkpoint)
     from .state import turn_stream_validator
 
     turns = _read_stream(spark, input_dir, schemas.TRANSCRIPTS, max_files_per_trigger)
@@ -550,8 +627,8 @@ def start_validator_query(
 
     q = (
         flags.writeStream.outputMode("append")
-        .foreachBatch(write_flags)
-        .option("checkpointLocation", os.path.join(output_root, "_checkpoint_validator"))
+        .foreachBatch(_off_stream_thread(write_flags))
+        .option("checkpointLocation", checkpoint)
         .trigger(**_trigger_kwargs(trigger_seconds))
         .start()
     )

@@ -204,3 +204,31 @@ def test_reconciliation_flags_fire_on_engineered_drift(spark, cfg):
     }, flags
     # dedup invariant: one row per issue identity even with duplicated bases
     assert len(got) == 8
+
+
+def test_no_transcript_side_matches_oracle(spark, synth_pdfs, synth_dir, cfg):
+    """With no tool call at all no diary has a round trip, so the transcript
+    side is empty: the oracle's four outputs still equal ``run_batch``'s
+    (an empty per-turn sink, the accepted set with no transcript columns,
+    and a missing-request issue per accepted tool-tagged diary)."""
+    from daily_journal_dataflow_qc_spark.pipeline import run_batch
+
+    transcripts, tool_calls, conv_meta = synth_pdfs
+    none = tool_calls.iloc[0:0]
+    want = pandas_oracle.compute(transcripts, none, conv_meta, cfg)
+    got = run_batch(
+        spark.read.parquet(f"{synth_dir}/transcripts.parquet"),
+        spark.createDataFrame(none, schema=schemas.TOOL_CALLS),
+        spark.read.parquet(f"{synth_dir}/conv_meta.parquet"),
+        cfg,
+    )
+    assert len(want["turn_stats"]) == 0 and len(want["accepted"]) > 10
+    for name, keys in [
+        ("accepted", ["conv_id", "day"]),
+        ("rejected", ["conv_id", "day", "daily_submission_number"]),
+        ("issues", ["conv_id", "filename", "file_stage", "error_message"]),
+        ("turn_stats", ["conv_id", "turn_idx"]),
+    ]:
+        compare_frames(
+            getattr(got, name).toPandas(), want[name], keys, rounded_atol_cols=ROUNDED
+        )

@@ -3,6 +3,8 @@ retries 'TranscribeMe SFTP upload failed' flag (reference retry loop
 journal_transcribeme_sftp_push.py:166-191 + subject_summaries_update.sh:
 127-143), and the clear path (manual_update_utilities/sftp_push_error_clear.py)."""
 
+import re
+
 import pandas as pd
 import pytest
 
@@ -161,7 +163,7 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
     from the ONE tool_call_lifecycle rollup must equal the dedup_tool_calls
     window / push_attempt_stats derivations it replaced — including the
     null-ts first arrival (row_number orderBy ts puts NULL FIRST; the
-    rollup's struct-min must pick the same NULL, not the later real ts)."""
+    rollup must pick the same NULL, not the later real ts)."""
     rows = []
     # k1: verbatim re-deliveries + genuine retries, returned
     for a in (0, 0, 5, 10):
@@ -224,7 +226,7 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
     # NULL-ts robustness (schemas.TOOL_CALLS pins ts non-null, but the
     # rollup must not silently substitute a later real timestamp if fed a
     # relaxed frame): the window dedup keeps the NULL-FIRST row — so must
-    # the struct-min
+    # the rollup
     import datetime as _dt
 
     relaxed = spark.createDataFrame(
@@ -235,6 +237,18 @@ def test_tool_call_lifecycle_matches_window_derivations(spark, cfg):
     win_ts = dedup_tool_calls(relaxed, "request").collect()[0]["ts"]
     roll_ts = tool_call_lifecycle(relaxed).collect()[0]["first_request_ts"]
     assert win_ts is None and roll_ts is None
+
+
+def test_tool_call_lifecycle_is_one_hash_aggregate(spark):
+    """The rollup plans as one partial and one final object hash aggregate
+    around one exchange: no distinct-count planning (a second exchange on
+    the counted value, or an Expand) and no sort-based aggregate."""
+    plan = tool_call_lifecycle(_tool_calls(spark))._jdf.queryExecution()
+    kinds = re.findall(r"^[\s+\-:]*(\w+)", plan.executedPlan().toString(), re.M)
+    aggs = [k for k in kinds if "Aggregate" in k]
+    assert aggs == ["ObjectHashAggregate"] * 2, kinds
+    assert "Expand" not in kinds, kinds
+    assert sum(k == "Exchange" for k in kinds) == 1, kinds
 
 
 def test_clear_resolved_return_errors(spark):

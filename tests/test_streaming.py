@@ -72,15 +72,17 @@ def test_streaming_qc_matches_batch(spark, ungated_sinks, synth_dir, cfg):
 def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg, tmp_path):
     """Kill after the first micro-batches, restart from the checkpoint.
 
-    Exactly-once contract asserted on the final committed row set vs an
-    uninterrupted run: NO session lost, NONE duplicated (the (conv, day,
-    session-identity) sets are equal), and every batching-independent
-    column identical. Emission BATCHING itself is not restart-stable
-    (Spark may regroup the tail emissions after a restart — measured),
-    and daily_submission_number is a per-ingest-batch rank BY DESIGN
-    (reference semantics, SURVEY §7.3.1), so the rank column is asserted
-    for internal validity (the day's earliest session ranks 1) rather than
-    cross-run equality."""
+    Exactly-once contract asserted on the final committed row set of each
+    of the three diary sinks vs an uninterrupted run: NO session lost, NONE
+    duplicated (the (conv, day, session-identity) sets are equal), and
+    every batching-independent column identical. Emission BATCHING itself
+    is not restart-stable (Spark may regroup the tail emissions after a
+    restart — measured), and daily_submission_number is a per-ingest-batch
+    rank BY DESIGN (reference semantics, SURVEY §7.3.1), so the rank column
+    is asserted for internal validity (the day's earliest session ranks 1)
+    rather than cross-run equality. The rank decides the accepted/rejected
+    split, so those two sinks are each asserted to hold exactly their
+    share of the run's own audio_qc rows, no row lost or written twice."""
     conv_meta = spark.read.parquet(f"{synth_dir}/conv_meta.parquet")
     cols = [
         "conv_id", "day", "submit_hour_int", "timeofday", "weekday",
@@ -88,19 +90,21 @@ def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg,
         "subject_consent_month", "daily_submission_number",
     ]
 
-    base_root = str(tmp_path / "base")
-    q, base_sinks = start_session_qc_query(
-        spark, f"{stream_input}/transcripts_timed", base_root, conv_meta, cfg,
-        max_files_per_trigger=1,
-    )
+    def drain(root):
+        return start_session_qc_query(
+            spark, f"{stream_input}/transcripts_timed", root, conv_meta, cfg,
+            max_files_per_trigger=1,
+        )
+
+    def read(sinks):
+        return {n: sinks[n].read(spark).toPandas() for n in SINK_LAYOUTS}
+
+    q, base_sinks = drain(str(tmp_path / "base"))
     q.awaitTermination(600)
-    baseline = base_sinks["audio_qc"].read(spark).select(*cols).toPandas()
+    base = read(base_sinks)
 
     kill_root = str(tmp_path / "kill")
-    q2, sinks2 = start_session_qc_query(
-        spark, f"{stream_input}/transcripts_timed", kill_root, conv_meta, cfg,
-        max_files_per_trigger=1,
-    )
+    q2, sinks2 = drain(kill_root)
     # kill mid-stream: wait for at least one committed batch, then stop
     deadline = time.time() + 300
     while time.time() < deadline:
@@ -111,18 +115,15 @@ def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg,
     q2.awaitTermination(120)
 
     # resume from the same checkpoint to completion
-    q3, sinks3 = start_session_qc_query(
-        spark, f"{stream_input}/transcripts_timed", kill_root, conv_meta, cfg,
-        max_files_per_trigger=1,
-    )
+    q3, sinks3 = drain(kill_root)
     q3.awaitTermination(600)
-    resumed = sinks3["audio_qc"].read(spark).select(*cols).toPandas()
+    resumed = read(sinks3)
 
     # session identity: (conv, day, timeofday) is unique per emitted diary
     # (timeofday is the HH:MM:SS of session_start)
     key = ["conv_id", "day", "timeofday"]
-    b = baseline.set_index(key).sort_index()
-    r = resumed.set_index(key).sort_index()
+    b = base["audio_qc"][cols].set_index(key).sort_index()
+    r = resumed["audio_qc"][cols].set_index(key).sort_index()
     assert not b.index.duplicated().any() and not r.index.duplicated().any()
     assert set(b.index) == set(r.index), (
         f"lost={list(set(b.index) - set(r.index))[:5]} "
@@ -138,17 +139,24 @@ def test_streaming_exactly_once_kill_resume(spark, stream_input, synth_dir, cfg,
         key,
         rounded_atol_cols={"length_minutes": 2e-3},
     )
-    # rank validity within each run: the day's CHRONOLOGICALLY earliest
-    # session ranks 1 (4am-shifted days run 04:00 -> 03:59, so sort by the
-    # shifted hour — submit_hour_int is +24 for the past-midnight tail —
-    # before the HH:MM:SS string)
-    for frame in (baseline, resumed):
+    for run in (base, resumed):
+        qc = run["audio_qc"]
+        # rank validity: the day's CHRONOLOGICALLY earliest session ranks 1
+        # (4am-shifted days run 04:00 -> 03:59, so sort by the shifted hour
+        # — submit_hour_int is +24 for the past-midnight tail — before the
+        # HH:MM:SS string)
         first = (
-            frame.sort_values(["conv_id", "day", "submit_hour_int", "timeofday"])
+            qc.sort_values(["conv_id", "day", "submit_hour_int", "timeofday"])
             .groupby(["conv_id", "day"])
             .first()
         )
         assert (first.daily_submission_number == 1).all()
+        # accepted and rejected: each exactly its share of audio_qc, as a
+        # multiset of rows in the sink's own layout
+        approved = qc.audio_approved_bool == 1
+        for sink, rows in [("accepted", qc[approved]), ("rejected", qc[~approved])]:
+            layout = list(run[sink].columns)
+            compare_frames(run[sink], rows[layout], layout)
 
 
 def _run_validator_stream(spark, batches, tmp_path):
@@ -396,6 +404,98 @@ def test_outputs_write_declared_layouts(
         got |= {f"{tier}.{n}": layout(s.read(spark).schema) for n, s in sinks.items()}
     bad = {k: got.get(k) for k in want.keys() | got.keys() if got.get(k) != want.get(k)}
     assert not bad, bad
+
+
+def test_each_sink_batch_is_one_file(ungated_sinks, gated_sinks):
+    """Every committed micro-batch of every sink of the ungated and the
+    gated query is one parquet file: each write is sized from the batch's
+    own row count (``job.ROWS_PER_FILE``), not written one file per state
+    or shuffle partition."""
+    import glob
+    import json
+
+    counts = {}
+    for tier, sinks in [("ungated", ungated_sinks), ("gated", gated_sinks)]:
+        for name, sink in sinks.items():
+            for m in sorted(os.listdir(sink.manifest_dir)):
+                with open(os.path.join(sink.manifest_dir, m)) as f:
+                    path = json.load(f)["path"]
+                counts[f"{tier}.{name}.{m}"] = len(glob.glob(f"{path}/*.parquet"))
+    assert counts and all(n == 1 for n in counts.values()), counts
+
+
+def test_local_checkpoints_use_filesystem_manager(spark):
+    """A checkpoint on the local filesystem (a bare path or a ``file:``
+    URI) is written through Spark's FileSystem-based checkpoint manager;
+    any other root keeps Spark's default (the key unset). Setting the conf
+    runs no Spark job."""
+    from daily_journal_dataflow_qc_spark.streaming import job
+
+    key = job.CHECKPOINT_MANAGER_KEY
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    for root, want in [
+        ("/data/out/_checkpoint_qc", job.LOCAL_CHECKPOINT_MANAGER),
+        ("hdfs://namenode:8020/out/_checkpoint_qc", None),
+        ("file:///data/out/_checkpoint_qc", job.LOCAL_CHECKPOINT_MANAGER),
+        ("s3a://bucket/out/_checkpoint_qc", None),
+    ]:
+        job._apply_stream_conf(spark, root)
+        assert spark.conf.get(key, None) == want, root
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs
+
+
+def test_stop_mid_batch_is_clean(spark, stream_input, synth_dir, cfg, tmp_path, monkeypatch):
+    """``q.stop()`` in the middle of a gated batch stops the query cleanly:
+    the batch runs off the interrupted stream thread, so it finishes and
+    commits every sink, the query ends with no exception, and the JVM
+    prints no ``StackOverflowError`` (which Spark's interrupt check hits on
+    the Py4J traceback of a batch interrupted on the stream thread). The
+    uncaught-error print of the stream thread goes to the JVM's
+    ``System.err``, which this test points at a file: pytest's fd capture
+    does not reach the JVM child's stderr."""
+    import threading
+
+    from daily_journal_dataflow_qc_spark.streaming.sink import IdempotentBatchSink
+
+    entered: list[int] = []
+    in_batch = threading.Event()
+    write = IdempotentBatchSink.write
+
+    def slow(self, df, batch_id):
+        if os.path.basename(self.dir) == "transcript_qc" and not entered:
+            entered.append(batch_id)
+            in_batch.set()
+            time.sleep(2)  # the stop arrives while the batch is in flight
+        write(self, df, batch_id)
+
+    monkeypatch.setattr(IdempotentBatchSink, "write", slow)
+    jvm = spark.sparkContext._jvm
+    err_path = str(tmp_path / "jvm_stderr.txt")
+    stderr = jvm.java.lang.System.err
+    jvm.java.lang.System.setErr(
+        jvm.java.io.PrintStream(jvm.java.io.FileOutputStream(err_path), True)
+    )
+    try:
+        q, sinks = start_session_qc_query(
+            spark, f"{stream_input}/transcripts", str(tmp_path / "out"),
+            spark.read.parquet(f"{synth_dir}/conv_meta.parquet"), cfg,
+            max_files_per_trigger=1, tool_calls_dir=f"{stream_input}/tool_calls",
+            trigger_seconds=0.5,
+        )
+        assert in_batch.wait(300), "no gated batch reached its transcript sinks"
+        q.stop()
+        q.awaitTermination(120)
+    finally:
+        jvm.java.lang.System.err.close()
+        jvm.java.lang.System.setErr(stderr)
+    assert q.exception() is None
+    with open(err_path) as f:
+        err = f.read()
+    assert "StackOverflowError" not in err, err[:2000]
+    (bid,) = entered
+    assert all(s.committed(bid) for s in sinks.values()), {
+        n: s.committed(bid) for n, s in sinks.items()
+    }
 
 
 def test_session_agg_state_carries_no_turn_payload(spark, stream_input, cfg):
